@@ -38,10 +38,14 @@ import graft.util.FsListing
   * latest: readers see the old, consistent state and the half-written
   * files are invisible orphans. A crash after the rename leaves the new
   * state fully published and only un-collected garbage behind.
-  * Concurrency is optimistic, Delta-style: blind appends auto-resolve
-  * (they commute), merges/compactions REBASE when the conflicting
-  * commit's footprint is provably disjoint ([[commitReadModify]]), and
-  * everything else fails fast with [[Warehouse.CommitConflict]].
+  * Concurrency is optimistic, Delta-style, and every versioned write
+  * commits through ONE routine ([[commitWrites]]) whose per-op
+  * [[Warehouse.Rebase]] policy decides a lost race: blind appends and
+  * compactions rebase whenever the files they replace are still live
+  * (`Always` — they commute), the merge family rebases when the
+  * conflicting commit's footprint is provably disjoint from the
+  * partitions it read (`Disjoint`), and everything else fails fast
+  * with [[Warehouse.CommitConflict]] (`Never`).
   *
   * Readers resolve through the manifest: [[read]] hands Spark the
   * explicit live-file list (with `basePath` so hive-style partition
@@ -301,65 +305,35 @@ class Warehouse(spark: SparkSession, dir: String,
     */
   private[graft] var txnStaleMs: Long = 10L * 60 * 1000
 
-  /** If `version`'s slot is occupied by a STALE pending transaction
+  /** If `version`'s slot is occupied by an ABORTABLE pending transaction
     * manifest, delete it (abort the dead transaction) and return true.
+    * Abortable means STALE — pending past the [[txnStaleMs]] lease — or
+    * left by a previous attempt of OUR OWN fenced epoch `own` (its
+    * metadata carries exactly that watermark). The own case needs no
+    * lease wait: the fence makes the epoch idempotent (any live writer
+    * of the same fence writes the same logical batch), so reclaiming
+    * converges either way.
+    *
     * The abort re-checks the marker after the delete: if the transaction
     * confirmed inside the check-delete window (a writer stalled past the
     * lease, then published), the manifest bytes are restored — the
     * marker, not the manifest, is the commit point, so a confirmed
     * member must never stay deleted.
     */
-  private def abortStalePending(name: String, version: Long): Boolean = {
-    val fs = fileSystem
-    val paths = Seq("mf", "mfd")
-      .map(e => new Path(manifestDir(name), f"v$version%012d.$e"))
-      .filter(fs.exists)
-    if (paths.isEmpty) return false
-    commitMeta(name, version).get("mtxn") match {
-      case Some(id) if !txnConfirmed(id) =>
-        val age = System.currentTimeMillis() -
-          paths.map(p => fs.getFileStatus(p).getModificationTime).max
-        if (age < txnStaleMs) false
-        else {
-          val saved = paths.map(p => p -> {
-            val in = fs.open(p)
-            try in.readAllBytes() finally in.close()
-          })
-          paths.foreach(fs.delete(_, false))
-          if (txnConfirmed(id)) { // lost the race: restore, don't abort
-            saved.foreach { case (p, bytes) => publishExclusive(p, bytes) }
-            false
-          } else {
-            // any columnar sidecar dies with the aborted manifest
-            // (pre-fix writers published one for pending members; the
-            // exists-guard in writeColumnarManifest would otherwise
-            // keep it alive to shadow a NEW committer's entry list)
-            fs.delete(mfpPath(name, version), true)
-            true
-          }
-        }
-      case _ => false
-    }
-  }
-
-  /** Abort a PENDING manifest left by a previous attempt of OUR OWN
-    * fenced epoch — an unconfirmed mtxn whose metadata carries exactly
-    * our `(writerId, epoch)` watermark. No lease wait: the fence makes
-    * the epoch idempotent (any live writer of the same fence writes the
-    * same logical batch), so reclaiming converges either way. Same
-    * restore-on-race guard as [[abortStalePending]].
-    */
-  private def abortOwnPending(name: String, version: Long,
-      fence: (String, Long)): Boolean = {
+  private def abortPending(name: String, version: Long,
+      own: Option[(String, Long)] = None): Boolean = {
     val fs = fileSystem
     val paths = Seq("mf", "mfd")
       .map(e => new Path(manifestDir(name), f"v$version%012d.$e"))
       .filter(fs.exists)
     if (paths.isEmpty) return false
     val meta = commitMeta(name, version)
-    val ours = meta.get(s"txn_${fence._1}").contains(fence._2.toString)
+    def abortable = own.exists { case (q, e) =>
+      meta.get(s"txn_$q").contains(e.toString) } ||
+      System.currentTimeMillis() - paths.map(p =>
+        fs.getFileStatus(p).getModificationTime).max >= txnStaleMs
     meta.get("mtxn") match {
-      case Some(id) if ours && !txnConfirmed(id) =>
+      case Some(id) if !txnConfirmed(id) && abortable =>
         val saved = paths.map(p => p -> {
           val in = fs.open(p)
           try in.readAllBytes() finally in.close()
@@ -373,13 +347,16 @@ class Warehouse(spark: SparkSession, dir: String,
           saved.foreach { case (p, bytes) =>
             if (!publishExclusive(p, bytes))
               throw new IllegalStateException(
-                s"abortOwnPending $name v$version: lost restore race for " +
+                s"abortPending $name v$version: lost restore race for " +
                   s"$p — confirmed transaction $id's member manifest was " +
                   "displaced by a concurrent writer")
           }
           false
         } else {
-          // same sidecar hygiene as [[abortStalePending]]
+          // any columnar sidecar dies with the aborted manifest
+          // (pre-fix writers published one for pending members; the
+          // exists-guard in writeColumnarManifest would otherwise
+          // keep it alive to shadow a NEW committer's entry list)
           fs.delete(mfpPath(name, version), true)
           true
         }
@@ -852,10 +829,8 @@ class Warehouse(spark: SparkSession, dir: String,
   /** Publish manifest `version` atomically (tmp write + atomic
     * publish). The publish is the COMMIT POINT: it either lands whole
     * or not at all, and it fails with [[Warehouse.CommitConflict]] if
-    * the version already exists — optimistic conflict detection.
-    * [[append]] resolves conflicts automatically (blind appends
-    * commute); read-modify ops rebase when footprints are disjoint and
-    * fail fast otherwise (their read snapshot is stale).
+    * the version already exists — optimistic conflict detection;
+    * [[commitWrites]] resolves or surfaces the conflict per op.
     *
     * Atomicity of the conflict check itself is store-dependent, so the
     * publish picks the primitive that IS atomic on each store: on local
@@ -3889,7 +3864,7 @@ class Warehouse(spark: SparkSession, dir: String,
     import org.apache.spark.sql.functions.{coalesce, col, lit}
     val (v, entries) = loadLatest(name)
     require(v > 0L, s"deleteVectored $name: table not bootstrapped")
-    val candidates = touchedFiles(name, entries, cond)
+    val candidates = touchedFiles(name, entries, _.where(cond))
     if (candidates.isEmpty) return 0L
     // RESTRICT sees the same doomed set (dfFor applies existing
     // vectors, so only still-live matches count as deletions)
@@ -3911,27 +3886,38 @@ class Warehouse(spark: SparkSession, dir: String,
     require(n <= maxRows,
       s"deleteVectored $name: $n matching rows exceed maxRows=$maxRows — " +
         "use delete() (copy-on-write) for wide deletes")
-    val byPath = matched.collect().groupBy(_.getString(0))
-      .map { case (p, rows) => p -> rows.map(_.getLong(1)).sorted }
-    val byRel = candidates.flatMap { e =>
-      val key = if (e.rel.startsWith("/")) e.rel else "/" + e.rel
-      byPath.collectFirst { case (p, idxs) if p.endsWith(key) => e -> idxs }
-    }
-    val updated = byRel.map { case (e, fresh) =>
-      val old = if (e.dv.isEmpty) Array.empty[Long] else readDvFile(name, e.dv)
-      val union = (old ++ fresh).distinct.sorted
-      e -> e.copy(dv = writeDvFile(name, union),
-        dvRows = union.length.toLong)
-    }.toMap
-    maybeCrash("after-write")
-    beforeCommit.foreach(_())
-    commit(name, v + 1, entries.map(e => updated.getOrElse(e, e)),
+    val updated = growVectors(name, candidates, matched)
+    // superseded sidecars are invisible orphans; vacuum collects them
+    commitWrites(Seq(Warehouse.Write(name,
+      (v, entries.map(e => updated.getOrElse(e, e))), Nil, Nil,
       Map("op" -> "delete", "mode" -> "merge-on-read",
         "numRowsDeleted" -> n.toString,
-        "numDeletionVectors" -> updated.size.toString))
-    maybeCrash("after-commit")
-    // superseded sidecars are invisible orphans; vacuum collects them
+        "numDeletionVectors" -> updated.size.toString),
+      Warehouse.Rebase.Never)))
     n
+  }
+
+  /** Grow the deletion vectors of `candidates` by the `(file path, row
+    * position)` pairs `positions` collects — each grown vector is a
+    * fresh immutable sidecar holding the union.
+    *
+    * @return replaced entry → the same file under its grown vector
+    */
+  private def growVectors(name: String, candidates: Seq[FileEntry],
+      positions: DataFrame): Map[FileEntry, FileEntry] = {
+    val byPath = positions.collect().groupBy(_.getString(0))
+      .map { case (p, rows) => p -> rows.map(_.getLong(1)) }
+    candidates.flatMap { e =>
+      val key = if (e.rel.startsWith("/")) e.rel else "/" + e.rel
+      byPath.collectFirst { case (p, idxs) if p.endsWith(key) => idxs }
+        .map { idxs =>
+          val old =
+            if (e.dv.isEmpty) Array.empty[Long] else readDvFile(name, e.dv)
+          val union = (old ++ idxs).distinct.sorted
+          e -> e.copy(dv = writeDvFile(name, union),
+            dvRows = union.length.toLong)
+        }
+    }.toMap
   }
 
   /** Merge-on-read UPDATE: vector the OLD versions of matching rows
@@ -3973,7 +3959,7 @@ class Warehouse(spark: SparkSession, dir: String,
     }
     val (v, entries) = loadLatest(name)
     require(v > 0L, s"updateVectored $name: table not bootstrapped")
-    val candidates = touchedFiles(name, entries, cond)
+    val candidates = touchedFiles(name, entries, _.where(cond))
     if (candidates.isEmpty) return 0L
     import org.apache.spark.sql.execution.datasources.LogicalRelation
     val matched = logicalView(name, scanWithDvMeta(name, candidates,
@@ -3997,38 +3983,22 @@ class Warehouse(spark: SparkSession, dir: String,
       // checks run before any sidecar hits disk; here `rewritten` is
       // EXACTLY the touched rows (matched already filtered on old
       // values), so the FK probe batch is tight. Independent probes —
-      // overlap (see append).
+      // overlap.
       runProbes(Seq(() => enforceChecks(name, rewritten))
         ++ (if (specsNow(name).foreignKeys
               .exists(_.cols.exists(set.keySet.contains)))
             Seq(() => enforceForeignKeys(name, rewritten))
           else Nil))
-      val positions = matched
-        .select(col("__gf_dv_path").as("p"), col("__gf_dv_idx").as("i"))
-        .collect().groupBy(_.getString(0))
-        .map { case (p, rows) => p -> rows.map(_.getLong(1)).sorted }
-      val byRel = candidates.flatMap { e =>
-        val key = if (e.rel.startsWith("/")) e.rel else "/" + e.rel
-        positions.collectFirst {
-          case (p, idxs) if p.endsWith(key) => e -> idxs }
-      }
-      val updatedEntries = byRel.map { case (e, freshIdx) =>
-        val old =
-          if (e.dv.isEmpty) Array.empty[Long] else readDvFile(name, e.dv)
-        val union = (old ++ freshIdx).distinct.sorted
-        e -> e.copy(dv = writeDvFile(name, union),
-          dvRows = union.length.toLong)
-      }.toMap
+      val updatedEntries = growVectors(name, candidates, matched.select(
+        col("__gf_dv_path").as("p"), col("__gf_dv_idx").as("i")))
       val fresh = writeBatch(name, rewritten)
-      maybeCrash("after-write")
-      beforeCommit.foreach(_())
-      commit(name, v + 1,
-        entries.map(e => updatedEntries.getOrElse(e, e)) ++ fresh,
+      commitWrites(Seq(Warehouse.Write(name,
+        (v, entries.map(e => updatedEntries.getOrElse(e, e))), Nil, fresh,
         Map("op" -> "update", "mode" -> "merge-on-read",
           "numRowsUpdated" -> n.toString,
           "numDeletionVectors" -> updatedEntries.size.toString,
-          "numFilesAdded" -> fresh.size.toString))
-      maybeCrash("after-commit")
+          "numFilesAdded" -> fresh.size.toString),
+        Warehouse.Rebase.Never)))
       n
     } finally { matched.unpersist(); () }
   }
@@ -4271,87 +4241,88 @@ class Warehouse(spark: SparkSession, dir: String,
     */
   def append(name: String, df: DataFrame, rowsPerFile: Long = 0,
       txn: Option[(String, Long)] = None): (Long, Long) = {
-    val (v, existing) = loadLatest(name)
+    val base @ (v, _) = loadLatest(name)
     require(v > 0L, s"append into $name: table not bootstrapped")
-    def replayed(headVersion: Long): Boolean = txn.exists { case (q, e) =>
-      txnWatermarks(name, headVersion).get(s"txn_$q").exists(_.toLong >= e)
+    if (fenceMet(name, v, txn)) return (v, 0L)
+    val batch = prepareBatch(name, df, v)
+    runProbes(appendProbes(name, batch._1))
+    commitWrites(Seq(appendWrite(name, base, () => df, batch, rowsPerFile,
+      (_, fresh) => appendMeta(fresh))), txn) match {
+      case Some(Seq((w, committed))) => (committed, w.fresh.map(_.rows).sum)
+      case _ => (loadLatest(name)._1, 0L)
     }
-    if (replayed(v)) return (v, 0L)
-    val (withId, hwm0) = applyIdentity(name, df, v)
-    var assignedHwm = hwm0
-    var full = applyGenerated(name, withId)
-    // the four constraint families are independent read-only probes of
-    // the same batch — overlap them (guide §2.6); runProbes rethrows
-    // the first family IN THIS ORDER on multi-family violations, which
-    // is the exception the sequential form surfaced
-    runProbes(Seq(
-      () => enforceChecks(name, full),
-      () => enforcePrimaryKey(name, full),
-      () => enforceUnique(name, full),
-      () => enforceForeignKeys(name, full)))
-    var fresh = writeBatch(name, full, rowsPerFile)
-    maybeCrash("after-write")
-    beforeCommit.foreach(_())
-    // Optimistic concurrency, Delta-style: a blind append COMMUTES with
-    // any concurrent commit (it only adds files), so a lost manifest
-    // race is resolved by re-reading the new head and re-attaching the
-    // same already-written files — no data is rewritten on retry.
-    val txnMeta = txn.map { case (q, e) => s"txn_$q" -> e.toString }.toMap
-    var attempt = (v, existing)
-    var done = false
-    var retries = 0
-    while (!done) {
-      try {
-        commit(name, attempt._1 + 1, attempt._2 ++ fresh,
-          Map("op" -> "append",
-            "numFilesAdded" -> fresh.size.toString,
-            "numRowsAdded" -> fresh.map(_.rows).sum.toString)
-            ++ assignedHwm.map("identityHwm" -> _.toString) ++ txnMeta)
-        done = true
-      }
-      catch {
-        case _: Warehouse.CommitConflict if retries < 20 =>
-          retries += 1
-          // the blocker may be a DEAD transaction's pending manifest
-          // squatting on the slot (writer crashed between its member
-          // commits and the marker): abort it past the lease and retry
-          abortStalePending(name, attempt._1 + 1)
-          attempt = loadLatest(name)
-          // the conflicting commit may have been OUR epoch from another
-          // attempt of the same query (restart racing a hung writer):
-          // drop this attempt's files — they are uncommitted orphans
-          if (replayed(attempt._1)) {
-            gc(name, fresh)
-            return (attempt._1, 0L)
-          }
-          // a racing assigner may have advanced the identity hwm: our
-          // written ids would duplicate its — reassign from the new
-          // head and REWRITE (the one append race that can't re-attach)
-          if (assignedHwm.exists(_ !=
-              identityHwm(name, attempt._1) + fresh.map(_.rows).sum)) {
-            gc(name, fresh)
-            val (reId, reHwm) =
-              applyIdentity(name, df, attempt._1)
-            assignedHwm = reHwm
-            full = applyGenerated(name, reId)
-            fresh = writeBatch(name, full, rowsPerFile)
-          }
-          // a commit slipped in between our PK probe and this attempt:
-          // re-probe against the new head so concurrent same-key appends
-          // cannot both land (single-slot protocol — see probePrimaryKey)
-          if (specsNow(name).primaryKey.nonEmpty) {
-            try probePrimaryKey(name, full)
-            catch { case e: Warehouse.PrimaryKeyViolation =>
-              gc(name, fresh); throw e }
-          }
-          if (specsNow(name).unique.nonEmpty) {
-            try enforceUnique(name, full)
-            catch { case e: Warehouse.UniqueViolation =>
-              gc(name, fresh); throw e }
-          }
-      }
-    }
-    (attempt._1 + 1, fresh.map(_.rows).sum)
+  }
+
+  /** A row-adding batch's preparation (the append family, overwrite):
+    * identity ids extending `head`'s high-water mark, then generated
+    * columns.
+    */
+  private def prepareBatch(name: String, src: DataFrame,
+      head: Long): (DataFrame, Option[Long]) = {
+    val (withId, hwm) = applyIdentity(name, src, head)
+    (applyGenerated(name, withId), hwm)
+  }
+
+  /** The four constraint families an appended batch must pass. They are
+    * independent read-only probes of the same batch — [[runProbes]]
+    * overlaps them (guide §2.6) and rethrows the first family IN THIS
+    * ORDER on multi-family violations, which is the exception the
+    * sequential form surfaced.
+    */
+  private def appendProbes(name: String, df: DataFrame,
+      pendingParents: Map[String, DataFrame] = Map.empty)
+      : Seq[() => Unit] = Seq(
+    () => enforceChecks(name, df),
+    () => enforcePrimaryKey(name, df),
+    () => enforceUnique(name, df),
+    () => enforceForeignKeys(name, df, pendingParents))
+
+  private def appendMeta(fresh: Seq[FileEntry]): Map[String, String] =
+    Map("op" -> "append", "numFilesAdded" -> fresh.size.toString,
+      "numRowsAdded" -> fresh.map(_.rows).sum.toString)
+
+  /** Stage an append-family batch (prepared and probed) as a blind
+    * write: it only adds files, so it COMMUTES with any concurrent
+    * commit and a lost race re-attaches the same files to the new head.
+    * Its re-validate step against that head:
+    *   - a racing assigner may have advanced the identity hwm, so our
+    *     written ids would duplicate its: reassign from the new head
+    *     and REWRITE (the one append race that cannot re-attach). `src`
+    *     is a thunk so the rewrite reads the source the way the first
+    *     pass did;
+    *   - a commit slipped in between our probes and this attempt:
+    *     re-probe PRIMARY KEY and UNIQUE against the new head so
+    *     concurrent same-key appends cannot both land (single-slot
+    *     protocol — see [[probePrimaryKey]]). A failed re-probe GCs the
+    *     staged files.
+    *
+    * @param meta the op's commit metadata over (head version, staged
+    *   files); the identity hwm is added here
+    */
+  private def appendWrite(name: String, base: (Long, Seq[FileEntry]),
+      src: () => DataFrame, batch: (DataFrame, Option[Long]),
+      rowsPerFile: Long, meta: (Long, Seq[FileEntry]) => Map[String, String])
+      : Warehouse.Write = {
+    var (df, hwm) = batch
+    var fresh = writeBatch(name, df, rowsPerFile)
+    def metaAt(head: Long) =
+      meta(head, fresh) ++ hwm.map("identityHwm" -> _.toString)
+    Warehouse.Write(name, base, Nil, fresh, metaAt(base._1),
+      Warehouse.Rebase.Always, Some { head =>
+        if (hwm.exists(_ != identityHwm(name, head) + fresh.map(_.rows).sum)) {
+          gc(name, fresh)
+          val (reDf, reHwm) = prepareBatch(name, src(), head)
+          df = reDf
+          hwm = reHwm
+          fresh = writeBatch(name, df, rowsPerFile)
+        }
+        try {
+          if (specsNow(name).primaryKey.nonEmpty) probePrimaryKey(name, df)
+          if (specsNow(name).unique.nonEmpty) enforceUnique(name, df)
+        } catch { case scala.util.control.NonFatal(e) =>
+          gc(name, fresh); throw e }
+        (fresh, metaAt(head))
+      })
   }
 
   /** COPY INTO (Delta's idempotent bulk file ingest): append the files
@@ -4374,8 +4345,8 @@ class Warehouse(spark: SparkSession, dir: String,
     * growth is bounded by total files ever copied (the same contract as
     * Delta's COPY INTO state).
     *
-    * Concurrency: a lost commit race retries like [[append]] (blind
-    * appends commute). Two copyInto calls racing over the SAME source
+    * Concurrency: a lost commit race rebases like any blind append
+    * ([[appendWrite]]). Two copyInto calls racing over the SAME source
     * files may load them twice — idempotence is per committed ledger,
     * not a cross-writer lock (Delta's contract as well).
     *
@@ -4385,7 +4356,7 @@ class Warehouse(spark: SparkSession, dir: String,
   def copyInto(name: String, srcDir: String, format: String = "parquet",
       pattern: String = "", force: Boolean = false,
       options: Map[String, String] = Map.empty): (Long, Long) = {
-    val (v0, _) = loadLatest(name)
+    val base @ (v0, _) = loadLatest(name)
     require(v0 > 0L, s"copyInto $name: table not bootstrapped")
     val listed = FsListing.dataFiles(srcDir, parallelism = 16)
     val matched =
@@ -4420,80 +4391,26 @@ class Warehouse(spark: SparkSession, dir: String,
     // (the spark-avro connector does not ship in this environment)
     val fmt =
       if (format.equalsIgnoreCase("avro")) "graft-avro" else format
-    val (src0, ciHwm0) = applyIdentity(name,
-      spark.read.format(fmt).schema(readSchema).options(options)
-        .load(fresh.map { case (rel, _) => s"$srcDir/$rel" }: _*)
-        .select(readSchema.fieldNames.map(col): _*),
-      loadLatest(name)._1)
-    var ciHwm = ciHwm0
-    // `df` is re-pointed after an identity-hwm reassignment so the
-    // conflict-path re-probes test the ids that will actually commit
-    // (append's `full` pattern), not the abandoned pre-conflict ones
-    var df = applyGenerated(name, src0)
-    // independent read-only probes — overlap, first-in-order rethrow
-    // (see append)
-    runProbes(Seq(
-      () => enforceChecks(name, df),
-      () => enforcePrimaryKey(name, df),
-      () => enforceUnique(name, df),
-      () => enforceForeignKeys(name, df)))
-    var staged = writeBatch(name, df)
+    val src = () => spark.read.format(fmt).schema(readSchema).options(options)
+      .load(fresh.map { case (rel, _) => s"$srcDir/$rel" }: _*)
+      .select(readSchema.fieldNames.map(col): _*)
+    val batch = prepareBatch(name, src(), v0)
+    runProbes(appendProbes(name, batch._1))
     val ledgerRel = writeCopyLedger(name,
       fresh.map { case (rel, b) => s"$rel:$b" })
-    maybeCrash("after-write")
-    beforeCommit.foreach(_())
-    var attempt = loadLatest(name)
-    var done = false
-    var retries = 0
-    while (!done) {
-      try {
-        // the carried-forward ledger LIST is recomputed against the
-        // head this attempt commits over — a racing copy's ledger must
-        // not be dropped from the list (commit() re-carries it too,
-        // but `meta` wins, so the list here must already include it)
-        val prevLedgers = commitMeta(name, attempt._1)
-          .get("copyLedgers").toSeq.flatMap(_.split(',')).filter(_.nonEmpty)
-        commit(name, attempt._1 + 1, attempt._2 ++ staged,
-          Map("op" -> "copy_into",
-            "copyLedgers" -> (prevLedgers :+ ledgerRel).mkString(","),
-            "numSourceFiles" -> fresh.size.toString,
-            "numFilesAdded" -> staged.size.toString)
-            ++ ciHwm.map("identityHwm" -> _.toString))
-        done = true
-      } catch {
-        case _: Warehouse.CommitConflict if retries < 20 =>
-          retries += 1
-          abortStalePending(name, attempt._1 + 1)
-          attempt = loadLatest(name)
-          // a racing assigner advanced the identity hwm: reassign from
-          // the new head and rewrite (see append)
-          if (ciHwm.exists(_ !=
-              identityHwm(name, attempt._1) + staged.map(_.rows).sum)) {
-            gc(name, staged)
-            val (reSrc, reHwm) = applyIdentity(name,
-              spark.read.format(format).schema(readSchema)
-                .options(options)
-                .load(fresh.map { case (rel, _) => s"$srcDir/$rel" }: _*)
-                .select(readSchema.fieldNames.map(col): _*),
-              attempt._1)
-            ciHwm = reHwm
-            df = applyGenerated(name, reSrc)
-            staged = writeBatch(name, df)
-          }
-          // PK re-probe against the intervening head (see append)
-          if (specsNow(name).primaryKey.nonEmpty) {
-            try probePrimaryKey(name, df)
-            catch { case e: Warehouse.PrimaryKeyViolation =>
-              gc(name, staged); throw e }
-          }
-          if (specsNow(name).unique.nonEmpty) {
-            try enforceUnique(name, df)
-            catch { case e: Warehouse.UniqueViolation =>
-              gc(name, staged); throw e }
-          }
-      }
-    }
-    (fresh.size.toLong, staged.map(_.rows).sum)
+    // the carried-forward ledger LIST is recomputed against the head
+    // each attempt commits over — a racing copy's ledger must not be
+    // dropped from the list (commit() re-carries it too, but `meta`
+    // wins, so the list here must already include it)
+    def ledgersAt(head: Long) = commitMeta(name, head)
+      .get("copyLedgers").toSeq.flatMap(_.split(',')).filter(_.nonEmpty)
+    // unfenced, so never a replay
+    val (w, _) = commitWrites(Seq(appendWrite(name, base, src, batch, 0L,
+      (head, staged) => Map("op" -> "copy_into",
+        "copyLedgers" -> (ledgersAt(head) :+ ledgerRel).mkString(","),
+        "numSourceFiles" -> fresh.size.toString,
+        "numFilesAdded" -> staged.size.toString)))).get.head
+    (fresh.size.toLong, w.fresh.map(_.rows).sum)
   }
 
   /** EXPECTATIONS WITH QUARANTINE (the "expect or quarantine" pipeline
@@ -4733,8 +4650,8 @@ class Warehouse(spark: SparkSession, dir: String,
     * readers see none of the appends, and the dead transaction's slots
     * are reclaimed by the next conflicting writer or [[vacuum]] after
     * the [[txnStaleMs]] lease. A crash after step 3 is a complete
-    * publish. Per-table conflicts retry exactly like [[append]] (blind
-    * appends commute).
+    * publish. Per-table conflicts rebase like any blind append
+    * ([[commitWrites]]).
     *
     * @param batches (table, rows, rowsPerFile) — distinct tables
     * @param txn optional (writerId, epoch) idempotence fence across the
@@ -4761,96 +4678,37 @@ class Warehouse(spark: SparkSession, dir: String,
       val (v, n) = append(t, df, rpf, txn)
       return Seq((t, v, n))
     }
-    batches.foreach { case (t, _, _) =>
-      require(loadLatest(t)._1 > 0L, s"appendAll into $t: not bootstrapped")
+    val bases = batches.map { case (t, _, _) =>
+      val base = loadLatest(t)
+      require(base._1 > 0L, s"appendAll into $t: not bootstrapped")
       // an identity reassign-on-conflict inside the multi-table pending
       // protocol would have to unwind sibling manifests — out of scope;
       // identity tables take the single-table append path
       require(specsNow(t).identity.isEmpty,
         s"appendAll into $t: IDENTITY tables append one at a time " +
           "(the multi-table conflict protocol cannot reassign ids)")
+      base
     }
-    val txnMeta = txn.map { case (q, e) => s"txn_$q" -> e.toString }.toMap
-    def replayed: Boolean = txn.exists { case (q, e) =>
-      val (v0, _) = loadLatest(batches.head._1)
-      txnWatermarks(batches.head._1, v0).get(s"txn_$q")
-        .exists(_.toLong >= e)
-    }
-    if (replayed)
-      return batches.map(b => (b._1, loadLatest(b._1)._1, 0L))
-    val derived = batches.map { case (t, df, rpf) =>
-      (t, applyGenerated(t, df), rpf) }
+    def replay = batches.map(b => (b._1, loadLatest(b._1)._1, 0L))
+    if (fenceMet(batches.head._1, bases.head._1, txn)) return replay
+    val derived = batches.zip(bases).map { case ((t, df, _), (v, _)) =>
+      t -> prepareBatch(t, df, v) }
     // a child batched WITH its parent in this one-commit transaction
     // sees the parent batch's keys (arrival order inside the atomic
     // commit is meaningless, so "parent first" is implied)
-    val pending = derived.map { case (t, df, _) => t -> df }.toMap
+    val pending = derived.map { case (t, (df, _)) => t -> df }.toMap
     // tables × families are all independent read-only probes: flatten
     // into ONE overlapped wave; declaration order (table order, then
     // the in-table family order) is preserved by runProbes' rethrow
-    runProbes(derived.flatMap { case (t, df, _) => Seq(
-      () => enforceChecks(t, df),
-      () => enforcePrimaryKey(t, df),
-      () => enforceUnique(t, df),
-      () => enforceForeignKeys(t, df, pending - t))
-    })
-    val id = java.util.UUID.randomUUID.toString
-    val staged = derived.map { case (t, df, rpf) =>
-      t -> writeBatch(t, df, rpf)
+    runProbes(derived.flatMap { case (t, (df, _)) =>
+      appendProbes(t, df, pending - t) })
+    val writes = batches.zip(bases).zip(derived).map {
+      case (((t, df, rpf), base), (_, batch)) =>
+        appendWrite(t, base, () => df, batch, rpf,
+          (_, fresh) => appendMeta(fresh))
     }
-    maybeCrash("after-write")
-    val committed = staged.zipWithIndex.map { case ((t, fresh), i) =>
-      if (i > 0) maybeCrash("between-manifests")
-      var attempt = loadLatest(t)
-      var done = false
-      var retries = 0
-      while (!done) {
-        try {
-          commit(t, attempt._1 + 1, attempt._2 ++ fresh,
-            Map("op" -> "append", "mtxn" -> id,
-              "numFilesAdded" -> fresh.size.toString,
-              "numRowsAdded" -> fresh.map(_.rows).sum.toString) ++ txnMeta)
-          done = true
-        } catch {
-          case _: Warehouse.CommitConflict if retries < 20 =>
-            retries += 1
-            // a restart replaying this epoch reclaims its own previous
-            // attempt's pending slot immediately; foreign dead txns
-            // wait out the lease as usual
-            if (!txn.exists(f => abortOwnPending(t, attempt._1 + 1, f)))
-              abortStalePending(t, attempt._1 + 1)
-            attempt = loadLatest(t)
-            if (replayed) {
-              // a racing instance of the SAME epoch won: drop our
-              // uncommitted files and exit — the data is published
-              staged.foreach { case (st, sf) => gc(st, sf) }
-              return batches.map(b => (b._1, loadLatest(b._1)._1, 0L))
-            }
-            // PK re-probe against the intervening head (see append).
-            // Only THIS table's uncommitted files are reclaimed —
-            // earlier members' pending manifests already reference
-            // theirs, and the never-published marker leaves the whole
-            // transaction invisible (lease reclaim sweeps the rest).
-            if (specsNow(t).primaryKey.nonEmpty) {
-              try probePrimaryKey(t, derived.find(_._1 == t).get._2)
-              catch { case e: Warehouse.PrimaryKeyViolation =>
-                gc(t, fresh); throw e }
-            }
-            if (specsNow(t).unique.nonEmpty) {
-              try enforceUnique(t, derived.find(_._1 == t).get._2)
-              catch { case e: Warehouse.UniqueViolation =>
-                gc(t, fresh); throw e }
-            }
-        }
-      }
-      (t, attempt._1 + 1, fresh.map(_.rows).sum)
-    }
-    maybeCrash("before-marker")
-    val body = staged.map { case (t, fresh) =>
-      s"$t\t${fresh.size}" }.mkString("\n")
-    require(publishExclusive(new Path(txnDir, id),
-      body.getBytes(java.nio.charset.StandardCharsets.UTF_8)),
-      s"appendAll: transaction marker $id already exists")
-    committed
+    commitWrites(writes, txn).fold(replay)(_.map { case (w, v) =>
+      (w.name, v, w.fresh.map(_.rows).sum) })
   }
 
   /** MERGE upsert (copy-on-write): rows of `updates` REPLACE existing
@@ -4887,46 +4745,47 @@ class Warehouse(spark: SparkSession, dir: String,
       meta: Map[String, String] = Map.empty): Unit = {
     val (v, live) = loadLatest(name)
     require(v > 0L, s"overwrite $name: table not bootstrapped")
-    val (withId, ovHwm) = applyIdentity(name, df0, v)
-    val df = applyGenerated(name, withId)
+    val (df, ovHwm) = prepareBatch(name, df0, v)
     // independent read-only probes — overlap, first-in-order rethrow
-    // (see append). Family semantics per probe:
-    //  - the batch REPLACES the table, so only batch-internal
-    //    uniqueness and NOT NULL apply (probeLive = false) — there are
-    //    no surviving rows to collide with
-    //  - a SELF-FK validates against the batch's OWN keys only
-    //    (replacedParents): the overwrite evicts every live key, so a
-    //    new row referencing an evicted (non-resupplied) key must
-    //    fail, not ride the stale snapshot through the probe
-    //  - replacing a REFERENCED table deletes every old key the batch
-    //    doesn't re-supply — RESTRICT applies to the evicted set. The
-    //    self-child is skipped: its old referencing rows are evicted
-    //    in the same flip, and the replacement batch was just
-    //    validated batch-only above.
+    // ([[appendProbes]]). The batch REPLACES the table, so only
+    // batch-internal uniqueness and NOT NULL apply (probeLive = false)
+    // — there are no surviving rows to collide with
     runProbes(Seq(
       () => enforceChecks(name, df),
       () => enforcePrimaryKey(name, df, probeLive = false),
-      () => enforceUnique(name, df, probeLive = false),
-      () => enforceForeignKeys(name, df, replacedParents = Set(name)))
-      ++ (if (childForeignKeys(name).isEmpty) Nil else Seq(() => {
-        import org.apache.spark.sql.functions.col
-        val pk = specsNow(name).primaryKey
-        enforceDeleteRestrict(name, dfFor(name, live)
-          .select(pk.map(col): _*)
-          .join(df.select(pk.map(col): _*), pk, "left_anti"),
-          skipChildren = Set(name))
-      })))
+      () => enforceUnique(name, df, probeLive = false))
+      ++ replaceProbes(name, live, df))
     val fresh = writeBatch(name, df, rowsPerFile)
-    maybeCrash("after-write")
-    beforeCommit.foreach(_())
     // caller meta LAST so a rebuild can override a carried-forward txn
     // watermark (commit() re-applies the previous head's ledger first)
-    commit(name, v + 1, fresh, Map("op" -> "overwrite",
-      "numFiles" -> fresh.size.toString,
-      "numRemoved" -> live.size.toString)
-      ++ ovHwm.map("identityHwm" -> _.toString) ++ meta)
-    maybeCrash("after-commit")
-    if (!retainReplaced) gc(name, live)
+    commitWrites(Seq(Warehouse.Write(name, (v, live), live, fresh,
+      Map("op" -> "overwrite", "numFiles" -> fresh.size.toString,
+        "numRemoved" -> live.size.toString)
+        ++ ovHwm.map("identityHwm" -> _.toString) ++ meta,
+      Warehouse.Rebase.Never)))
+  }
+
+  /** The referential probes of a write that REPLACES the whole table
+    * with `df` ([[overwrite]], [[restore]]), independent of each other:
+    *  - a SELF-FK validates against `df`'s OWN keys only
+    *    (replacedParents): the replace evicts every live key, so a new
+    *    row referencing an evicted (non-resupplied) key must fail, not
+    *    ride the stale snapshot through the probe;
+    *  - replacing a REFERENCED table deletes every old key `df` doesn't
+    *    re-supply — RESTRICT applies to the evicted set. The self-child
+    *    is skipped: its old referencing rows are evicted in the same
+    *    flip, and `df` itself is validated by the FK probe.
+    */
+  private def replaceProbes(name: String, live: Seq[FileEntry],
+      df: DataFrame): Seq[() => Unit] = {
+    import org.apache.spark.sql.functions.col
+    val pk = specsNow(name).primaryKey
+    (() => enforceForeignKeys(name, df, replacedParents = Set(name))) +:
+      (if (!childForeignKeys(name).exists(_._1 != name)) Nil
+      else Seq(() => enforceDeleteRestrict(name, dfFor(name, live)
+        .select(pk.map(col): _*)
+        .join(df.select(pk.map(col): _*), pk, "left_anti"),
+        skipChildren = Set(name))))
   }
 
   /** `TRUNCATE TABLE`: [[overwrite]] with zero rows — one empty-list
@@ -4958,9 +4817,9 @@ class Warehouse(spark: SparkSession, dir: String,
                 .map(c => s"$c=${r.get(r.fieldIndex(c))}").mkString(", "))
         }
     }
-    commit(name, v + 1, Nil, Map("op" -> "truncate",
-      "numRemoved" -> live.size.toString))
-    if (!retainReplaced) gc(name, live)
+    commitWrites(Seq(Warehouse.Write(name, (v, live), live, Nil,
+      Map("op" -> "truncate", "numRemoved" -> live.size.toString),
+      Warehouse.Rebase.Never)))
   }
 
   /** @param txn optional (writerId, epoch) idempotence fence, the
@@ -4990,27 +4849,12 @@ class Warehouse(spark: SparkSession, dir: String,
         s"(${pkCols.mkString(", ")}) — merge keys must be exactly it")
     val (v, entries) = loadLatest(name)
     require(v > 0L, s"merge into $name: table not bootstrapped")
-    if (txn.exists { case (q, e) =>
-        txnWatermarks(name, v).get(s"txn_$q").exists(_.toLong >= e) })
-      return
-    // empty-batch no-op guards live per branch so a non-empty merge
-    // never pays an extra pass over the updates plan: the partitioned
-    // branch detects emptiness from the touched-partitions collect it
-    // needs anyway. The footprint (ALL touched partition dirs, insert-
-    // only ones included) is what conflict rebase proves disjointness
-    // against — see [[commitReadModify]].
-    val (replaced: Seq[FileEntry], footprint: Set[String]) = parts match {
-      case Nil =>
-        if (updates.isEmpty) return
-        (entries, Set(""))
-      case cols =>
-        // one row per touched partition — tiny by the batch-footprint
-        // contract
-        val touched = updates.select(cols.map(col): _*).distinct().collect()
-        if (touched.isEmpty) return
-        val dirs = touched.map(r => partitionDir(cols, r)).toSet
-        (entries.filter(e => dirs.contains(dirOf(name, e.rel))), dirs)
-    }
+    if (fenceMet(name, v, txn)) return
+    // the footprint (ALL touched partition dirs, insert-only ones
+    // included) is what conflict rebase proves disjointness against —
+    // see [[Warehouse.Rebase.Disjoint]]
+    val (replaced, footprint) =
+      mergeFootprint(name, entries, updates).getOrElse(return)
     // the old files stay live until the commit below, so the merged plan
     // can read them lazily while the batch writes NEW files — no
     // checkpoint fence needed (nothing overwrites what it reads)
@@ -5019,7 +4863,7 @@ class Warehouse(spark: SparkSession, dir: String,
       .join(updates.select(keys.map(col): _*), keys, "left_anti")
       .unionByName(updates.select(schemaCols.map(col): _*))
     // independent read-only probes — overlap, first-in-order rethrow
-    // (see append). keys == PK (required above), so batch-internal
+    // ([[appendProbes]]). keys == PK (required above), so batch-internal
     // uniqueness is the whole PK story (probeLive = false): matched
     // keys replace, the rest insert fresh. A replaced row may keep its
     // own unique values: UNIQUE probes the live table MINUS the keys
@@ -5032,16 +4876,11 @@ class Warehouse(spark: SparkSession, dir: String,
       () => enforceUnique(name, updates.select(schemaCols.map(col): _*),
         excludeKeys = Some((updates, keys)))))
     val fresh = writeBatch(name, merged)
-    maybeCrash("after-write")
-    beforeCommit.foreach(_())
-    commitReadModify(name, (v, entries), replaced, fresh,
-      extraMeta
-        ++ Map("op" -> "merge", "numFilesReplaced" -> replaced.size.toString,
-          "numFilesAdded" -> fresh.size.toString)
-        ++ txn.map { case (q, e) => s"txn_$q" -> e.toString }.toMap,
-      Some(footprint))
-    maybeCrash("after-commit")
-    if (!retainReplaced) gc(name, replaced)
+    commitWrites(Seq(Warehouse.Write(name, (v, entries), replaced, fresh,
+      extraMeta ++ Map("op" -> "merge",
+        "numFilesReplaced" -> replaced.size.toString,
+        "numFilesAdded" -> fresh.size.toString),
+      Warehouse.Rebase.Disjoint(footprint))), txn)
   }
 
   /** SCD TYPE-2 MERGE (slowly changing dimensions): apply a batch of
@@ -5114,16 +4953,8 @@ class Warehouse(spark: SparkSession, dir: String,
         "(closing a version must not move it)")
     val (v, entries) = loadLatest(name)
     require(v > 0L, s"scdMerge $name: table not bootstrapped")
-    val (replaced: Seq[FileEntry], footprint: Set[String]) = parts match {
-      case Nil =>
-        if (source.isEmpty) return (0L, 0L)
-        (entries, Set(""))
-      case cols =>
-        val touched = source.select(cols.map(col): _*).distinct().collect()
-        if (touched.isEmpty) return (0L, 0L)
-        val dirs = touched.map(r => partitionDir(cols, r)).toSet
-        (entries.filter(e => dirs.contains(dirOf(name, e.rel))), dirs)
-    }
+    val (replaced, footprint) =
+      mergeFootprint(name, entries, source).getOrElse(return (0L, 0L))
     val srcProj = source.select((keys ++ tracked).map(col): _*)
     val curPrefixed = dfFor(name, replaced).where(col(currentFlag))
       .select(keys.map(col) ++ tracked.map(c => col(c).as(s"cur_$c"))
@@ -5183,17 +5014,13 @@ class Warehouse(spark: SparkSession, dir: String,
       () => enforceChecks(name, toInsert),
       () => enforceForeignKeys(name, toInsert)))
     val fresh = writeBatch(name, rewritten.unionByName(toInsert))
-    maybeCrash("after-write")
-    beforeCommit.foreach(_())
-    commitReadModify(name, (v, entries), replaced, fresh,
+    commitWrites(Seq(Warehouse.Write(name, (v, entries), replaced, fresh,
       Map("op" -> "scd_merge",
         "numVersionsClosed" -> nClosed.toString,
         "numVersionsInserted" -> nInserted.toString,
         "numFilesReplaced" -> replaced.size.toString,
         "numFilesAdded" -> fresh.size.toString),
-      Some(footprint))
-    maybeCrash("after-commit")
-    if (!retainReplaced) gc(name, replaced)
+      Warehouse.Rebase.Disjoint(footprint))))
     (nClosed, nInserted)
   }
 
@@ -5272,16 +5099,10 @@ class Warehouse(spark: SparkSession, dir: String,
       enforcePrimaryKey(name, source, probeLive = false)
     val (v, entries) = loadLatest(name)
     require(v > 0L, s"mergeInto $name: table not bootstrapped")
-    val (matchedReplaced: Seq[FileEntry], matchedDirs: Set[String]) =
-      parts match {
-        case Nil =>
-          if (source.isEmpty && !bySource) return
-          (entries, Set(""))
-        case cols =>
-          val touched = source.select(cols.map(col): _*).distinct().collect()
-          if (touched.isEmpty && !bySource) return
-          val dirs = touched.map(r => partitionDir(cols, r)).toSet
-          (entries.filter(e => dirs.contains(dirOf(name, e.rel))), dirs)
+    val (matchedReplaced, matchedDirs) =
+      mergeFootprint(name, entries, source).getOrElse {
+        if (!bySource) return
+        if (parts.isEmpty) (entries, Set("")) else (Nil, Set.empty[String])
       }
     // by-source candidacy OUTSIDE the touched partitions: those rows are
     // unmatched by contract, so a file there needs rewriting iff some row
@@ -5297,7 +5118,7 @@ class Warehouse(spark: SparkSession, dir: String,
           val updC = bySourceUpdate.map { case (c, _) =>
             coalesce(c.getOrElse(lit(true)), lit(false)) }
           val candidacy = (delC.toSeq ++ updC.toSeq).reduce(_ || _)
-          touchedFiles(name, rest, candidacy)
+          touchedFiles(name, rest, _.where(candidacy))
         }
       }
     val replaced: Seq[FileEntry] = matchedReplaced ++ bySrcReplaced
@@ -5361,7 +5182,7 @@ class Warehouse(spark: SparkSession, dir: String,
     }
     // clause results are NEW values, so checks/FK validate all of
     // `merged`; delete clauses are parent-side deletes, so RESTRICT
-    // probes the doomed keys. Independent probes — overlap (see append).
+    // probes the doomed keys. Independent probes — overlap.
     runProbes(Seq(
       () => enforceChecks(name, merged),
       () => enforceForeignKeys(name, merged))
@@ -5372,76 +5193,141 @@ class Warehouse(spark: SparkSession, dir: String,
               .select(pkCols.map(col): _*)))
         else Nil))
     val fresh = writeBatch(name, merged)
-    maybeCrash("after-write")
-    beforeCommit.foreach(_())
-    commitReadModify(name, (v, entries), replaced, fresh,
+    commitWrites(Seq(Warehouse.Write(name, (v, entries), replaced, fresh,
       Map("op" -> "mergeInto", "numFilesReplaced" -> replaced.size.toString,
         "numFilesAdded" -> fresh.size.toString),
-      Some(footprint))
-    maybeCrash("after-commit")
-    if (!retainReplaced) gc(name, replaced)
+      Warehouse.Rebase.Disjoint(footprint))))
   }
 
-  /** Commit a read-modify operation (merge/compact) with OPTIMISTIC
-    * REBASE: when a concurrent commit wins the version race, the
-    * operation re-reads the head and re-commits `head − replaced +
-    * fresh` — WITHOUT rereading or rewriting any data — iff the
-    * conflict is PROVABLY disjoint:
+  /** Commit attempts a write makes after its first, per table. */
+  private val MaxCommitRetries = 20
+
+  /** THE commit path of every versioned write but the v1 / clone /
+    * publish protocols, with OPTIMISTIC concurrency. `writes` holds one
+    * entry per table; more than one makes a multi-table transaction
+    * ([[appendAll]]): members publish as PENDING `mtxn` manifests that
+    * the marker flips visible together.
     *
-    *   1. every file this op replaced is still live at the head (no
-    *      write-write conflict: nobody else rewrote/removed what we
-    *      rewrote), and
-    *   2. for footprint-scoped ops (`touchedDirs = Some(dirs)`), no
-    *      foreign commit added or removed ANY file inside the
-    *      partitions this op read — a merge's read set is exactly its
-    *      touched partitions (partition cols are a pure function of the
-    *      key, so a source key cannot exist elsewhere), which is what
-    *      makes "nothing foreign in my dirs" a proof the concurrent
-    *      writer could not have affected this op's result (including
-    *      insert-key collisions). `None` (compact) is content-
-    *      invariant: condition 1 alone suffices — foreign files in
-    *      compacted dirs simply stay live, un-compacted this round.
+    * A lost race reclaims the slot's blocker ([[abortPending]]) and
+    * re-reads the head. A `txn` fence met there means a racing attempt
+    * of the same epoch already landed: the call is a replay (None).
+    * Otherwise the write's [[Warehouse.Rebase]] decides whether it
+    * re-commits `head − replaced + fresh` WITHOUT rereading or
+    * rewriting any data (the Delta ConcurrentAppend/ConcurrentDeleteRead
+    * distinction, reduced to the manifest's file-set algebra). Entries
+    * compare by (file, deletion vector): a vectored DELETE changes an
+    * entry, not its file. A write that ends in a conflict or a replay
+    * GCs its staged files.
     *
-    * Anything unprovable throws [[Warehouse.CommitConflict]]: the
-    * caller's snapshot is stale and the operation must re-run (the
-    * Delta ConcurrentAppend/ConcurrentDeleteRead distinction, reduced
-    * to the manifest's file-set algebra). delete/update never rebase —
-    * their predicate reads the WHOLE table, so any foreign commit may
-    * have added matching rows.
+    * @return (write as committed, version) per table; None on a replay
     */
-  private def commitReadModify(name: String, base: (Long, Seq[FileEntry]),
-      replaced: Seq[FileEntry], fresh: Seq[FileEntry],
-      meta: Map[String, String], touchedDirs: Option[Set[String]]): Unit = {
-    var attempt = base
-    var retries = 0
-    var done = false
-    while (!done) {
-      try {
-        commit(name, attempt._1 + 1, attempt._2.diff(replaced) ++ fresh, meta)
-        done = true
-      } catch {
-        case e: Warehouse.CommitConflict if retries < 20 =>
-          retries += 1
-          abortStalePending(name, attempt._1 + 1) // dead-txn squatter
-          val head = loadLatest(name)
-          val headSet = head._2.map(_.rel).toSet
-          val lastSet = attempt._2.map(_.rel).toSet
-          // the foreign delta: files the concurrent commit(s) added or
-          // removed relative to the snapshot we last tried against
-          val foreign = head._2.filterNot(e => lastSet(e.rel)) ++
-            attempt._2.filterNot(e => headSet(e.rel))
-          val replacedLive = replaced.forall(e => headSet(e.rel))
-          val disjoint = touchedDirs.forall(dirs =>
-            foreign.forall(e => !dirs.contains(dirOf(name, e.rel))))
-          if (!replacedLive || !disjoint)
-            throw new Warehouse.CommitConflict(
-              s"$name: concurrent commit overlaps this " +
-                s"${meta.getOrElse("op", "operation")}'s footprint " +
-                "(stale snapshot — re-run the operation)")
-          attempt = head
+  private def commitWrites(writes: Seq[Warehouse.Write],
+      txn: Option[(String, Long)] = None)
+      : Option[Seq[(Warehouse.Write, Long)]] = {
+    maybeCrash("after-write")
+    beforeCommit.foreach(_())
+    val mtxn =
+      if (writes.sizeIs > 1) Some(java.util.UUID.randomUUID.toString) else None
+    val fence = txn.map { case (q, e) => s"txn_$q" -> e.toString }.toMap
+    val staged = writes.toArray // re-validation may re-stage a member
+    def abandon(): Unit = staged.foreach(w => gc(w.name, w.fresh))
+    def entryKey(e: FileEntry) = (e.rel, e.dv)
+    def land(i: Int): Option[Long] = {
+      var (v, live) = staged(i).base
+      var retries = 0
+      var landed: Option[Long] = None
+      while (landed.isEmpty) {
+        val w = staged(i)
+        try {
+          commit(w.name, v + 1, live.diff(w.replaced) ++ w.fresh,
+            w.meta ++ fence ++ mtxn.map("mtxn" -> _) ++
+              Option.when(retries > 0)("numRetries" -> retries.toString))
+          landed = Some(v + 1)
+        } catch {
+          case e: Warehouse.CommitConflict =>
+            if (retries == MaxCommitRetries) { abandon(); throw e }
+            retries += 1
+            abortPending(w.name, v + 1, txn)
+            val (hv, head) = loadLatest(w.name)
+            if (fenceMet(w.name, hv, txn)) { abandon(); return None }
+            val headKeys = head.map(entryKey).toSet
+            val replacedLive = w.replaced.forall(e => headKeys(entryKey(e)))
+            val rebases = w.rebase match {
+              case Warehouse.Rebase.Never => false
+              case Warehouse.Rebase.Always => replacedLive
+              case Warehouse.Rebase.Disjoint(dirs) =>
+                // the foreign delta: entries the concurrent commit(s)
+                // added or removed relative to the snapshot last tried
+                val lastKeys = live.map(entryKey).toSet
+                val foreign = head.filterNot(e => lastKeys(entryKey(e))) ++
+                  live.filterNot(e => headKeys(entryKey(e)))
+                replacedLive &&
+                  foreign.forall(e => !dirs.contains(dirOf(w.name, e.rel)))
+            }
+            if (!rebases) {
+              abandon()
+              throw (if (w.rebase == Warehouse.Rebase.Never) e
+                else new Warehouse.CommitConflict(
+                  s"${w.name}: concurrent commit overlaps this " +
+                    s"${w.meta.getOrElse("op", "operation")}'s footprint " +
+                    "(stale snapshot — re-run the operation)"))
+            }
+            w.revalidate.foreach { f =>
+              val (fresh, meta) = f(hv)
+              staged(i) = w.copy(fresh = fresh, meta = meta)
+            }
+            v = hv
+            live = head
+        }
+      }
+      landed
+    }
+    var versions = Vector.empty[Long]
+    while (versions.size < staged.length) {
+      if (versions.nonEmpty) maybeCrash("between-manifests")
+      land(versions.size) match {
+        case Some(v) => versions :+= v
+        case None => return None
       }
     }
+    mtxn.foreach { id =>
+      maybeCrash("before-marker")
+      val body = staged.map(w => s"${w.name}\t${w.fresh.size}").mkString("\n")
+      require(publishExclusive(new Path(txnDir, id),
+        body.getBytes(java.nio.charset.StandardCharsets.UTF_8)),
+        s"appendAll: transaction marker $id already exists")
+    }
+    maybeCrash("after-commit")
+    if (!retainReplaced) staged.foreach(w => gc(w.name, w.replaced))
+    Some(staged.toSeq.zip(versions))
   }
+
+  /** Whether `txn`'s `(writerId, epoch)` fence is already met at
+    * `version` — the write is then a replay and must be a no-op. */
+  private def fenceMet(name: String, version: Long,
+      txn: Option[(String, Long)]): Boolean = txn.exists { case (q, e) =>
+    txnWatermarks(name, version).get(s"txn_$q").exists(_.toLong >= e)
+  }
+
+  /** A merge's FOOTPRINT: the partition dirs `source` touches (`""` for
+    * an unpartitioned table) and the live entries inside them — None
+    * when `source` is empty. The partitioned branch detects emptiness
+    * from the touched-partitions collect it needs anyway, so a
+    * non-empty merge never pays an extra pass over the source plan.
+    */
+  private def mergeFootprint(name: String, entries: Seq[FileEntry],
+      source: DataFrame): Option[(Seq[FileEntry], Set[String])] =
+    partitioning(name) match {
+      case Nil => Option.when(!source.isEmpty)((entries, Set("")))
+      case cols =>
+        import org.apache.spark.sql.functions.col
+        // one row per touched partition — tiny by the batch-footprint
+        // contract
+        val dirs = source.select(cols.map(col): _*).distinct().collect()
+          .map(r => partitionDir(cols, r)).toSet
+        Option.when(dirs.nonEmpty)(
+          (entries.filter(e => dirs.contains(dirOf(name, e.rel))), dirs))
+    }
 
   /** Hive-escaped partition directory for one partition-values row. */
   private def partitionDir(cols: Seq[String], row: Row): String =
@@ -5460,11 +5346,15 @@ class Warehouse(spark: SparkSession, dir: String,
   private def dirOf(name: String, rel: String): String =
     rel.split('/').init.takeRight(partitioning(name).length).mkString("/")
 
-  /** Post-commit deletion of replaced files. Failures are swallowed —
-    * an undeleted orphan is invisible to readers (not in the manifest)
-    * and [[vacuum]] retries later.
+  /** Post-commit deletion of replaced files (and of an abandoned
+    * write's staged ones). Failures are swallowed — an undeleted orphan
+    * is invisible to readers (not in the manifest) and [[vacuum]]
+    * retries later.
     */
   private def gc(name: String, replaced: Seq[FileEntry]): Unit = {
+    // the guards below read other tables' manifests: skip them when
+    // there is nothing to delete (every append's post-commit call)
+    if (replaced.isEmpty) return
     val fs = fileSystem
     val bloomCols = specsNow(name).bloomColumns
     // Clone guard, eager-GC side: a merge/delete/compact on a SOURCE
@@ -5654,16 +5544,10 @@ class Warehouse(spark: SparkSession, dir: String,
     val fresh = writeBatch(name, pruned, rowsPerFile = effRows,
       flatFiles = math.max(1L, (bytes + targetBytes - 1) / targetBytes).toInt,
       sortCols = clusterBy)
-    maybeCrash("after-write")
-    beforeCommit.foreach(_())
-    // content-invariant: rebases over ANY concurrent commit that left
-    // the compacted files live (touchedDirs = None) — a foreign append
-    // into a compacted dir just stays live, un-compacted this round
-    commitReadModify(name, (v, entries), replaced, fresh,
+    commitWrites(Seq(Warehouse.Write(name, (v, entries), replaced, fresh,
       Map("op" -> "compact", "numFilesReplaced" -> replaced.size.toString,
-        "numFilesAdded" -> fresh.size.toString), None)
-    maybeCrash("after-commit")
-    if (!retainReplaced) gc(name, replaced)
+        "numFilesAdded" -> fresh.size.toString),
+      Warehouse.Rebase.Always)))
     val after = fresh.count(e => fragmented.contains(dirOf(name, e.rel)))
     // maintenance-time histogram staleness hook: compaction just paid a
     // full read+rewrite anyway, so a drifted ANALYZE basis (whose bins
@@ -5735,13 +5619,10 @@ class Warehouse(spark: SparkSession, dir: String,
     val dved = entries.filter(e => e.dv.nonEmpty && e.dvRows > 0)
     if (dved.isEmpty) return (0, 0L)
     val fresh = writeBatch(name, dfFor(name, dved))
-    maybeCrash("after-write")
-    beforeCommit.foreach(_())
-    commitReadModify(name, (v, entries), dved, fresh,
+    commitWrites(Seq(Warehouse.Write(name, (v, entries), dved, fresh,
       Map("op" -> "purge", "numFilesRewritten" -> dved.size.toString,
-        "numDeletedRowsPurged" -> dved.map(_.dvRows).sum.toString), None)
-    maybeCrash("after-commit")
-    if (!retainReplaced) gc(name, dved)
+        "numDeletedRowsPurged" -> dved.map(_.dvRows).sum.toString),
+      Warehouse.Rebase.Always)))
     (dved.size, dved.map(_.dvRows).sum)
   }
 
@@ -5816,7 +5697,7 @@ class Warehouse(spark: SparkSession, dir: String,
       partitionWhere = partitionWhere)
   }
 
-  /** The live files that CONTAIN rows matching `cond` — the unit a
+  /** The live files that CONTAIN rows `matching` keeps — the unit a
     * row-level DELETE/UPDATE rewrites. Discovery is one distributed
     * pass over the manifest-planned scan, so partition pruning and
     * manifest stat skipping cut it to candidate files before any row is
@@ -5825,10 +5706,10 @@ class Warehouse(spark: SparkSession, dir: String,
     * trade as [[merge]]'s touched-partition list.
     */
   private def touchedFiles(name: String, entries: Seq[FileEntry],
-      cond: org.apache.spark.sql.Column): Seq[FileEntry] = {
+      matching: DataFrame => DataFrame): Seq[FileEntry] = {
     import org.apache.spark.sql.functions.input_file_name
     if (entries.isEmpty) return Nil
-    val hit = dfFor(name, entries).where(cond)
+    val hit = matching(dfFor(name, entries))
       .select(input_file_name().as("f")).distinct()
       .collect().map(r => new Path(r.getString(0)).toUri.getPath).toSet
     val fs = fileSystem
@@ -5850,26 +5731,34 @@ class Warehouse(spark: SparkSession, dir: String,
     */
   def delete(name: String, cond: org.apache.spark.sql.Column): Long = {
     import org.apache.spark.sql.functions.{coalesce, lit, not}
-    val (v, entries) = loadLatest(name)
+    val base @ (v, _) = loadLatest(name)
     require(v > 0L, s"delete from $name: table not bootstrapped")
-    val replaced = touchedFiles(name, entries, cond)
+    val matched = coalesce(cond, lit(false))
+    deleteRows(name, base, "delete", _.where(matched), _.where(not(matched)))
+  }
+
+  /** The copy-on-write delete of [[delete]] and [[deleteKeys]]: the live
+    * files holding a `doomed` row are rewritten to their `keep` rows
+    * (the complement), in one commit.
+    *
+    * @return number of rows deleted
+    */
+  private def deleteRows(name: String, base: (Long, Seq[FileEntry]),
+      op: String, doomed: DataFrame => DataFrame,
+      keep: DataFrame => DataFrame): Long = {
+    import org.apache.spark.sql.functions.col
+    val replaced = touchedFiles(name, base._2, doomed)
     if (replaced.isEmpty) return 0L
     val touched = dfFor(name, replaced)
-    val matched = coalesce(cond, lit(false))
-    if (childForeignKeys(name).nonEmpty) {
-      import org.apache.spark.sql.functions.col
-      enforceDeleteRestrict(name, touched.where(matched)
+    if (childForeignKeys(name).nonEmpty)
+      enforceDeleteRestrict(name, doomed(touched)
         .select(specsNow(name).primaryKey.map(col): _*))
-    }
-    val removed = touched.where(matched).count()
-    val fresh = writeBatch(name, touched.where(not(matched)))
-    maybeCrash("after-write")
-    beforeCommit.foreach(_())
-    commit(name, v + 1, entries.diff(replaced) ++ fresh,
-      Map("op" -> "delete", "numRowsDeleted" -> removed.toString,
-        "numFilesRewritten" -> replaced.size.toString))
-    maybeCrash("after-commit")
-    if (!retainReplaced) gc(name, replaced)
+    val removed = doomed(touched).count()
+    val fresh = writeBatch(name, keep(touched))
+    commitWrites(Seq(Warehouse.Write(name, base, replaced, fresh,
+      Map("op" -> op, "numRowsDeleted" -> removed.toString,
+        "numFilesRewritten" -> replaced.size.toString),
+      Warehouse.Rebase.Never)))
     removed
   }
 
@@ -5895,7 +5784,7 @@ class Warehouse(spark: SparkSession, dir: String,
     */
   def deleteKeys(name: String, keys: DataFrame,
       keyCols: Seq[String]): Long = {
-    import org.apache.spark.sql.functions.{col, input_file_name}
+    import org.apache.spark.sql.functions.col
     require(keyCols.nonEmpty, s"deleteKeys $name: empty keyCols")
     val schema = tables(name)
     keyCols.foreach { c =>
@@ -5904,33 +5793,13 @@ class Warehouse(spark: SparkSession, dir: String,
       require(keys.columns.contains(c),
         s"deleteKeys $name: keys frame lacks column $c")
     }
-    val (v, entries) = loadLatest(name)
+    val base @ (v, entries) = loadLatest(name)
     require(v > 0L, s"deleteKeys $name: table not bootstrapped")
     if (entries.isEmpty) return 0L
     val k = keys.select(keyCols.map(col): _*).distinct().localCheckpoint()
-    try {
-      val hit = dfFor(name, entries).join(k, keyCols, "left_semi")
-        .select(input_file_name().as("f")).distinct()
-        .collect().map(r => new Path(r.getString(0)).toUri.getPath).toSet
-      val fs = fileSystem
-      val replaced = entries.filter(e => hit(
-        fs.makeQualified(new Path(path(name), e.rel)).toUri.getPath))
-      if (replaced.isEmpty) return 0L
-      val touched = dfFor(name, replaced)
-      if (childForeignKeys(name).nonEmpty)
-        enforceDeleteRestrict(name, touched.join(k, keyCols, "left_semi")
-          .select(specsNow(name).primaryKey.map(col): _*))
-      val removed = touched.join(k, keyCols, "left_semi").count()
-      val fresh = writeBatch(name, touched.join(k, keyCols, "left_anti"))
-      maybeCrash("after-write")
-      beforeCommit.foreach(_())
-      commit(name, v + 1, entries.diff(replaced) ++ fresh,
-        Map("op" -> "deleteKeys", "numRowsDeleted" -> removed.toString,
-          "numFilesRewritten" -> replaced.size.toString))
-      maybeCrash("after-commit")
-      if (!retainReplaced) gc(name, replaced)
-      removed
-    } finally k.unpersist()
+    try deleteRows(name, base, "deleteKeys",
+      _.join(k, keyCols, "left_semi"), _.join(k, keyCols, "left_anti"))
+    finally k.unpersist()
   }
 
   /** Row-level UPDATE (copy-on-write): for rows where `cond` is TRUE,
@@ -5966,7 +5835,7 @@ class Warehouse(spark: SparkSession, dir: String,
     }
     val (v, entries) = loadLatest(name)
     require(v > 0L, s"update $name: table not bootstrapped")
-    val replaced = touchedFiles(name, entries, cond)
+    val replaced = touchedFiles(name, entries, _.where(cond))
     if (replaced.isEmpty) return 0L
     val touched = dfFor(name, replaced)
     val matched = coalesce(cond, lit(false))
@@ -5984,7 +5853,7 @@ class Warehouse(spark: SparkSession, dir: String,
     // for the scope). Select from `touched` so the WHERE sees OLD
     // values — `rewritten` already carries the new ones and could
     // mis-pick rows when a SET column also appears in the condition.
-    // Independent probes — overlap (see append).
+    // Independent probes — overlap.
     runProbes(Seq(() => enforceChecks(name, rewritten))
       ++ (if (specsNow(name).foreignKeys
             .exists(_.cols.exists(set.keySet.contains)))
@@ -5995,13 +5864,10 @@ class Warehouse(spark: SparkSession, dir: String,
             }: _*)))
         else Nil))
     val fresh = writeBatch(name, rewritten)
-    maybeCrash("after-write")
-    beforeCommit.foreach(_())
-    commit(name, v + 1, entries.diff(replaced) ++ fresh,
+    commitWrites(Seq(Warehouse.Write(name, (v, entries), replaced, fresh,
       Map("op" -> "update", "numRowsUpdated" -> changed.toString,
-        "numFilesRewritten" -> replaced.size.toString))
-    maybeCrash("after-commit")
-    if (!retainReplaced) gc(name, replaced)
+        "numFilesRewritten" -> replaced.size.toString),
+      Warehouse.Rebase.Never)))
     changed
   }
 
@@ -6160,30 +6026,41 @@ class Warehouse(spark: SparkSession, dir: String,
     require(v > 0L, s"repartitionTable $name: table not bootstrapped")
     val snapshot = dfFor(name, live)
       .select(tables(name).fieldNames.toSeq.map(col): _*)
-    specsLock.synchronized { specsNow = specsNow.updated(name, fresh0) }
-    var committed = false
-    try {
+    withLayout(name, fresh0) {
       val fresh = writeBatch(name, snapshot, rowsPerFile)
-      maybeCrash("after-write")
-      beforeCommit.foreach(_())
-      commit(name, v + 1, fresh, Map("op" -> "repartition",
-        "partitionBy" -> partitionBy.mkString(","),
-        // the layout this migration REPLACED — what lets readers
-        // resolve pre-migration snapshots' directory layout
-        // ([[layoutAtVersion]]) instead of refusing across the boundary
-        "partitionByOld" -> old.partitionBy.mkString(","),
-        "numFilesRewritten" -> live.size.toString,
-        "numFilesAdded" -> fresh.size.toString))
-      committed = true
-      maybeCrash("after-commit")
-      persistSpec(name)
-      if (!retainReplaced) gc(name, live)
+      commitWrites(Seq(Warehouse.Write(name, (v, live), live, fresh,
+        Map("op" -> "repartition",
+          "partitionBy" -> partitionBy.mkString(","),
+          // the layout this migration REPLACED — what lets readers
+          // resolve pre-migration snapshots' directory layout
+          // ([[layoutAtVersion]]) instead of refusing across the boundary
+          "partitionByOld" -> old.partitionBy.mkString(","),
+          "numFilesRewritten" -> live.size.toString,
+          "numFilesAdded" -> fresh.size.toString),
+        Warehouse.Rebase.Never)))
       fresh.map(_.rows).sum
+    }
+  }
+
+  /** Run `write` — a commit stamping `spec`'s layout as `name`'s
+    * partitioning — with the in-memory spec already flipped to `spec`
+    * (the write stages its files under it), then persist the spec. The
+    * in-memory layout rolls back ONLY if nothing committed — the head's
+    * stamp is the truth once the manifest published (a failed spec
+    * publish is what open()'s reconcile repairs).
+    */
+  private def withLayout[T](name: String, spec: Warehouse.TableSpec)(
+      write: => T): T = {
+    val old = specsNow(name)
+    specsLock.synchronized { specsNow = specsNow.updated(name, spec) }
+    try {
+      val out = write
+      persistSpec(name)
+      out
     } catch { case t: Throwable =>
-      // roll the in-memory layout back ONLY if nothing committed — the
-      // stamp is the truth once the manifest published (a failed spec
-      // publish is what open()'s reconcile repairs)
-      if (!committed)
+      val stamped = scala.util.Try(layoutStamp(name, loadLatest(name)._1))
+        .toOption.flatten
+      if (!stamped.contains(spec.partitionBy))
         specsLock.synchronized { specsNow = specsNow.updated(name, old) }
       throw t
     }
@@ -6300,56 +6177,26 @@ class Warehouse(spark: SparkSession, dir: String,
     //     children for references to them.
     // Restored entries read under the TARGET layout (they were written
     // under it); the live snapshot reads under the head's.
-    val spec = specsNow(name)
-    val restoredDf = dfFor(name, entries, layout = Some(targetLayout))
-    // independent probes — overlap (see append)
-    runProbes(
-      (if (spec.foreignKeys.nonEmpty)
-        Seq(() => enforceForeignKeys(name, restoredDf,
-          replacedParents = Set(name)))
-      else Nil)
-      ++ (if (childForeignKeys(name).exists(_._1 != name)) Seq(() => {
-        import org.apache.spark.sql.functions.col
-        val pk = spec.primaryKey
-        enforceDeleteRestrict(name, dfFor(name, liveNow)
-          .select(pk.map(col): _*)
-          .join(restoredDf.select(pk.map(col): _*),
-            pk, "left_anti"),
-          skipChildren = Set(name))
-      }) else Nil))
-    if (!flips)
-      commit(name, v + 1, entries,
-        Map("op" -> "restore", "restoredVersion" -> version.toString))
-    else {
-      // a restore across a layout-migration boundary IS a layout
-      // migration in reverse: the commit stamps the flip
-      // (partitionBy/partitionByOld) so every era-aware reader —
-      // [[layoutAtVersion]], the streaming source, the change feeds —
-      // re-anchors across it, and the spec flips like
-      // [[repartitionTable]]'s. Unlike a repartition the commit is a
-      // REAL content change (a rollback), so feeds emit its diff
-      // ([[streamSlice]]'s boundaryHop) instead of netting zero.
-      val old = specsNow(name)
-      specsLock.synchronized {
-        specsNow = specsNow.updated(name,
-          old.copy(partitionBy = targetLayout))
-      }
-      var committed = false
-      try {
-        commit(name, v + 1, entries,
-          Map("op" -> "restore", "restoredVersion" -> version.toString,
-            "partitionBy" -> targetLayout.mkString(","),
-            "partitionByOld" -> headLayout.mkString(",")))
-        committed = true
-        persistSpec(name)
-      } catch { case t: Throwable =>
-        // roll the in-memory layout back ONLY if nothing committed —
-        // the stamp is the truth once the manifest published (a failed
-        // spec publish is what open()'s reconcile repairs)
-        if (!committed)
-          specsLock.synchronized { specsNow = specsNow.updated(name, old) }
-        throw t
-      }
+    runProbes(replaceProbes(name, liveNow,
+      dfFor(name, entries, layout = Some(targetLayout))))
+    // the restored entries swap in over files that stay referenced:
+    // restore never deletes anything
+    def restoreWrite(meta: Map[String, String]): Unit =
+      commitWrites(Seq(Warehouse.Write(name, (v, entries), Nil, Nil,
+        Map("op" -> "restore", "restoredVersion" -> version.toString) ++ meta,
+        Warehouse.Rebase.Never)))
+    // a restore across a layout-migration boundary IS a layout
+    // migration in reverse: the commit stamps the flip
+    // (partitionBy/partitionByOld) so every era-aware reader —
+    // [[layoutAtVersion]], the streaming source, the change feeds —
+    // re-anchors across it, and the spec flips like
+    // [[repartitionTable]]'s. Unlike a repartition the commit is a
+    // REAL content change (a rollback), so feeds emit its diff
+    // ([[streamSlice]]'s boundaryHop) instead of netting zero.
+    if (!flips) restoreWrite(Map.empty)
+    else withLayout(name, specsNow(name).copy(partitionBy = targetLayout)) {
+      restoreWrite(Map("partitionBy" -> targetLayout.mkString(","),
+        "partitionByOld" -> headLayout.mkString(",")))
     }
   }
 
@@ -7829,7 +7676,7 @@ class Warehouse(spark: SparkSession, dir: String,
     // their files become collectable orphans below; FRESH ones may yet
     // confirm, so their manifests and files both survive this vacuum.
     val pendingLive = all.filterNot(isVisible(name, _))
-      .filterNot(abortStalePending(name, _))
+      .filterNot(abortPending(name, _))
     val confirmed = all.filter(isVisible(name, _))
     val keptConfirmed = confirmed.takeRight(math.max(keepManifests, 1))
     val kept = (keptConfirmed ++ pendingLive ++ tagged).distinct.sorted
@@ -8161,11 +8008,12 @@ class Warehouse(spark: SparkSession, dir: String,
     val (devectored, clean) =
       kept.partition(e => dvGone(s"${e.rel}: ${e.dv}"))
     if (dropped.isEmpty && devectored.isEmpty) return (0L, 0L)
-    commit(name, v + 1,
-      clean ++ devectored.map(_.copy(dv = "", dvRows = 0L)),
+    commitWrites(Seq(Warehouse.Write(name,
+      (v, clean ++ devectored.map(_.copy(dv = "", dvRows = 0L))), Nil, Nil,
       Map("op" -> "repair",
         "numEntriesDropped" -> dropped.size.toString,
-        "numVectorsCleared" -> devectored.size.toString))
+        "numVectorsCleared" -> devectored.size.toString),
+      Warehouse.Rebase.Never)))
     (dropped.size.toLong, devectored.size.toLong)
   }
 
@@ -8664,11 +8512,50 @@ object Warehouse {
   private[graft] val distributedDataSweeps =
     new java.util.concurrent.atomic.AtomicLong(0L)
 
-  /** A manifest version another writer committed first. Appends resolve
-    * this automatically (see [[Warehouse!.append]]); read-modify ops
-    * surface it — their snapshot is stale and the caller must re-run.
+  /** A manifest version another writer committed first. Each op's
+    * [[Rebase]] policy resolves it or surfaces it — then the op's
+    * snapshot is stale and the caller must re-run.
     */
   final class CommitConflict(msg: String) extends IllegalStateException(msg)
+
+  /** How a lost commit race resolves, fixed per op by its code. */
+  private sealed trait Rebase
+  private object Rebase {
+    /** The op's read set is the whole table (a predicate, a replace):
+      * any foreign commit may change its result, so it fails fast. */
+    case object Never extends Rebase
+    /** Footprint-scoped read-modify (the merge family): rebases iff
+      * every replaced entry is still live and no foreign commit added
+      * or removed an entry inside the partition `dirs` it read. A
+      * merge's read set is exactly its touched partitions (partition
+      * cols are a pure function of the key, so a source key cannot
+      * exist elsewhere), which makes "nothing foreign in my dirs" a
+      * proof the concurrent writer could not have affected its result,
+      * insert-key collisions included. */
+    final case class Disjoint(dirs: Set[String]) extends Rebase
+    /** Content-invariant (blind appends, compaction): rebases iff every
+      * replaced entry is still live — a foreign append into a compacted
+      * dir just stays live, un-compacted this round. */
+    case object Always extends Rebase
+  }
+
+  /** One table's share of a versioned write
+    * ([[Warehouse!.commitWrites]]): the head minus `replaced` plus
+    * `fresh`.
+    *
+    * @param base the snapshot the write was planned against. Ops that
+    *   swap entries in place over files that stay referenced (deletion
+    *   vectors, restore, repair) pass their whole new entry list here
+    *   and no `replaced`, so none of those files is ever collected.
+    * @param replaced dropped from the head; GC'd once the write lands
+    * @param fresh the files this write staged; GC'd if it never lands
+    * @param revalidate re-derives `(fresh, meta)` against the new head
+    *   version after a lost race the policy rebases over
+    */
+  private final case class Write(name: String, base: (Long, Seq[FileEntry]),
+      replaced: Seq[FileEntry], fresh: Seq[FileEntry],
+      meta: Map[String, String], rebase: Rebase,
+      revalidate: Option[Long => (Seq[FileEntry], Map[String, String])] = None)
 
   /** The manifest line for one entry — the inverse of `parseEntry`.
     * Trailing defaults are still written explicitly (fixed 6-field

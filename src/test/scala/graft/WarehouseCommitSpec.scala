@@ -613,6 +613,14 @@ class WarehouseCommitSpec extends SparkSpec {
     assert(wh.versions("fact_space_weather") === Seq(1L, 2L, 3L))
     assert(wh.readVersion("fact_space_weather", 2L).count() === 0L)
     assert(wh.read("fact_space_weather").count() === 1L)
+    // the retry is visible in history; a first-attempt commit records
+    // no retry count at all (and none is carried forward)
+    assert(wh.history("fact_space_weather").toMap.apply(3L)
+      .get("numRetries") === Some("1"))
+    wh.append("fact_space_weather",
+      Seq((java.sql.Date.valueOf("2026-01-02"), 43.0))
+        .toDF("date_utc", "f10_7_flux"))
+    assert(!wh.history("fact_space_weather").last._2.contains("numRetries"))
   }
 
   test("point-lookup pruning covers timestamp and date stat columns") {

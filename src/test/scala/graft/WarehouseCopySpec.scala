@@ -148,4 +148,44 @@ class WarehouseCopySpec extends SparkSpec {
       s"COPY INTO cpa_t FROM '$srcA' FILEFORMAT = AVRO").head()
     assert(r2.getLong(0) === 0L, "statement re-run is a no-op")
   }
+
+  test("AVRO into an IDENTITY table: a racing assigner forces a " +
+    "reassign that re-reads through the same source, ids stay distinct") {
+    val dir = Files.createTempDirectory("graft-copyid-").toString
+    val spec = Warehouse.TableSpec(StructType(Seq(
+      StructField("rid", LongType),
+      StructField("id", LongType, nullable = false),
+      StructField("grp", StringType),
+      StructField("val", DoubleType))),
+      identity = Some(Warehouse.Identity("rid", orderBy = Seq("id"))))
+    val wh = new Warehouse(spark, dir, specs = Map("t" -> spec))
+    wh.bootstrap()
+    val src = Files.createTempDirectory("graft-copyavro-").toString
+    val avroSchema = new org.apache.avro.Schema.Parser().parse(
+      """{"type":"record","name":"r","fields":[
+        |{"name":"id","type":"long"},{"name":"grp","type":"string"},
+        |{"name":"val","type":"double"}]}""".stripMargin)
+    val w = new org.apache.avro.file.DataFileWriter(
+      new org.apache.avro.generic.GenericDatumWriter[
+        org.apache.avro.generic.GenericRecord](avroSchema))
+    w.create(avroSchema, new java.io.File(src, "w1.avro"))
+    (1 to 10).foreach { i =>
+      val r = new org.apache.avro.generic.GenericData.Record(avroSchema)
+      r.put("id", i.toLong); r.put("grp", s"g${i % 3}"); r.put("val", i * 1.0)
+      w.append(r)
+    }
+    w.close()
+    // a second writer appends (and assigns ids) after this copy staged
+    // its rows, before its first commit attempt
+    val other = Warehouse.open(spark, dir)
+    var injected = false
+    wh.beforeCommit = Some(() => if (!injected) {
+      injected = true
+      other.append("t", rows(100, 102))
+    })
+    try assert(wh.copyInto("t", src, format = "avro") === ((1L, 10L)))
+    finally wh.beforeCommit = None
+    val ids = wh.read("t").select("rid").as[Long].collect().sorted.toSeq
+    assert(ids === (1L to 12L))
+  }
 }

@@ -486,6 +486,32 @@ class WarehouseDmlSpec extends SparkSpec {
     assert(reopened.delete("fact_telemetry", col("norad_id") === 1) === 3L)
   }
 
+  test("a write that ends in CommitConflict reclaims its staged files") {
+    val (wh, dir) = freshTable()
+    val other = new Warehouse(spark, dir)
+    def orphans = wh.fsck("fact_telemetry").filter(_._2 == "orphan-file")
+    assert(orphans.isEmpty)
+    val day1 = mkBase().where($"epoch_date" === "2026-01-01")
+    var n = 0
+    // each write races a foreign append into day 1
+    wh.beforeCommit = Some(() => {
+      n += 1
+      other.append("fact_telemetry",
+        day1.withColumn("norad_id", $"norad_id" + 10 * n))
+    })
+    try {
+      intercept[Warehouse.CommitConflict] {
+        wh.delete("fact_telemetry", col("norad_id") === 1)
+      }
+      assert(orphans.isEmpty, "the failed delete left its files behind")
+      intercept[Warehouse.CommitConflict] {
+        wh.merge("fact_telemetry", day1.withColumn("rev_number", lit(111)),
+          Seq("norad_id", "epoch_utc"))
+      }
+      assert(orphans.isEmpty, "the failed merge left its files behind")
+    } finally wh.beforeCommit = None
+  }
+
   test("partition-scoped OPTIMIZE compacts only the WHERE-matched " +
       "dirs; a non-partition predicate fails analysis") {
     val (wh, _) = freshTable()

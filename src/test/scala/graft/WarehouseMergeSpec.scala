@@ -239,4 +239,28 @@ class WarehouseMergeSpec extends SparkSpec {
     assert(nParts === 1 && fb === 3L && fa === 1L)
     assert(wh.read("fact_space_weather").collect().toSet === before)
   }
+
+  test("a fenced merge re-checks its fence on a lost race: a zombie " +
+    "epoch never rebases over its own writer's newer epoch") {
+    val dir = Files.createTempDirectory("graft-merge-fence-").toString
+    val wh = new Warehouse(spark, dir)
+    wh.bootstrap()
+    wh.append("fact_telemetry", mkBase(Seq(1, 2, 3)))
+    val other = new Warehouse(spark, dir)
+    def day(d: Int, rev: Int) = mkBase(Seq(d)).withColumn("rev_number",
+      lit(rev))
+    val keys = Seq("norad_id", "epoch_utc")
+    // the restarted writer lands epoch 2 in day 3 while the zombie's
+    // epoch-1 merge of day 1 (a disjoint partition) sits staged
+    wh.beforeCommit = Some(() =>
+      other.merge("fact_telemetry", day(3, 333), keys, txn = Some(("w", 2L))))
+    try wh.merge("fact_telemetry", day(1, 111), keys, txn = Some(("w", 1L)))
+    finally wh.beforeCommit = None
+    val head = wh.history("fact_telemetry").last._2
+    assert(head("txn_w") === "2", "the zombie epoch regressed the watermark")
+    val revs = wh.read("fact_telemetry").select("rev_number").as[Int]
+      .collect().toSeq
+    assert(revs.count(_ == 333) === 2)
+    assert(!revs.contains(111), "the zombie epoch landed")
+  }
 }
