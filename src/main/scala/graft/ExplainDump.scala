@@ -20,8 +20,7 @@ object ExplainDump {
     val suffix = args(2)
     val only = args.lift(3)
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val cpus = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
-      .getOrElse(Runtime.getRuntime.availableProcessors())
+    val cpus = GraftSession.cpus
     val spark = GraftSession.configure(
       SparkSession.builder().master(s"local[$cpus]").appName("graft-explain"),
       cpus).getOrCreate()

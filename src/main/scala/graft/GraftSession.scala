@@ -14,10 +14,19 @@ object GraftSession {
 
   /** Default parallelism: the driver exports SPARK_GRAFT_CPUS; fall back
     * to the host's core count (local mode = one JVM, N task threads).
+    * Also sizes [[graft.util.DriverPool]].
     */
-  def cpus: Int =
-    sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
-      .getOrElse(Runtime.getRuntime.availableProcessors())
+  def cpus: Int = cpusFrom(sys.env.get("SPARK_GRAFT_CPUS"))
+
+  /** [[cpus]] from the variable's value: a positive integer, or fail
+    * naming the variable — a typo must not reach `local[...]`.
+    */
+  private[graft] def cpusFrom(env: Option[String]): Int = env match {
+    case None => Runtime.getRuntime.availableProcessors()
+    case Some(v) => v.trim.toIntOption.filter(_ > 0).getOrElse(
+      throw new IllegalArgumentException(
+        s"SPARK_GRAFT_CPUS must be a positive integer, got '$v'"))
+  }
 
   /** Apply graft's standard configuration to any builder. */
   def configure(b: SparkSession.Builder, nCpus: Int): SparkSession.Builder = b

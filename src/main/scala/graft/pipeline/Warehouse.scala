@@ -6,7 +6,7 @@ import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.types.{BinaryType, BooleanType, ByteType, DateType, IntegerType, LongType, ShortType, StringType, StructField, StructType, TimestampNTZType, TimestampType}
 
 import graft.schema.Schemas
-import graft.util.FsListing
+import graft.util.{DriverPool, FsListing}
 
 /** Parquet-backed warehouse — the sandbox stand-in for the reference's
   * PostgreSQL star schema (SURVEY.md §2.2; JDBC writer options live in
@@ -94,7 +94,7 @@ class Warehouse(spark: SparkSession, dir: String,
   require(checkpointInterval >= 1,
     s"checkpointInterval must be >= 1, got $checkpointInterval")
 
-  import Warehouse.FileEntry
+  import Warehouse.{FileEntry, Probes}
 
   /** Current table layouts — a `var` because [[addColumn]] evolves a
     * schema in place (the only mutation; partitioning never changes).
@@ -1600,32 +1600,19 @@ class Warehouse(spark: SparkSession, dir: String,
     // append lands hundreds of one-file directories, and the serial
     // forms of these loops taxed the pipeline measurably (q46 +80%:
     // 2.7 s listing + 1.3 s moves + ~2 s footer opens at 366 files) —
-    // all three run on a bounded pool now.
-    val staged = FsListing.dataFiles(staging.toString, parallelism = 16)
+    // all three run on the driver pool now.
+    val staged = FsListing.dataFiles(staging.toString)
     val cols = statColumns(name)
-    val moved =
-      if (staged.isEmpty) Seq.empty[(Long, FileEntry)]
-      else {
-        val pool = java.util.concurrent.Executors.newFixedThreadPool(
-          math.min(16, staged.size))
-        try {
-          staged.map { case (rel, bytes) =>
-            pool.submit(new java.util.concurrent.Callable[(Long, FileEntry)] {
-              override def call(): (Long, FileEntry) = {
-                val destRel =
-                  if (bucketed.isDefined) bucketStampedRel(name, rel)
-                  else rel
-                val dest = new Path(path(name), destRel)
-                fs.mkdirs(dest.getParent)
-                require(fs.rename(new Path(staging, rel), dest),
-                  s"$name: staging move failed for $rel")
-                val (rows, stats) = footerInfo(dest, cols)
-                (rows, FileEntry(destRel, bytes, stats, rows))
-              }
-            })
-          }.map(_.get())
-        } finally { pool.shutdown(); () }
-      }
+    val moved = DriverPool.map(staged) { case (rel, bytes) =>
+      val destRel =
+        if (bucketed.isDefined) bucketStampedRel(name, rel) else rel
+      val dest = new Path(path(name), destRel)
+      fs.mkdirs(dest.getParent)
+      require(fs.rename(new Path(staging, rel), dest),
+        s"$name: staging move failed for $rel")
+      val (rows, stats) = footerInfo(dest, cols)
+      (rows, FileEntry(destRel, bytes, stats, rows))
+    }
     // zero-row part files (empty tasks of an unpartitioned rewrite, the
     // bootstrap empty write) never enter the manifest — delete in place;
     // they are uncommitted, so this is not a data deletion
@@ -1715,8 +1702,20 @@ class Warehouse(spark: SparkSession, dir: String,
     if ((spec.bloomColumns.isEmpty && spec.ndvColumns.isEmpty) ||
       fresh.isEmpty) return
     val schema = tables(name)
+    // a filter holds ONE file's values: size it for the largest fresh
+    // file, not the table (at the spec's 262,144 a 77-row signature
+    // index wrote 239 KB sidecars). One geometry per aggregate keeps
+    // BloomAgg's buffers mergeable; a serialized filter carries its own
+    // size, so old sidecars stay readable. Unknown footer counts (legacy
+    // / adopted entries) keep the spec's figure. Built for HALF bloomFpp:
+    // filled to its design count a filter realizes that rate ±15%
+    // (measured 0.97-1.17% for 1%), and bloomFpp is a ceiling
+    val expected =
+      if (fresh.exists(_.rows < 0)) spec.bloomExpectedItems
+      else math.max(1L, math.min(spec.bloomExpectedItems,
+        fresh.map(_.rows).max))
     val bloomAggs = spec.bloomColumns.map(c => graft.plans.BloomAgg.bloom(
-      col(c), spec.bloomExpectedItems, spec.bloomFpp).as(s"_bf_$c"))
+      col(c), expected, spec.bloomFpp / 2).as(s"_bf_$c"))
     // hll_sketch_agg accepts int/long/string/binary — temporals get the
     // manifest's injective long encodings (days / micros), so the
     // distinct count is exact for the original values
@@ -2054,7 +2053,7 @@ class Warehouse(spark: SparkSession, dir: String,
         case Some(df) =>
           // the table is empty, so batch-internal NOT NULL/uniqueness
           // is the whole PK story for an initial load
-          enforcePrimaryKey(name, df, probeLive = false)
+          runProbes(primaryKeyProbes(name, df, probeLive = false))
           writeBatch(name, df)
         case None =>
           if (fs.exists(p)) {
@@ -2065,8 +2064,8 @@ class Warehouse(spark: SparkSession, dir: String,
             // violations silently — DESCRIBE DETAIL would advertise an
             // invariant the data breaks from v1
             if (specsNow(name).primaryKey.nonEmpty && adopted.nonEmpty)
-              enforcePrimaryKey(name, dfFor(name, adopted),
-                probeLive = false)
+              runProbes(primaryKeyProbes(name, dfFor(name, adopted),
+                probeLive = false))
             adopted
           }
           else {
@@ -3868,10 +3867,9 @@ class Warehouse(spark: SparkSession, dir: String,
     if (candidates.isEmpty) return 0L
     // RESTRICT sees the same doomed set (dfFor applies existing
     // vectors, so only still-live matches count as deletions)
-    if (childForeignKeys(name).nonEmpty)
-      enforceDeleteRestrict(name, dfFor(name, candidates)
-        .where(coalesce(cond, lit(false)))
-        .select(specsNow(name).primaryKey.map(col): _*))
+    runProbes(restrictProbes(name, dfFor(name, candidates)
+      .where(coalesce(cond, lit(false)))
+      .select(specsNow(name).primaryKey.map(col): _*)))
     // the scan applies EXISTING vectors, so already-deleted rows can't
     // match again; row_index is the physical position either way
     import org.apache.spark.sql.execution.datasources.LogicalRelation
@@ -3982,13 +3980,12 @@ class Warehouse(spark: SparkSession, dir: String,
       }: _*)
       // checks run before any sidecar hits disk; here `rewritten` is
       // EXACTLY the touched rows (matched already filtered on old
-      // values), so the FK probe batch is tight. Independent probes —
-      // overlap.
-      runProbes(Seq(() => enforceChecks(name, rewritten))
+      // values), so the FK probe batch is tight
+      runProbes(checkProbes(name, rewritten)
         ++ (if (specsNow(name).foreignKeys
               .exists(_.cols.exists(set.keySet.contains)))
-            Seq(() => enforceForeignKeys(name, rewritten))
-          else Nil))
+            foreignKeyProbes(name, rewritten)
+          else Probes(Nil)))
       val updatedEntries = growVectors(name, candidates, matched.select(
         col("__gf_dv_path").as("p"), col("__gf_dv_idx").as("i")))
       val fresh = writeBatch(name, rewritten)
@@ -4263,19 +4260,14 @@ class Warehouse(spark: SparkSession, dir: String,
     (applyGenerated(name, withId), hwm)
   }
 
-  /** The four constraint families an appended batch must pass. They are
-    * independent read-only probes of the same batch — [[runProbes]]
-    * overlaps them (guide §2.6) and rethrows the first family IN THIS
-    * ORDER on multi-family violations, which is the exception the
-    * sequential form surfaced.
+  /** The four constraint families an appended batch must pass, IN THIS
+    * ORDER — the order [[runProbes]] rethrows in on multi-family
+    * violations.
     */
   private def appendProbes(name: String, df: DataFrame,
-      pendingParents: Map[String, DataFrame] = Map.empty)
-      : Seq[() => Unit] = Seq(
-    () => enforceChecks(name, df),
-    () => enforcePrimaryKey(name, df),
-    () => enforceUnique(name, df),
-    () => enforceForeignKeys(name, df, pendingParents))
+      pendingParents: Map[String, DataFrame] = Map.empty): Probes =
+    checkProbes(name, df) ++ primaryKeyProbes(name, df) ++
+      uniqueProbes(name, df) ++ foreignKeyProbes(name, df, pendingParents)
 
   private def appendMeta(fresh: Seq[FileEntry]): Map[String, String] =
     Map("op" -> "append", "numFilesAdded" -> fresh.size.toString,
@@ -4316,10 +4308,11 @@ class Warehouse(spark: SparkSession, dir: String,
           hwm = reHwm
           fresh = writeBatch(name, df, rowsPerFile)
         }
-        try {
-          if (specsNow(name).primaryKey.nonEmpty) probePrimaryKey(name, df)
-          if (specsNow(name).unique.nonEmpty) enforceUnique(name, df)
-        } catch { case scala.util.control.NonFatal(e) =>
+        val pkLive =
+          if (specsNow(name).primaryKey.isEmpty) Nil
+          else Seq(() => probePrimaryKey(name, df))
+        try runProbes(Probes(pkLive) ++ uniqueProbes(name, df))
+        catch { case scala.util.control.NonFatal(e) =>
           gc(name, fresh); throw e }
         (fresh, metaAt(head))
       })
@@ -4358,7 +4351,7 @@ class Warehouse(spark: SparkSession, dir: String,
       options: Map[String, String] = Map.empty): (Long, Long) = {
     val base @ (v0, _) = loadLatest(name)
     require(v0 > 0L, s"copyInto $name: table not bootstrapped")
-    val listed = FsListing.dataFiles(srcDir, parallelism = 16)
+    val listed = FsListing.dataFiles(srcDir)
     val matched =
       if (pattern.isEmpty) listed
       else {
@@ -4529,7 +4522,7 @@ class Warehouse(spark: SparkSession, dir: String,
     // Each FK's live-parent probe is file-skipped like the PK probe.
     // A SELF-FK's parent side unions the batch's own SURVIVING key
     // tuples (only rows that will actually land can serve as parents —
-    // the quarantine analog of enforceForeignKeys' pendingKeys): a row
+    // the quarantine analog of foreignKeyProbes' pendingKeys): a row
     // referencing an in-batch parent must not misroute to quarantine.
     def tagFks(base: DataFrame): DataFrame = fks.foldLeft(base) {
       case (acc, fk) =>
@@ -4697,11 +4690,10 @@ class Warehouse(spark: SparkSession, dir: String,
     // sees the parent batch's keys (arrival order inside the atomic
     // commit is meaningless, so "parent first" is implied)
     val pending = derived.map { case (t, (df, _)) => t -> df }.toMap
-    // tables × families are all independent read-only probes: flatten
-    // into ONE overlapped wave; declaration order (table order, then
-    // the in-table family order) is preserved by runProbes' rethrow
-    runProbes(derived.flatMap { case (t, (df, _)) =>
-      appendProbes(t, df, pending - t) })
+    // tables × families in ONE wave; rethrow order is table order, then
+    // the in-table family order
+    runProbes(derived.map { case (t, (df, _)) =>
+      appendProbes(t, df, pending - t) }.reduce(_ ++ _))
     val writes = batches.zip(bases).zip(derived).map {
       case (((t, df, rpf), base), (_, batch)) =>
         appendWrite(t, base, () => df, batch, rpf,
@@ -4746,14 +4738,12 @@ class Warehouse(spark: SparkSession, dir: String,
     val (v, live) = loadLatest(name)
     require(v > 0L, s"overwrite $name: table not bootstrapped")
     val (df, ovHwm) = prepareBatch(name, df0, v)
-    // independent read-only probes — overlap, first-in-order rethrow
-    // ([[appendProbes]]). The batch REPLACES the table, so only
+    // the [[appendProbes]] order. The batch REPLACES the table, so only
     // batch-internal uniqueness and NOT NULL apply (probeLive = false)
     // — there are no surviving rows to collide with
-    runProbes(Seq(
-      () => enforceChecks(name, df),
-      () => enforcePrimaryKey(name, df, probeLive = false),
-      () => enforceUnique(name, df, probeLive = false))
+    runProbes(checkProbes(name, df)
+      ++ primaryKeyProbes(name, df, probeLive = false)
+      ++ uniqueProbes(name, df, probeLive = false)
       ++ replaceProbes(name, live, df))
     val fresh = writeBatch(name, df, rowsPerFile)
     // caller meta LAST so a rebuild can override a carried-forward txn
@@ -4777,15 +4767,13 @@ class Warehouse(spark: SparkSession, dir: String,
     *    flip, and `df` itself is validated by the FK probe.
     */
   private def replaceProbes(name: String, live: Seq[FileEntry],
-      df: DataFrame): Seq[() => Unit] = {
+      df: DataFrame): Probes = {
     import org.apache.spark.sql.functions.col
     val pk = specsNow(name).primaryKey
-    (() => enforceForeignKeys(name, df, replacedParents = Set(name))) +:
-      (if (!childForeignKeys(name).exists(_._1 != name)) Nil
-      else Seq(() => enforceDeleteRestrict(name, dfFor(name, live)
-        .select(pk.map(col): _*)
+    foreignKeyProbes(name, df, replacedParents = Set(name)) ++
+      restrictProbes(name, dfFor(name, live).select(pk.map(col): _*)
         .join(df.select(pk.map(col): _*), pk, "left_anti"),
-        skipChildren = Set(name))))
+        skipChildren = Set(name))
   }
 
   /** `TRUNCATE TABLE`: [[overwrite]] with zero rows — one empty-list
@@ -4804,8 +4792,8 @@ class Warehouse(spark: SparkSession, dir: String,
     val (v, live) = loadLatest(name)
     require(v > 0L, s"truncate $name: table not bootstrapped")
     import org.apache.spark.sql.functions.col
-    childForeignKeys(name).filterNot(_._1 == name).foreach {
-      case (child, fk) =>
+    runProbes(Probes(childForeignKeys(name).filterNot(_._1 == name).map {
+      case (child, fk) => () =>
         val hit = read(child)
           .where(fk.cols.map(c => col(c).isNotNull).reduce(_ && _))
           .limit(1).collect()
@@ -4816,7 +4804,7 @@ class Warehouse(spark: SparkSession, dir: String,
               "references it, e.g. " + fk.cols
                 .map(c => s"$c=${r.get(r.fieldIndex(c))}").mkString(", "))
         }
-    }
+    }))
     commitWrites(Seq(Warehouse.Write(name, (v, live), live, Nil,
       Map("op" -> "truncate", "numRemoved" -> live.size.toString),
       Warehouse.Rebase.Never)))
@@ -4862,19 +4850,16 @@ class Warehouse(spark: SparkSession, dir: String,
     val merged = dfFor(name, replaced)
       .join(updates.select(keys.map(col): _*), keys, "left_anti")
       .unionByName(updates.select(schemaCols.map(col): _*))
-    // independent read-only probes — overlap, first-in-order rethrow
-    // ([[appendProbes]]). keys == PK (required above), so batch-internal
-    // uniqueness is the whole PK story (probeLive = false): matched
-    // keys replace, the rest insert fresh. A replaced row may keep its
-    // own unique values: UNIQUE probes the live table MINUS the keys
-    // this merge replaces (excludeKeys).
-    runProbes(Seq(
-      () => enforceChecks(name, updates.select(schemaCols.map(col): _*)),
-      () => enforcePrimaryKey(name, updates.select(schemaCols.map(col): _*),
-        probeLive = false),
-      () => enforceForeignKeys(name, updates.select(schemaCols.map(col): _*)),
-      () => enforceUnique(name, updates.select(schemaCols.map(col): _*),
-        excludeKeys = Some((updates, keys)))))
+    // keys == PK (required above), so batch-internal uniqueness is the
+    // whole PK story (probeLive = false): matched keys replace, the rest
+    // insert fresh. A replaced row may keep its own unique values:
+    // UNIQUE probes the live table MINUS the keys this merge replaces
+    // (excludeKeys).
+    val batch = updates.select(schemaCols.map(col): _*)
+    runProbes(checkProbes(name, batch)
+      ++ primaryKeyProbes(name, batch, probeLive = false)
+      ++ foreignKeyProbes(name, batch)
+      ++ uniqueProbes(name, batch, excludeKeys = Some((updates, keys))))
     val fresh = writeBatch(name, merged)
     commitWrites(Seq(Warehouse.Write(name, (v, entries), replaced, fresh,
       extraMeta ++ Map("op" -> "merge",
@@ -4991,9 +4976,10 @@ class Warehouse(spark: SparkSession, dir: String,
     // with non-null keys, and no touched key may already carry a
     // version stamped with THIS ts (the same-instant re-version — a
     // replay with a literal ts after the attribute changed — would
-    // mint a duplicate (key, validFrom) row)
-    if (pkCols.nonEmpty) {
-      import org.apache.spark.sql.functions.count
+    // mint a duplicate (key, validFrom) row). New versions carry new FK
+    // values.
+    import org.apache.spark.sql.functions.count
+    val keyProbes = if (pkCols.isEmpty) Nil else Seq(() => {
       val off = srcProj.groupBy(keys.map(col): _*)
         .agg(count(lit(1)).as("__gf_n"))
         .where(keys.map(c => col(c).isNull).reduce(_ || _) ||
@@ -5001,6 +4987,7 @@ class Warehouse(spark: SparkSession, dir: String,
         .limit(1).collect()
       if (off.nonEmpty) throw Warehouse.PrimaryKeyViolation(name, pkCols,
         "duplicate or NULL business key in SCD2 source batch")
+    }, () => {
       val clash = dfFor(name, replaced)
         .join(toInsert.select(keys.map(col): _*), keys, "left_semi")
         .where(col(validFrom) === ts.cast(schema(validFrom).dataType))
@@ -5008,11 +4995,9 @@ class Warehouse(spark: SparkSession, dir: String,
       if (clash.nonEmpty) throw Warehouse.PrimaryKeyViolation(name, pkCols,
         s"a version with $validFrom equal to this merge's ts already " +
           "exists for a touched key (same-instant re-version)")
-    }
-    // new versions carry new FK values; independent probes — overlap
-    runProbes(Seq(
-      () => enforceChecks(name, toInsert),
-      () => enforceForeignKeys(name, toInsert)))
+    })
+    runProbes(Probes(keyProbes) ++ checkProbes(name, toInsert)
+      ++ foreignKeyProbes(name, toInsert))
     val fresh = writeBatch(name, rewritten.unionByName(toInsert))
     commitWrites(Seq(Warehouse.Write(name, (v, entries), replaced, fresh,
       Map("op" -> "scd_merge",
@@ -5095,8 +5080,7 @@ class Warehouse(spark: SparkSession, dir: String,
     require(pkCols.isEmpty || keys.toSet == pkCols.toSet,
       s"mergeInto $name: table declares PRIMARY KEY " +
         s"(${pkCols.mkString(", ")}) — merge keys must be exactly it")
-    if (pkCols.nonEmpty)
-      enforcePrimaryKey(name, source, probeLive = false)
+    runProbes(primaryKeyProbes(name, source, probeLive = false))
     val (v, entries) = loadLatest(name)
     require(v > 0L, s"mergeInto $name: table not bootstrapped")
     val (matchedReplaced, matchedDirs) =
@@ -5166,8 +5150,8 @@ class Warehouse(spark: SparkSession, dir: String,
             chained.otherwise(col(f.name)).as(f.name)
         }
       }: _*)
-    val merged = notMatchedInsert match {
-      case None => survived
+    val (merged, insertProbes) = notMatchedInsert match {
+      case None => (survived, Probes(Nil))
       case Some(cond) =>
         val inserts = source
           .join(dfFor(name, replaced).select(keys.map(col): _*),
@@ -5177,21 +5161,17 @@ class Warehouse(spark: SparkSession, dir: String,
         // updates can't touch unique columns (SET ban above), so only
         // INSERTS can mint duplicates. A value freed by a same-
         // statement delete clause conservatively still rejects.
-        enforceUnique(name, inserts)
-        survived.unionByName(inserts)
+        (survived.unionByName(inserts), uniqueProbes(name, inserts))
     }
-    // clause results are NEW values, so checks/FK validate all of
-    // `merged`; delete clauses are parent-side deletes, so RESTRICT
-    // probes the doomed keys. Independent probes — overlap.
-    runProbes(Seq(
-      () => enforceChecks(name, merged),
-      () => enforceForeignKeys(name, merged))
-      ++ (if ((matchedDelete.nonEmpty || bySourceDelete.nonEmpty) &&
-            childForeignKeys(name).nonEmpty)
-          Seq(() => enforceDeleteRestrict(name,
-            joined.where(delCond || bySrcDelCond)
-              .select(pkCols.map(col): _*)))
-        else Nil))
+    // the inserts' UNIQUE probes lead the wave, so a UNIQUE violation
+    // still beats the others. Clause results are NEW values, so checks/FK
+    // validate all of `merged`; delete clauses are parent-side deletes,
+    // so RESTRICT probes the doomed keys
+    runProbes(insertProbes ++ checkProbes(name, merged)
+      ++ foreignKeyProbes(name, merged)
+      ++ (if (matchedDelete.isEmpty && bySourceDelete.isEmpty) Probes(Nil)
+        else restrictProbes(name, joined.where(delCond || bySrcDelCond)
+          .select(pkCols.map(col): _*))))
     val fresh = writeBatch(name, merged)
     commitWrites(Seq(Warehouse.Write(name, (v, entries), replaced, fresh,
       Map("op" -> "mergeInto", "numFilesReplaced" -> replaced.size.toString,
@@ -5750,9 +5730,8 @@ class Warehouse(spark: SparkSession, dir: String,
     val replaced = touchedFiles(name, base._2, doomed)
     if (replaced.isEmpty) return 0L
     val touched = dfFor(name, replaced)
-    if (childForeignKeys(name).nonEmpty)
-      enforceDeleteRestrict(name, doomed(touched)
-        .select(specsNow(name).primaryKey.map(col): _*))
+    runProbes(restrictProbes(name,
+      doomed(touched).select(specsNow(name).primaryKey.map(col): _*)))
     val removed = doomed(touched).count()
     val fresh = writeBatch(name, keep(touched))
     commitWrites(Seq(Warehouse.Write(name, base, replaced, fresh,
@@ -5853,16 +5832,15 @@ class Warehouse(spark: SparkSession, dir: String,
     // for the scope). Select from `touched` so the WHERE sees OLD
     // values — `rewritten` already carries the new ones and could
     // mis-pick rows when a SET column also appears in the condition.
-    // Independent probes — overlap.
-    runProbes(Seq(() => enforceChecks(name, rewritten))
+    runProbes(checkProbes(name, rewritten)
       ++ (if (specsNow(name).foreignKeys
             .exists(_.cols.exists(set.keySet.contains)))
-          Seq(() => enforceForeignKeys(name, touched.where(matched)
+          foreignKeyProbes(name, touched.where(matched)
             .select(schema.fields.toSeq.map { f =>
               set.get(f.name).map(_.cast(f.dataType).as(f.name))
                 .getOrElse(col(f.name))
-            }: _*)))
-        else Nil))
+            }: _*))
+        else Probes(Nil)))
     val fresh = writeBatch(name, rewritten)
     commitWrites(Seq(Warehouse.Write(name, (v, entries), replaced, fresh,
       Map("op" -> "update", "numRowsUpdated" -> changed.toString,
@@ -6428,16 +6406,16 @@ class Warehouse(spark: SparkSession, dir: String,
       col(Warehouse.physicalName(f)).as(f.name)) ++ keep.map(col): _*)
   }
 
-  /** Enforce the table's CHECK constraints on rows about to be written:
-    * one aggregate pass over `df` counting violations of every check at
-    * once (SQL semantics — NULL passes, only FALSE violates), throwing
+  /** The CHECK probe for rows about to be written: one aggregate pass
+    * over `df` counting violations of every check at once (SQL
+    * semantics — NULL passes, only FALSE violates), throwing
     * [[Warehouse.CheckViolation]] for the first violated check in name
     * order. Costs one extra evaluation of the batch when checks exist
     * (the Delta trade); content-invariant rewrites (compaction) and
     * survivor re-writes (delete) skip it — their rows were checked when
     * first written.
     */
-  private def enforceChecks(name: String, df: DataFrame): Unit = {
+  private def checkProbes(name: String, df: DataFrame): Probes = {
     val spec = specsNow(name)
     // GENERATED columns verify as implicit checks: a batch that carries
     // the column must agree with the expression (null-safe), the Delta
@@ -6446,11 +6424,11 @@ class Warehouse(spark: SparkSession, dir: String,
       s"__gen_$c" ->
         s"$c <=> CAST(($e) AS ${tables(name)(c).dataType.sql})"
     }
-    enforceChecks(name, df, spec.checks ++ genChecks)
+    checkProbes(name, df, spec.checks ++ genChecks)
   }
 
   /** Derive the GENERATED columns an append batch omits (present ones
-    * pass through and are verified by [[enforceChecks]]); output
+    * pass through and are verified by [[checkProbes]]); output
     * columns land in spec order.
     */
   private def applyGenerated(name: String, df: DataFrame): DataFrame = {
@@ -6473,51 +6451,38 @@ class Warehouse(spark: SparkSession, dir: String,
     withCols.select(schema.fieldNames.toSeq.map(col): _*)
   }
 
-  /** Run INDEPENDENT read-only constraint probes CONCURRENTLY (r16,
-    * guide §2.6/§7.3: the commit family's cost was N sequential tiny
-    * driver-submitted jobs — plan + schedule latency per job — not
-    * cluster work; 8-vs-32-core bench ratios ≈ 1 pinned it). Each
-    * thunk is a self-contained enforcement pass: it reads the batch
-    * and/or the table snapshot, throws a typed violation on failure,
-    * and mutates nothing — so overlapping them on
-    * [[Warehouse.probePool]] collapses the wall to ~max(probe) while
-    * the scheduler back-fills each probe's straggler tail with the
-    * next probe's tasks.
+  /** Run an op's INDEPENDENT read-only constraint probes as ONE
+    * CONCURRENT wave on [[DriverPool]] (r16, guide §2.6: the commit
+    * family's cost was N sequential tiny driver-submitted jobs — plan +
+    * schedule latency per job — not cluster work; 8-vs-32-core bench
+    * ratios ≈ 1 pinned it). Each thunk is a self-contained check: it
+    * reads the batch and/or the table snapshot, throws a typed
+    * violation on failure, and mutates nothing — so overlapping them
+    * collapses the wall to ~max(probe) while the scheduler back-fills
+    * each probe's straggler tail with the next probe's tasks. No thunk
+    * runs a wave of its own.
     *
-    * Violation semantics are UNCHANGED: every probe runs to
-    * completion and the FIRST failure IN DECLARATION ORDER is
-    * rethrown — exactly the exception the sequential loop surfaced,
-    * including on multi-violation batches. Spark job-description /
-    * job-group locals are thread-local; the caller's are re-applied
-    * on the pooled thread so UI and event-log attribution hold.
+    * Violation semantics are those of the sequential loop: every probe
+    * runs to completion and the FIRST failure IN `probes` ORDER is
+    * rethrown, including on multi-violation batches. Spark
+    * job-description / job-group locals are thread-local; the caller's
+    * are re-applied on the pooled thread so UI and event-log
+    * attribution hold (set unconditionally — null clears — because
+    * pooled threads are reused across callers).
     */
-  private def runProbes(probes: Seq[() => Unit]): Unit = {
-    if (probes.sizeIs <= 1) { probes.foreach(_()); return }
+  private def runProbes(probes: Probes): Unit = {
     val sc = spark.sparkContext
-    val desc = sc.getLocalProperty("spark.job.description")
-    val group = sc.getLocalProperty("spark.jobGroup.id")
-    val schedPool = sc.getLocalProperty("spark.scheduler.pool")
-    val tasks = probes.map { p =>
-      probePool.submit(new java.util.concurrent.Callable[Option[Throwable]] {
-        override def call(): Option[Throwable] = {
-          // set unconditionally (null clears): pooled threads are
-          // reused across callers and must not leak a stale label
-          sc.setLocalProperty("spark.job.description", desc)
-          sc.setLocalProperty("spark.jobGroup.id", group)
-          sc.setLocalProperty("spark.scheduler.pool", schedPool)
-          try { p(); None } catch { case t: Throwable => Some(t) }
-        }
-      })
-    }
-    // await ALL (probes are read-only; their jobs are small — no
-    // cancellation complexity), then rethrow first-in-order
-    tasks.map(_.get()).collectFirst { case Some(t) => t }.foreach(throw _)
+    val locals = Seq("spark.job.description", "spark.jobGroup.id",
+      "spark.scheduler.pool").map(k => k -> sc.getLocalProperty(k))
+    try DriverPool.map(probes.run) { p =>
+      locals.foreach { case (k, v) => sc.setLocalProperty(k, v) }
+      p()
+    } finally probes.release.foreach(_())
   }
 
-  private def probePool = Warehouse.probePool
-
-  /** UNIQUE enforcement for a row-adding batch: per declared group,
-    * duplicate fully-non-null tuples within the batch, then the
+  /** UNIQUE probes for a row-adding batch, one per declared group in
+    * declaration order: duplicate fully-non-null tuples within the
+    * batch, then (same thunk, so the batch diagnosis wins) the
     * live-table membership probe (file-skipped through
     * [[keyProbeScope]], exactly the PK probe's shape). SQL NULLS
     * DISTINCT semantics: a tuple with any null component is exempt.
@@ -6525,15 +6490,11 @@ class Warehouse(spark: SparkSession, dir: String,
     * probe (the [[merge]] upsert: a row may keep its own unique value
     * across replacement).
     */
-  private def enforceUnique(name: String, df: DataFrame,
+  private def uniqueProbes(name: String, df: DataFrame,
       probeLive: Boolean = true,
-      excludeKeys: Option[(DataFrame, Seq[String])] = None): Unit = {
+      excludeKeys: Option[(DataFrame, Seq[String])] = None): Probes = {
     import org.apache.spark.sql.functions.{col, count, lit}
-    // per-group probes are independent — overlap them; the in-group
-    // order (batch-dup check before live probe) is preserved inside
-    // each thunk, and runProbes' first-in-order rethrow keeps the
-    // sequential loop's winner on multi-group violations
-    runProbes(specsNow(name).unique.map { u => () =>
+    Probes(specsNow(name).unique.map { u => () =>
       val nn = u.map(c => col(c).isNotNull).reduce(_ && _)
       val batch = df.where(nn)
       val dup = batch.groupBy(u.map(col): _*)
@@ -6625,23 +6586,20 @@ class Warehouse(spark: SparkSession, dir: String,
         (withId, Some(newHwm))
     }
 
-  /** PRIMARY KEY enforcement for a row-adding batch: NULL keys and
+  /** PRIMARY KEY probes for a row-adding batch: NULL keys and
     * batch-internal duplicates in one grouped pass, then the live-row
-    * collision probe ([[probePrimaryKey]]). No-op unless the table
-    * declares [[Warehouse.TableSpec.primaryKey]]. Adds two passes over
-    * the batch plus the probe — cache the batch upstream if it is
-    * expensive or non-deterministic (the same caveat as every
+    * collision probe ([[probePrimaryKey]]) — in that order, so a batch
+    * that violates both reports the batch-side diagnosis. None unless
+    * the table declares [[Warehouse.TableSpec.primaryKey]]. Adds two
+    * passes over the batch plus the probe — cache the batch upstream if
+    * it is expensive or non-deterministic (the same caveat as every
     * multi-evaluation write path here).
     */
-  private def enforcePrimaryKey(name: String, df: DataFrame,
-      probeLive: Boolean = true): Unit = {
+  private def primaryKeyProbes(name: String, df: DataFrame,
+      probeLive: Boolean = true): Probes = {
     import org.apache.spark.sql.functions.{col, count, lit}
     val pk = specsNow(name).primaryKey
-    if (pk.isEmpty) return
-    // batch check and live probe are independent reads — overlap them
-    // (runProbes rethrows first-in-order, so a batch that violates
-    // both still reports the batch-side diagnosis, like the
-    // sequential form)
+    if (pk.isEmpty) return Probes(Nil)
     val batchCheck = () => {
       // NOT NULL + uniqueness within the batch: one aggregation (null
       // keys group like values, so both violations surface per GROUP —
@@ -6661,9 +6619,8 @@ class Warehouse(spark: SparkSession, dir: String,
               .mkString(", "))
       }
     }
-    if (probeLive)
-      runProbes(Seq(batchCheck, () => probePrimaryKey(name, df)))
-    else batchCheck()
+    Probes(batchCheck +:
+      (if (probeLive) Seq(() => probePrimaryKey(name, df)) else Nil))
   }
 
   /** The live-row half of PK enforcement: does any batch key already
@@ -6797,15 +6754,16 @@ class Warehouse(spark: SparkSession, dir: String,
     })
   }
 
-  /** FOREIGN KEY enforcement for a row-adding batch (the child-side
+  /** FOREIGN KEY probes for a row-adding batch (the child-side
     * half): every non-null key tuple in `df` must exist in the
     * parent's CURRENT snapshot (MATCH SIMPLE — any null component
     * satisfies the constraint). One anti-join probe per declared FK,
-    * file-skipped on the PARENT by the batch's key extrema (footer
-    * stats) and distinct keys (bloom sidecars) through
-    * [[keyProbeScope]] — declare the parent PK in its `statColumns` /
-    * `bloomColumns` (PK tables want that anyway for their own probe)
-    * and the check reads only batch-overlapping parent files.
+    * in declaration order, file-skipped on the PARENT by the batch's
+    * key extrema (footer stats) and distinct keys (bloom sidecars)
+    * through [[keyProbeScope]] — declare the parent PK in its
+    * `statColumns` / `bloomColumns` (PK tables want that anyway for
+    * their own probe) and the check reads only batch-overlapping
+    * parent files.
     *
     * A SELF-referencing FK admits keys the batch itself introduces
     * (Postgres checks at statement end, when the batch's own rows are
@@ -6825,14 +6783,11 @@ class Warehouse(spark: SparkSession, dir: String,
     * (same scope Delta documents for its constraint checks); within
     * one table the PK/commit machinery stays fully serializable.
     */
-  private def enforceForeignKeys(name: String, df: DataFrame,
+  private def foreignKeyProbes(name: String, df: DataFrame,
       pendingParents: Map[String, DataFrame] = Map.empty,
-      replacedParents: Set[String] = Set.empty): Unit = {
+      replacedParents: Set[String] = Set.empty): Probes = {
     import org.apache.spark.sql.functions.col
-    // per-FK probes scope different parent tables and are independent
-    // reads — overlap them (first-in-declaration-order rethrow keeps
-    // the sequential loop's winner on multi-FK violations)
-    runProbes(specsNow(name).foreignKeys.map { fk => () =>
+    Probes(specsNow(name).foreignKeys.map { fk => () =>
       val batchKeys = df.select(fk.cols.map(col): _*)
         .where(fk.cols.map(c => col(c).isNotNull).reduce(_ && _))
         .distinct()
@@ -6878,13 +6833,15 @@ class Warehouse(spark: SparkSession, dir: String,
     specsNow.toSeq.sortBy(_._1).flatMap { case (t, s) =>
       s.foreignKeys.filter(_.parent == name).map(t -> _) }
 
-  /** ON DELETE RESTRICT (the parent-side half of FK enforcement):
-    * reject the delete if any child still references a doomed key.
-    * `doomedKeys` carries the PARENT's PK columns (one row per deleted
-    * row — PK uniqueness makes "row deleted ⇒ key gone" exact, no
-    * survivor scan needed). One semi-join probe per referencing child,
-    * file-skipped on the CHILD by the doomed keys' extrema/blooms, so
-    * a thin delete probes only key-overlapping child files. No-op (and
+  /** ON DELETE RESTRICT probes (the parent-side half of FK
+    * enforcement): reject the delete if any child still references a
+    * doomed key. `doomedKeys` carries the PARENT's PK columns (one row
+    * per deleted row — PK uniqueness makes "row deleted ⇒ key gone"
+    * exact, no survivor scan needed). One semi-join probe per
+    * referencing child, sharing ONE checkpoint of the distinct doomed
+    * keys — taken by the first probe to need it, released after the
+    * wave — and file-skipped on the CHILD by the keys' extrema/blooms,
+    * so a thin delete probes only key-overlapping child files. No-op (and
     * zero added work) for tables nothing references. Self-FK rows
     * deleted in the same statement still count as referencing — a
     * delete that would orphan survivors rejects either way, which is
@@ -6894,18 +6851,21 @@ class Warehouse(spark: SparkSession, dir: String,
     *   operation REPLACES wholesale ([[overwrite]]/[[restore]] of a
     *   self-FK table pass their own name): the old rows' references
     *   die with them, and the replacement batch is validated
-    *   separately via [[enforceForeignKeys]] with `replacedParents`.
+    *   separately via [[foreignKeyProbes]] with `replacedParents`.
     */
-  private def enforceDeleteRestrict(name: String,
+  private def restrictProbes(name: String,
       doomedKeys: => DataFrame,
-      skipChildren: Set[String] = Set.empty): Unit = {
+      skipChildren: Set[String] = Set.empty): Probes = {
     val children = childForeignKeys(name)
       .filterNot { case (c, _) => skipChildren.contains(c) }
-    if (children.isEmpty) return
-    val keys = doomedKeys.distinct().localCheckpoint(true)
-    // per-child probes scan different child tables off one shared
-    // checkpointed key set — independent reads, overlap them
-    try runProbes(children.map { case (child, fk) => () =>
+    if (children.isEmpty) return Probes(Nil)
+    var taken = false // set once the checkpoint exists
+    lazy val keys = {
+      val k = doomedKeys.distinct().localCheckpoint(true)
+      taken = true
+      k
+    }
+    Probes(children.map { case (child, fk) => () =>
       import org.apache.spark.sql.functions.col
       val asChild = fk.parentCols.zip(fk.cols)
         .foldLeft(keys) { case (d, (p, c)) => d.withColumnRenamed(p, c) }
@@ -6920,25 +6880,27 @@ class Warehouse(spark: SparkSession, dir: String,
                 .mkString(", "))
         }
       }
-    }) finally { keys.unpersist(); () }
+    }, Seq(() => if (taken) keys.unpersist()))
   }
 
-  /** [[enforceChecks]] against an EXPLICIT constraint set — the form
+  /** [[checkProbes]] against an EXPLICIT constraint set — the form
     * [[addCheck]] validates a candidate with, so the candidate is never
     * visible to concurrent writers before it passes.
     */
-  private def enforceChecks(name: String, df: DataFrame,
-      checksIn: Map[String, String]): Unit = {
+  private def checkProbes(name: String, df: DataFrame,
+      checksIn: Map[String, String]): Probes = {
     import org.apache.spark.sql.functions.{coalesce, expr, lit, not, sum, when}
     val checks = checksIn.toSeq.sortBy(_._1)
-    if (checks.isEmpty) return
-    val aggs = checks.map { case (n, e) =>
-      sum(when(not(coalesce(expr(e), lit(true))), 1L).otherwise(0L)).as(n) }
-    val row = df.agg(aggs.head, aggs.tail: _*).head()
-    checks.zipWithIndex.foreach { case ((n, e), i) =>
-      val v = if (row.isNullAt(i)) 0L else row.getLong(i) // empty batch
-      if (v > 0L) throw Warehouse.CheckViolation(name, n, e, v)
-    }
+    if (checks.isEmpty) return Probes(Nil)
+    Probes(Seq { () =>
+      val aggs = checks.map { case (n, e) =>
+        sum(when(not(coalesce(expr(e), lit(true))), 1L).otherwise(0L)).as(n) }
+      val row = df.agg(aggs.head, aggs.tail: _*).head()
+      checks.zipWithIndex.foreach { case ((n, e), i) =>
+        val v = if (row.isNullAt(i)) 0L else row.getLong(i) // empty batch
+        if (v > 0L) throw Warehouse.CheckViolation(name, n, e, v)
+      }
+    })
   }
 
   /** DDL: declare a CHECK constraint. Validates the expression against
@@ -6957,7 +6919,7 @@ class Warehouse(spark: SparkSession, dir: String,
     // published to specsNow until it passes, so a concurrent append can
     // neither transiently enforce a doomed constraint nor observe a
     // mid-validation rollback
-    enforceChecks(name, read(name), Map(checkName -> exprSql))
+    runProbes(checkProbes(name, read(name), Map(checkName -> exprSql)))
     specsLock.synchronized {
       val cur = specsNow(name)
       specsNow = specsNow.updated(name,
@@ -7023,7 +6985,7 @@ class Warehouse(spark: SparkSession, dir: String,
       specsNow = specsNow.updated(name,
         spec.copy(foreignKeys = spec.foreignKeys :+ fk))
     }
-    try enforceForeignKeys(name, read(name))
+    try runProbes(foreignKeyProbes(name, read(name)))
     catch { case t: Throwable =>
       specsLock.synchronized { specsNow = specsNow.updated(name, spec) }
       throw t
@@ -8057,24 +8019,14 @@ class Warehouse(spark: SparkSession, dir: String,
 }
 
 object Warehouse {
-  /** Daemon pool for CONCURRENT constraint probes (r16, guide §2.6:
-    * "actions are only sequential because your driver code calls them
-    * sequentially"). Cached, not fixed: probe runners NEST (an append
-    * overlaps its PK/UNIQUE/FK families, and the FK family overlaps
-    * its per-constraint probes), and a bounded pool could deadlock
-    * with every slot held by an outer probe awaiting an inner one.
-    * Probe thunks are short-lived driver-side job submissions, so the
-    * cached pool stays small in practice and idle threads die off.
+  /** One op's constraint obligations: probe thunks in rethrow order
+    * (constraint family, then constraint, then batch check before live
+    * probe), and the state they share, released once the wave is done.
     */
-  private[pipeline] lazy val probePool: java.util.concurrent.ExecutorService =
-    java.util.concurrent.Executors.newCachedThreadPool(
-      new java.util.concurrent.ThreadFactory {
-        private val n = new java.util.concurrent.atomic.AtomicInteger
-        override def newThread(r: Runnable): Thread = {
-          val t = new Thread(r, s"graft-probe-${n.incrementAndGet()}")
-          t.setDaemon(true); t
-        }
-      })
+  private final case class Probes(run: Seq[() => Unit],
+      release: Seq[() => Unit] = Nil) {
+    def ++(o: Probes): Probes = Probes(run ++ o.run, release ++ o.release)
+  }
 
   /** One live data file: table-relative path, size, per-column
     * long-encoded min/max footer stats (raw value for int/long columns,
@@ -8576,7 +8528,10 @@ object Warehouse {
     *   the case footer [[statColumns]] can never prune (and the only
     *   skipping story for STRING keys, which footer long-stats can't
     *   encode at all). Sidecar size ≈ 1.2 · items · ln(1/fpp) bits per
-    *   file per column — the Delta bloom-index trade.
+    *   file per column — the Delta bloom-index trade — where items is
+    *   the largest row count among the files one write adds, capped by
+    *   `bloomExpectedItems`, and fpp is half of `bloomFpp`, which
+    *   bounds each file's false-positive rate.
     * @param primaryKey ENFORCED primary key (the reference's Postgres
     *   `PRIMARY KEY`, `script.py:78-82`): every row-adding write
     *   rejects NULL keys, batch-internal duplicates and live-row

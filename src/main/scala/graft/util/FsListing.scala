@@ -1,8 +1,6 @@
 package graft.util
 
-import scala.collection.mutable.ArrayBuffer
-
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.SparkSession
 
 /** The one place that decides what counts as a DATA file under a root:
@@ -16,50 +14,28 @@ object FsListing {
 
   /** (relative path, byte size) of every data file under `root`, sorted
     * by relative path; empty if the root does not exist. Listed with the
-    * active session's Hadoop configuration.
-    *
-    * @param parallelism >1 fans the first directory level out over a
-    *   bounded pool — a date-partitioned write leaves hundreds of
-    *   one-file directories, and serial per-directory listing was the
-    *   dominant cost of the warehouse's staged commit (measured 2.7 s
-    *   for 366 dirs, ~60 ms parallel).
+    * active session's Hadoop configuration. The first directory level
+    * fans out over [[DriverPool]] — a date-partitioned write leaves
+    * hundreds of one-file directories, and serial per-directory listing
+    * was the dominant cost of the warehouse's staged commit (measured
+    * 2.7 s for 366 dirs, ~60 ms parallel).
     */
-  def dataFiles(root: String, parallelism: Int = 1): Seq[(String, Long)] = {
+  def dataFiles(root: String): Seq[(String, Long)] = {
     val conf = SparkSession.active.sparkContext.hadoopConfiguration
     val rootPath = new Path(root)
     val fs = rootPath.getFileSystem(conf)
     if (!fs.exists(rootPath)) return Seq.empty
     val rootUri = fs.makeQualified(rootPath).toUri
     def hiddenName(n: String) = n.startsWith("_") || n.startsWith(".")
-    def walk(p: Path): Seq[(String, Long)] = {
-      val buf = ArrayBuffer.empty[(String, Long)]
-      fs.listStatus(p).foreach { st =>
-        if (!hiddenName(st.getPath.getName)) {
-          if (st.isDirectory) buf ++= walk(st.getPath)
-          else buf += rootUri.relativize(
-            fs.makeQualified(st.getPath).toUri).getPath -> st.getLen
-        }
-      }
-      buf.toSeq
+    def list(p: Path): Seq[FileStatus] = fs.listStatus(p).toSeq
+      .filterNot(st => hiddenName(st.getPath.getName))
+    def walk(sts: Seq[FileStatus]): Seq[(String, Long)] = sts.flatMap { st =>
+      if (st.isDirectory) walk(list(st.getPath))
+      else Seq(rootUri.relativize(
+        fs.makeQualified(st.getPath).toUri).getPath -> st.getLen)
     }
-    val out =
-      if (parallelism <= 1) walk(rootPath)
-      else {
-        val top = fs.listStatus(rootPath).toSeq
-          .filterNot(st => hiddenName(st.getPath.getName))
-        val (dirs, files) = top.partition(_.isDirectory)
-        val pool = java.util.concurrent.Executors.newFixedThreadPool(
-          math.max(1, math.min(parallelism, dirs.size max 1)))
-        try {
-          val futs = dirs.map(d =>
-            pool.submit(new java.util.concurrent.Callable[Seq[(String, Long)]] {
-              override def call(): Seq[(String, Long)] = walk(d.getPath)
-            }))
-          files.map(st => rootUri.relativize(
-            fs.makeQualified(st.getPath).toUri).getPath -> st.getLen) ++
-            futs.flatMap(_.get())
-        } finally { pool.shutdown(); () }
-      }
-    out.sortBy(_._1)
+    val (dirs, files) = list(rootPath).partition(_.isDirectory)
+    (walk(files) ++ DriverPool.map(dirs)(d => walk(Seq(d))).flatten)
+      .sortBy(_._1)
   }
 }

@@ -167,4 +167,33 @@ class WarehouseBloomSpec extends SparkSpec {
       new org.apache.hadoop.fs.Path(s"$dir/docs/_bloomidx")).length
     assert(sidecars === live * 2, s"$sidecars sidecars for $live files")
   }
+
+  test("a sidecar is sized to its file's rows, not the table's, and " +
+    "keeps absent-key false positives within bloomFpp") {
+    val dir = Files.createTempDirectory("graft-bloom-").toString
+    // the default table-wide sizing: 1,000,000 expected items
+    val wh = new Warehouse(spark, dir, specs = Map("docs" ->
+      Warehouse.TableSpec(docSchema, bloomColumns = Seq("doc_id"),
+        bloomFpp = 0.01)))
+    wh.bootstrap()
+    val n = 300
+    wh.append("docs", (0 until n).map(i => (i.toLong, s"key-$i", "b"))
+      .toDF("doc_id", "key", "body").coalesce(1))
+    val files = wh.loadLatest("docs")._2
+    assert(files.map(_.rows) === Seq(n.toLong))
+    import org.apache.spark.util.sketch.BloomFilter
+    val fileSized = new java.io.ByteArrayOutputStream()
+    BloomFilter.create(n.toLong, 0.01 / 2).writeTo(fileSized)
+    val path = new org.apache.hadoop.fs.Path(s"$dir/docs/" +
+      Warehouse.Sidecars.bloomDirName + "/" +
+      Warehouse.Sidecars.bloomName(files.head.rel, "doc_id"))
+    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    assert(fs.getFileStatus(path).getLen === fileSized.size.toLong)
+    val in = fs.open(path)
+    val bloom = try BloomFilter.readFrom(in) finally in.close()
+    assert((0 until n).forall(i => bloom.mightContainLong(i.toLong)))
+    val absent = 100000
+    val hits = (0 until absent).count(i => bloom.mightContainLong(n + i))
+    assert(hits.toDouble / absent <= 0.01, s"$hits false positives")
+  }
 }
