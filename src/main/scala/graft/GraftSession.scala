@@ -110,8 +110,7 @@ object GraftSession {
     // stateful streaming queries. Non-local schemes delegate to Spark's
     // own manager selection unchanged (see LocalCheckpointFileManager).
     .config("spark.sql.streaming.checkpointFileManagerClass",
-      sys.env.getOrElse("SPARK_GRAFT_CKPT_FM",
-        "graft.streaming.LocalCheckpointFileManager"))
+      "graft.streaming.LocalCheckpointFileManager")
     // Fork-free `file:` writes (r16): without libhadoop,
     // RawLocalFileSystem.setPermission forks a `chmod` PROCESS per
     // created file/dir — the r16 baseline event log shows partitioned
@@ -121,9 +120,7 @@ object GraftSession {
     // (fchmodat, no fork); all other local-fs behavior is inherited.
     // Scheme-scoped: HDFS/S3 untouched, and clusters with libhadoop
     // never reached the forking fallback anyway (see graft.fs docs).
-    .config("spark.hadoop.fs.file.impl",
-      sys.env.getOrElse("SPARK_GRAFT_LOCAL_FS",
-        "graft.fs.GraftLocalFileSystem"))
+    .config("spark.hadoop.fs.file.impl", "graft.fs.GraftLocalFileSystem")
     .config("spark.ui.enabled", "false")
     // managed tables (bucketed-join layout) land outside the repo
     .config("spark.sql.warehouse.dir",

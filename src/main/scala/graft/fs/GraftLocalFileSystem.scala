@@ -31,8 +31,8 @@ import org.apache.hadoop.fs.permission.{FsAction, FsPermission}
   * shapes NIO cannot express (sticky/setuid bits) fall back to the
   * inherited shell path, so no permission is ever silently dropped.
   *
-  * Wired as `spark.hadoop.fs.file.impl` in [[graft.GraftSession]]
-  * (env-overridable). Scheme-scoped by construction: HDFS/S3/… resolve
+  * Wired as `spark.hadoop.fs.file.impl` in [[graft.GraftSession]].
+  * Scheme-scoped by construction: HDFS/S3/… resolve
   * their own implementations, and clusters WITH libhadoop simply never
   * reach the shell fallback this class replaces — the override is then
   * a same-cost native chmod either way.

@@ -26,6 +26,12 @@ import graft.ext.{NearDup, PQ, Similarity}
   * is answered by the index's own head manifest — crash-safe, and a
   * re-run of the same refresh is a watermark no-op.
   *
+  * The MinHash index has TWO maintainers of one table and one ledger:
+  * batch [[refreshMinhash]] (the merge below) and the streaming
+  * dedupe-on-arrival, which appends each epoch's signatures in the
+  * accepted docs' own transaction and stamps the ledger from it
+  * ([[streamStamp]]).
+  *
   * Maintenance is a MERGE keyed on the doc id: append-only sources only
   * insert; a source MERGE/UPDATE rewrites its partitions, the rewritten
   * rows reappear in the manifest diff, and the index merge REPLACES
@@ -184,50 +190,22 @@ object IndexStore {
       .select(col("_id").as(idCol), partExpr(idCol, nParts).as("part"),
         col("_sig").as("sig"), xxhash64(col("_sig")).as("sigkey"))
 
-  /** Merge externally-derived signature rows (the streaming
-    * dedupe-on-arrival path) into the index, stamping the SAME
-    * watermark ledger [[refreshMinhash]] maintains — after a streamed
-    * epoch that brought the index to source version `srcVersion`, a
-    * subsequent batch `refreshMinhash` is a watermark no-op: one
-    * signature store, two maintainers, zero double-signing.
+  /** The streaming maintainer's ledger stamp, an [[Warehouse!.appendAll]]
+    * `landedMeta` hook for `idx` in a transaction that appends `src`
+    * first: advance to `src`'s landed version `L` only when the stamp
+    * is `L - 1`, or there is none and `src` held no rows before `L`.
+    * Otherwise a foreign commit to `src`, unseen by the index, sits in
+    * between: the ledger stays, and the next [[refreshMinhash]] signs
+    * from there (merge-by-id absorbs the overlap with streamed rows).
     */
-  def mergeMinhashRows(wh: Warehouse, src: String, idx: String,
-      idCol: String, rows: DataFrame, srcVersion: Long): Unit =
-    wh.merge(idx, rows, Seq(idCol), txn = Some((txnId(src), srcVersion)))
-
-  /** [[mergeMinhashRows]] for rows the caller PROVES are fresh (the
-    * streaming dedupe's anti-join survivors): a blind APPEND under the
-    * same `graft_index_*` watermark ledger. The merge form rewrites
-    * every id-hash partition the batch touches — with random ids that
-    * is ~ALL partitions, i.e. an O(index) copy-on-write PLUS an
-    * O(index) bloom-sidecar rebuild, EVERY epoch. The append form
-    * writes batch-sized files and batch-sized sidecars: per-epoch
-    * maintenance cost is O(batch) regardless of corpus size, which is
-    * what makes the bloom-skipped membership probe a net win at scale.
-    * Small files accumulate at one-per-epoch; [[maybeCompactFiles]]
-    * (folded into the maintained stream's epoch loop) bounds them.
-    * Batch [[refreshMinhash]] stays the merge path (it must also
-    * REPLACE signatures of updated docs).
-    *
-    * DUPLICATE-ID CONTRACT (deliberate, documented): the append is
-    * keyed by NOTHING — a doc re-arriving with the same id but CHANGED
-    * content (a new sigkey) passes the content anti-join and appends a
-    * SECOND row for that id, where [[refreshMinhash]]'s merge would
-    * replace the first. That is the dedupe-on-arrival contract working
-    * as intended (new content is new content; keying the probe on id
-    * would wrongly drop changed docs from `accepted`), and it cannot
-    * produce wrong PAIRS: every near-dup probe joins candidates back
-    * to the LIVE source text for exact verification, so a stale
-    * signature row can at worst propose a candidate the verifier then
-    * scores against current text. It can skew candidate GENERATION
-    * (an id surfaces via either signature) and wastes index bytes —
-    * reconcile with [[compactIndex]] + [[refreshMinhash]] (merge-by-id
-    * replaces stale rows) when id-uniqueness of the index matters.
-    */
-  def appendMinhashRows(wh: Warehouse, src: String, idx: String,
-      idCol: String, rows: DataFrame, srcVersion: Long): Unit = {
-    wh.append(idx, rows, txn = Some((txnId(src), srcVersion)))
-    ()
+  private[graft] def streamStamp(wh: Warehouse, src: String, idx: String)
+      : Map[String, Long] => Map[String, String] = landed => {
+    val l = landed(src)
+    val follows = indexedVersion(wh, idx, src) match {
+      case Some(s) => s == l - 1
+      case None => wh.metaRowCount(src, Some(l - 1)).contains(0L)
+    }
+    if (follows) Map(s"txn_${txnId(src)}" -> l.toString) else Map.empty
   }
 
   /** Bound the streaming maintainer's one-file-per-epoch accumulation:

@@ -4655,16 +4655,22 @@ class Warehouse(spark: SparkSession, dir: String,
     *   marker absent) reclaims them immediately, lease or no lease:
     *   the fence makes the epoch idempotent, so aborting even a live
     *   zombie's identical attempt converges.
-    */
-  /** @return per input table: (table, committed version, rows
+    * @param landedMeta per later member: extra commit metadata computed,
+    *   at each commit attempt, from the versions the members before it
+    *   landed at (table → version)
+    * @return per input table: (table, committed version, rows
     *   appended) — rows from the committed entries' footers, exact for
     *   THIS transaction under concurrency; all-zeros rows on a replay
     *   no-op.
     */
   def appendAll(batches: Seq[(String, DataFrame, Long)],
-      txn: Option[(String, Long)] = None): Seq[(String, Long, Long)] = {
+      txn: Option[(String, Long)] = None,
+      landedMeta: Map[String, Map[String, Long] => Map[String, String]] =
+        Map.empty): Seq[(String, Long, Long)] = {
     require(batches.map(_._1).distinct.size == batches.size,
       s"appendAll: duplicate tables in ${batches.map(_._1)}")
+    require(landedMeta.keySet.subsetOf(batches.drop(1).map(_._1).toSet),
+      s"appendAll: landedMeta ${landedMeta.keySet} must name later members")
     if (batches.isEmpty) return Nil
     if (batches.size == 1) { // one table needs no cross-table marker
       val (t, df, rpf) = batches.head
@@ -4698,6 +4704,7 @@ class Warehouse(spark: SparkSession, dir: String,
       case (((t, df, rpf), base), (_, batch)) =>
         appendWrite(t, base, () => df, batch, rpf,
           (_, fresh) => appendMeta(fresh))
+          .copy(landedMeta = landedMeta.get(t))
     }
     commitWrites(writes, txn).fold(replay)(_.map { case (w, v) =>
       (w.name, v, w.fresh.map(_.rows).sum) })
@@ -5212,15 +5219,16 @@ class Warehouse(spark: SparkSession, dir: String,
     val staged = writes.toArray // re-validation may re-stage a member
     def abandon(): Unit = staged.foreach(w => gc(w.name, w.fresh))
     def entryKey(e: FileEntry) = (e.rel, e.dv)
-    def land(i: Int): Option[Long] = {
+    def land(i: Int, before: Map[String, Long]): Option[Long] = {
       var (v, live) = staged(i).base
       var retries = 0
       var landed: Option[Long] = None
       while (landed.isEmpty) {
         val w = staged(i)
         try {
+          val linked = w.landedMeta.fold(Map.empty[String, String])(_(before))
           commit(w.name, v + 1, live.diff(w.replaced) ++ w.fresh,
-            w.meta ++ fence ++ mtxn.map("mtxn" -> _) ++
+            w.meta ++ linked ++ fence ++ mtxn.map("mtxn" -> _) ++
               Option.when(retries > 0)("numRetries" -> retries.toString))
           landed = Some(v + 1)
         } catch {
@@ -5265,7 +5273,8 @@ class Warehouse(spark: SparkSession, dir: String,
     var versions = Vector.empty[Long]
     while (versions.size < staged.length) {
       if (versions.nonEmpty) maybeCrash("between-manifests")
-      land(versions.size) match {
+      val before = staged.iterator.map(_.name).zip(versions).toMap
+      land(versions.size, before) match {
         case Some(v) => versions :+= v
         case None => return None
       }
@@ -8503,11 +8512,14 @@ object Warehouse {
     * @param fresh the files this write staged; GC'd if it never lands
     * @param revalidate re-derives `(fresh, meta)` against the new head
     *   version after a lost race the policy rebases over
+    * @param landedMeta extra metadata from the versions the members
+    *   before this one landed at ([[Warehouse!.appendAll]]'s argument)
     */
   private final case class Write(name: String, base: (Long, Seq[FileEntry]),
       replaced: Seq[FileEntry], fresh: Seq[FileEntry],
       meta: Map[String, String], rebase: Rebase,
-      revalidate: Option[Long => (Seq[FileEntry], Map[String, String])] = None)
+      revalidate: Option[Long => (Seq[FileEntry], Map[String, String])] = None,
+      landedMeta: Option[Map[String, Long] => Map[String, String]] = None)
 
   /** The manifest line for one entry — the inverse of `parseEntry`.
     * Trailing defaults are still written explicitly (fixed 6-field

@@ -45,7 +45,7 @@ import org.apache.spark.sql.execution.streaming.checkpointing.
   * the scheme supports it, FileSystem-based otherwise — byte-for-byte
   * the default behavior, so nothing here is tuned to local mode; the
   * local path is just no longer paying cluster-filesystem overheads it
-  * never needed. Opt out via `SPARK_GRAFT_CKPT_FM` (GraftSession).
+  * never needed.
   */
 class LocalCheckpointFileManager(root: Path, conf: Configuration)
     extends CheckpointFileManager {

@@ -142,34 +142,45 @@ object StreamingIngest {
     *      (sigkey is a declared bloom column) open only index files
     *      that might contain some batch key — per-epoch probe cost
     *      tracks the batch's key overlap, not the corpus;
-    *   4. appends fresh docs to the `accepted` warehouse table
-    *      (epoch-fenced: `txn = (queryId, epoch)`), then APPENDS their
-    *      signature rows into the index (fresh-proven rows need no
-    *      merge — a merge would rewrite every touched id-hash
-    *      partition per epoch) stamped with the accepted table's new
-    *      version on the SAME `graft_index_*` watermark ledger
-    *      `refreshMinhash` maintains — so a later batch refresh is a
-    *      watermark no-op.
+    *   4. appends fresh docs to `accepted` and their signature rows to
+    *      the index in ONE [[graft.pipeline.Warehouse!.appendAll]]
+    *      transaction fenced on `(queryId, epoch)` — both or neither,
+    *      and a replayed epoch lands once — which also stamps the
+    *      index's `graft_index_*` ledger with the version `accepted`
+    *      landed at ([[graft.pipeline.IndexStore.streamStamp]]), so a
+    *      later batch `refreshMinhash` is a watermark no-op.
     *
-    * Crash-safety across the two commits: if the process dies between
-    * the doc append and the signature append, the replayed epoch
-    * recomputes the same `fresh` set (the index still lacks those
-    * signatures), the doc append is txn-fenced to a no-op, and the
-    * signature append completes the pair — convergent, like every
-    * idempotent sink here. A replay after both commits recomputes
-    * `fresh` as EMPTY (signatures present) and writes nothing.
+    * Signature rows are APPENDED, not merged: they are proven fresh,
+    * and a merge would copy-on-write every id-hash partition the batch
+    * touches (~all of them) and their bloom sidecars, every epoch; the
+    * append is O(batch), and `compactAfterFiles` bounds its files.
+    *
+    * DUPLICATE-ID CONTRACT (deliberate): the append is keyed by
+    * NOTHING — a doc re-arriving with the same id but CHANGED content
+    * (a new sigkey) passes the content anti-join and appends a SECOND
+    * index row for that id, where `refreshMinhash`'s merge would
+    * replace the first. That is the dedupe-on-arrival contract working
+    * as intended (new content is new content; keying the probe on id
+    * would wrongly drop changed docs from `accepted`), and it cannot
+    * produce wrong PAIRS: every near-dup probe joins candidates back to
+    * the LIVE source text for exact verification, so a stale signature
+    * row can at worst propose a candidate the verifier then scores
+    * against current text. It can skew candidate GENERATION (an id
+    * surfaces via either signature) and wastes index bytes — reconcile
+    * with [[graft.pipeline.IndexStore.compactIndex]] + `refreshMinhash`
+    * (merge-by-id replaces stale rows) when id-uniqueness matters.
+    *
+    * `accepted` must not declare IDENTITY: `appendAll` refuses it (a
+    * multi-table transaction cannot reassign ids after a lost race).
     *
     * Scale: signing is per-batch work; the anti-join reads ONE long
     * column of only the bloom-admitted index files (no signature
-    * re-hash, no full-corpus scan per epoch); the index merge rewrites
-    * only the id-hash partitions the batch touches.
-    */
-  /** @param compactAfterFiles auto-compaction bound for the signature
-    *   index: the append-only maintainer accumulates one file+sidecar
-    *   per epoch by design, and once the index's live file count
-    *   exceeds this, the epoch loop folds them down
-    *   ([[graft.pipeline.IndexStore.maybeCompactFiles]], txn-safe like
-    *   every rewrite). 0 disables (manual compactIndex cadence).
+    * re-hash, no full-corpus scan per epoch).
+    *
+    * @param compactAfterFiles auto-compaction bound for the signature
+    *   index: once its live file count exceeds this, the epoch folds
+    *   its files after the transaction, in a commit of its own
+    *   ([[graft.pipeline.IndexStore.maybeCompactFiles]]). 0 disables.
     */
   def dedupeOnArrivalStream(spark: SparkSession, sourceDir: String,
       schema: org.apache.spark.sql.types.StructType,
@@ -192,7 +203,7 @@ object StreamingIngest {
           df, idCol, textCol, n, numHashes, nParts)
         val keyed = df.join(signed, idCol)
         // materialize the signed batch ONCE: the bloom probe's key
-        // collection, the anti-join, and both commits all read it —
+        // collection, the anti-join, and both appends all read it —
         // without this the probe would re-run the whole signing
         // pipeline a second time per epoch (signing is the dominant
         // linear cost)
@@ -206,22 +217,16 @@ object StreamingIngest {
           case None => firsts
           case Some(scan) => firsts.join(scan.select("sigkey"),
               Seq("sigkey"), "left_anti")
-            .localCheckpoint() // probed by both commits; stable mid-write
+            .localCheckpoint() // read by both appends; stable mid-write
         }
         try {
-          wh.append(accepted, fresh.select(df.columns.toSeq.map(col): _*),
-            txn = Some((queryId, epoch)))
-          val v = wh.versions(accepted).max
-          // APPEND, not merge: `fresh` is anti-join-proven new, and a
-          // merge would copy-on-write every id-hash partition the batch
-          // touches (≈ the whole index, every epoch) — see
-          // [[graft.pipeline.IndexStore.appendMinhashRows]]
-          graft.pipeline.IndexStore.appendMinhashRows(wh, accepted, idx,
-            idCol, fresh.select(col(idCol), col("part"), col("sig"),
-              col("sigkey")), v)
-          // bound the per-epoch small files (see param doc) — after
-          // the append so a triggering epoch still commits its rows
-          // first and a crash between the two is replay-convergent
+          wh.appendAll(Seq(
+              (accepted, fresh.select(df.columns.toSeq.map(col): _*), 0L),
+              (idx, fresh.select(col(idCol), col("part"), col("sig"),
+                col("sigkey")), 0L)),
+            txn = Some((queryId, epoch)),
+            landedMeta = Map(idx ->
+              graft.pipeline.IndexStore.streamStamp(wh, accepted, idx)))
           graft.pipeline.IndexStore.maybeCompactFiles(wh, idx,
             compactAfterFiles)
           ()

@@ -202,6 +202,92 @@ class StreamingSpec extends SparkSpec {
     assert(probe.get.join(sig, Seq("sigkey"), "left_semi").count() >= 1L)
   }
 
+  /** A fresh warehouse with a plain `acc(doc_id, text)` table and a
+    * dedupe-on-arrival runner over `root/src` into `acc` + `sig_idx`.
+    */
+  private def dedupeFixture(prefix: String)
+      : (graft.pipeline.Warehouse, Seq[(Long, String)] => Unit, () => Unit) = {
+    import spark.implicits._
+    import org.apache.spark.sql.types._
+    val root = Files.createTempDirectory(prefix)
+    val wh = new graft.pipeline.Warehouse(spark, s"$root/wh",
+      specs = Map("acc" -> graft.pipeline.Warehouse.TableSpec(
+        StructType(Seq(StructField("doc_id", LongType),
+          StructField("text", StringType))))))
+    wh.bootstrap()
+    def land(rows: Seq[(Long, String)]): Unit =
+      rows.toDF("doc_id", "text").coalesce(1)
+        .write.mode("append").parquet(s"$root/src")
+    def run(): Unit = StreamingIngest.dedupeOnArrivalStream(spark,
+      s"$root/src", wh.tables("acc"), wh, "acc", "sig_idx", s"$root/ckp",
+      compactAfterFiles = 0).awaitTermination()
+    (wh, land, () => run())
+  }
+
+  private def ids(wh: graft.pipeline.Warehouse, t: String): Seq[Long] = {
+    import spark.implicits._
+    wh.read(t).select("doc_id").as[Long].collect().toSeq.sorted
+  }
+
+  test("dedupe-on-arrival: a plain append to the accepted table between " +
+      "stream runs is signed by the next batch refresh") {
+    val (wh, land, run) = dedupeFixture("graft-stream-stamp")
+    land(Seq(1L -> "alpha bravo charlie delta", 2L -> "echo golf hotel"))
+    run()
+    // a writer outside the stream: the index never sees these rows
+    import spark.implicits._
+    wh.append("acc", Seq(50L -> "kilo lima mike november").toDF(
+      "doc_id", "text"))
+    land(Seq(3L -> "oscar papa quebec romeo"))
+    run()
+    // the epoch after the foreign append must not stamp past it, or
+    // this refresh would be a watermark no-op that never signs doc 50
+    graft.pipeline.IndexStore.refreshMinhash(wh, "acc", "sig_idx",
+      "doc_id", "text", n = 3, numHashes = 16, nParts = 16)
+    assert(ids(wh, "sig_idx") === ids(wh, "acc"))
+    assert(ids(wh, "acc") === Seq(1L, 2L, 3L, 50L))
+  }
+
+  // one dedupe epoch crashed at each commit point of its transaction,
+  // then replayed from the stream checkpoint
+  Seq("after-write", "between-manifests", "before-marker", "after-commit")
+    .foreach { point =>
+    test(s"dedupe-on-arrival epoch crashed at $point: readers see both " +
+        "tables or neither; the replay converges exactly once") {
+      val (wh, land, run) = dedupeFixture("graft-stream-crash")
+      // 3 repeats 1: the keep-first set is {1, 2}
+      land(Seq(1L -> "alpha bravo charlie delta",
+        2L -> "echo golf hotel india", 3L -> "alpha bravo charlie delta"))
+      graft.pipeline.IndexStore.ensureMinhashTable(wh, "acc", "sig_idx",
+        "doc_id")
+      wh.crashPoint = Some(point)
+      val e = try intercept[org.apache.spark.sql.streaming
+        .StreamingQueryException](run()) finally wh.crashPoint = None
+      assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .exists(c => String.valueOf(c.getMessage)
+          .contains(s"injected crash at $point")))
+      val visible = if (point == "after-commit") Seq(1L, 2L) else Nil
+      assert(ids(wh, "acc") === visible)
+      assert(ids(wh, "sig_idx") === visible)
+
+      run()
+      assert(ids(wh, "acc") === Seq(1L, 2L))
+      assert(ids(wh, "sig_idx") === Seq(1L, 2L)) // one row per doc
+      // both members of the epoch's one transaction
+      val mtxn = Seq("acc", "sig_idx").map(t => wh.history(t).last._2("mtxn"))
+      assert(mtxn.distinct.size === 1)
+      Seq("acc", "sig_idx").foreach { t =>
+        val bad = wh.fsck(t).filterNot(_._1 == "info")
+        assert(bad.isEmpty, s"$t: $bad")
+      }
+      val nIdx = wh.versions("sig_idx").size
+      graft.pipeline.IndexStore.refreshMinhash(wh, "acc", "sig_idx",
+        "doc_id", "text", n = 3, numHashes = 16, nParts = 16)
+      assert(wh.versions("sig_idx").size === nIdx,
+        "batch refresh after the replay must be a watermark no-op")
+    }
+  }
+
   test("flatMapGroupsWithState sessionization equals the batch q14 form") {
     val root = Files.createTempDirectory("graft-stream-sess")
     val (src, ckp) = (s"$root/src", s"$root/ckp")
