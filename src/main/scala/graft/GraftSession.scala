@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.SparkConf
 import org.apache.spark.sql.SparkSession
 
 /** Central SparkSession factory.
@@ -28,17 +29,10 @@ object GraftSession {
         s"SPARK_GRAFT_CPUS must be a positive integer, got '$v'"))
   }
 
-  /** Apply graft's standard configuration to any builder. */
-  def configure(b: SparkSession.Builder, nCpus: Int): SparkSession.Builder = b
-    // SQL surface for the domain pack (tle_bstar/tle_parse/vec_dot)
-    .withExtensions(new GraftExtensions)
-    // Shuffle partitions sized to the executor slots, not Spark's default 200:
-    // at local[32] a 200-way shuffle just adds scheduling overhead; on a
-    // real cluster AQE coalesces post-shuffle partitions anyway. The env
-    // override exists for headroom checks (e.g. 4× cores verifies no plan
-    // is quietly relying on single-partition execution).
-    .config("spark.sql.shuffle.partitions",
-      sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", nCpus.toString))
+  /** The core (SparkContext) confs of [[configure]]: read once when the
+    * context starts, so a cached getOrCreate keeps the running values.
+    */
+  private def coreConfs: Map[String, String] = Map(
     // Serialized (Tungsten) shuffle writer for ALL shuffles (r16,
     // guide §2.1/§7): with shuffle partitions sized to the executor
     // slots, every shuffle here has R < 200 and Spark's bypass-merge
@@ -52,8 +46,37 @@ object GraftSession {
     // R ≫ 200 where bypass never fires anyway — this only changes the
     // small-R regime, where the file-per-partition cost is pure
     // overhead.
-    .config("spark.shuffle.sort.bypassMergeThreshold",
-      sys.env.getOrElse("SPARK_GRAFT_BYPASS_THRESHOLD", "0"))
+    "spark.shuffle.sort.bypassMergeThreshold" ->
+      sys.env.getOrElse("SPARK_GRAFT_BYPASS_THRESHOLD", "0"),
+    // Fork-free `file:` writes (r16): without libhadoop,
+    // RawLocalFileSystem.setPermission forks a `chmod` PROCESS per
+    // created file/dir — the r16 baseline event log shows partitioned
+    // warehouse appends whose 32 write tasks sit 3-7 s each at <3%
+    // CPU, thread-dumped in Shell.runCommand under setPermission.
+    // GraftLocalFileSystem overrides that one choke point with NIO
+    // (fchmodat, no fork); all other local-fs behavior is inherited.
+    // Scheme-scoped: HDFS/S3 untouched, and clusters with libhadoop
+    // never reached the forking fallback anyway (see graft.fs docs).
+    "spark.hadoop.fs.file.impl" -> "graft.fs.GraftLocalFileSystem")
+
+  /** The [[coreConfs]] keys whose value in a running context's conf
+    * differs from graft's. */
+  private[graft] def ignoredCoreConfs(running: SparkConf): Seq[String] =
+    coreConfs.collect {
+      case (k, v) if !running.getOption(k).contains(v) => k
+    }.toSeq.sorted
+
+  /** Apply graft's standard configuration to any builder. */
+  def configure(b: SparkSession.Builder, nCpus: Int): SparkSession.Builder = b
+    // SQL surface for the domain pack (tle_bstar/tle_parse/vec_dot)
+    .withExtensions(new GraftExtensions)
+    // Shuffle partitions sized to the executor slots, not Spark's default 200:
+    // at local[32] a 200-way shuffle just adds scheduling overhead; on a
+    // real cluster AQE coalesces post-shuffle partitions anyway. The env
+    // override exists for headroom checks (e.g. 4× cores verifies no plan
+    // is quietly relying on single-partition execution).
+    .config("spark.sql.shuffle.partitions",
+      sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", nCpus.toString))
     .config("spark.sql.adaptive.enabled", "true")
     .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
     .config("spark.sql.adaptive.skewJoin.enabled", "true")
@@ -111,16 +134,7 @@ object GraftSession {
     // own manager selection unchanged (see LocalCheckpointFileManager).
     .config("spark.sql.streaming.checkpointFileManagerClass",
       "graft.streaming.LocalCheckpointFileManager")
-    // Fork-free `file:` writes (r16): without libhadoop,
-    // RawLocalFileSystem.setPermission forks a `chmod` PROCESS per
-    // created file/dir — the r16 baseline event log shows partitioned
-    // warehouse appends whose 32 write tasks sit 3-7 s each at <3%
-    // CPU, thread-dumped in Shell.runCommand under setPermission.
-    // GraftLocalFileSystem overrides that one choke point with NIO
-    // (fchmodat, no fork); all other local-fs behavior is inherited.
-    // Scheme-scoped: HDFS/S3 untouched, and clusters with libhadoop
-    // never reached the forking fallback anyway (see graft.fs docs).
-    .config("spark.hadoop.fs.file.impl", "graft.fs.GraftLocalFileSystem")
+    .config(coreConfs)
     .config("spark.ui.enabled", "false")
     // managed tables (bucketed-join layout) land outside the repo
     .config("spark.sql.warehouse.dir",
@@ -144,6 +158,14 @@ object GraftSession {
     // withExtensions above only fires if the builder CREATED the session;
     // a cached getOrCreate hit needs the pack registered directly.
     GraftExtensions.register(s)
+    // a cached hit also keeps the running context's core confs; Spark
+    // warns "Using an existing Spark session" but lists the ignored
+    // keys only at DEBUG, so name them here
+    val ignored = ignoredCoreConfs(s.sparkContext.getConf)
+    if (ignored.nonEmpty)
+      org.slf4j.LoggerFactory.getLogger(getClass).warn(
+        "existing SparkContext keeps its own value of " +
+          ignored.mkString(", "))
     s.sparkContext.setLogLevel("WARN")
     s
   }

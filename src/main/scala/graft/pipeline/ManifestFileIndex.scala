@@ -16,6 +16,7 @@ import org.apache.spark.sql.types.{
 import org.apache.spark.unsafe.types.UTF8String
 
 import graft.pipeline.Warehouse.FileEntry
+import graft.util.BoundedCache
 
 /** The warehouse's Delta-style FileIndex: Spark's scan planning asks
   * THIS for the file list instead of listing the filesystem — the
@@ -300,7 +301,7 @@ class LazyManifestFileIndex(
         }.toOption
       else None
     }
-    stable.flatMap(LazyManifestFileIndex.dirMemoGet) match {
+    stable.flatMap(LazyManifestFileIndex.dirMemo.get) match {
       case Some((dirs, pairs)) =>
         pairs.foreach { case (k0, p0) => dvFeed(k0, p0) }
         memo = Some((key, dirs))
@@ -330,8 +331,12 @@ class LazyManifestFileIndex(
             partitionSchema, genPruners)
             .listFiles(partitionFilters, dataFilters), ps)
         }
-        stable.foreach(s =>
-          LazyManifestFileIndex.dirMemoPut(s, exact, pairs))
+        stable.foreach { k =>
+          val dirMemo = LazyManifestFileIndex.dirMemo
+          // never cache a list that alone exceeds the budget
+          if (dirMemo.cost((exact, pairs)) <= dirMemo.budget)
+            dirMemo.put(k, (exact, pairs))
+        }
         memo = Some((key, exact))
         exact
     }
@@ -339,73 +344,14 @@ class LazyManifestFileIndex(
 }
 
 object LazyManifestFileIndex {
-  /** Cross-plan directory-memo budget in FILES held (statuses are a
+  /** Cross-plan directory memo, budgeted in FILES held (statuses are a
     * few hundred bytes each — 2M ≈ the slim-list budget's scale).
-    * `var` so memory-constrained drivers lower it. */
-  private[graft] var dirMemoFileBudget: Long = 2L * 1024 * 1024
-  /** Observability: cross-plan memo hits (spec gate). */
-  private[graft] val dirMemoHits =
-    new java.util.concurrent.atomic.AtomicLong(0L)
-  private val dirMemoFiles =
-    new java.util.concurrent.atomic.AtomicLong(0L)
-  private val dirMemo = new java.util.LinkedHashMap[String,
-      (Seq[PartitionDirectory], Seq[(String, String)])](16, 0.75f, true)
-
-  private def filesOf(
-      v: (Seq[PartitionDirectory], Seq[(String, String)])): Long =
-    v._1.iterator.map(_.files.length.toLong).sum
-
-  private[graft] def dirMemoGet(key: String)
-      : Option[(Seq[PartitionDirectory], Seq[(String, String)])] =
-    dirMemo.synchronized {
-      val hit = Option(dirMemo.get(key))
-      hit.foreach(_ => dirMemoHits.incrementAndGet())
-      hit
-    }
-
-  private[pipeline] def dirMemoPut(key: String,
-      dirs: Seq[PartitionDirectory],
-      pairs: Seq[(String, String)]): Unit = dirMemo.synchronized {
-    if (dirMemo.containsKey(key)) return
-    val v = (dirs, pairs)
-    val cost = filesOf(v)
-    if (cost > dirMemoFileBudget) return // never cache past the budget
-    dirMemo.put(key, v)
-    dirMemoFiles.addAndGet(cost)
-    val it = dirMemo.entrySet().iterator()
-    while (dirMemoFiles.get() > dirMemoFileBudget && dirMemo.size() > 1 &&
-        it.hasNext) {
-      val eldest = it.next()
-      if (eldest.getKey != key) {
-        dirMemoFiles.addAndGet(-filesOf(eldest.getValue))
-        it.remove()
-      }
-    }
-  }
-
-  /** Drop a table's memoized directory lists — called from
-    * [[Warehouse.invalidateCached]] so dropTable / lifetime changes
-    * release the (potentially large) FileStatus state immediately
-    * rather than waiting on LRU pressure. */
-  private[graft] def dirMemoInvalidate(prefix: String): Unit =
-    dirMemo.synchronized {
-      val it = dirMemo.entrySet().iterator()
-      while (it.hasNext) {
-        val e = it.next()
-        if (e.getKey.startsWith(prefix)) {
-          dirMemoFiles.addAndGet(-filesOf(e.getValue))
-          it.remove()
-        }
-      }
-    }
-
-  /** Test hook: drop every cross-plan-memoized directory list. */
-  private[graft] def dirMemoClear(): Unit = dirMemo.synchronized {
-    dirMemo.clear(); dirMemoFiles.set(0L)
-  }
-
-  /** Observability: total files currently held by the memo. */
-  private[graft] def dirMemoFilesHeld: Long = dirMemoFiles.get()
+    * [[Warehouse.invalidateCached]] releases a table's lists on
+    * dropTable / lifetime changes rather than waiting on LRU pressure.
+    */
+  private[graft] val dirMemo = new BoundedCache[
+      (Seq[PartitionDirectory], Seq[(String, String)])](
+    2L * 1024 * 1024, _._1.iterator.map(_.files.length.toLong).sum)
 }
 
 object ManifestFileIndex {

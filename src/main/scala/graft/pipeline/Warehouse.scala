@@ -6,7 +6,7 @@ import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.types.{BinaryType, BooleanType, ByteType, DateType, IntegerType, LongType, ShortType, StringType, StructField, StructType, TimestampNTZType, TimestampType}
 
 import graft.schema.Schemas
-import graft.util.{DriverPool, FsListing}
+import graft.util.{BoundedCache, DriverPool, FsListing}
 
 /** Parquet-backed warehouse — the sandbox stand-in for the reference's
   * PostgreSQL star schema (SURVEY.md §2.2; JDBC writer options live in
@@ -293,7 +293,7 @@ class Warehouse(spark: SparkSession, dir: String,
     * every on-disk version per call) costs zero filesystem operations
     * once warm. */
   private def isVisible(name: String, version: Long): Boolean =
-    Warehouse.metaCacheGet(cacheKey(name, version)).isDefined ||
+    Warehouse.metas.get(cacheKey(name, version)).isDefined ||
       commitMeta(name, version).get("mtxn").forall(txnConfirmed)
 
   /** How long a pending transaction manifest may block its version slot
@@ -382,13 +382,24 @@ class Warehouse(spark: SparkSession, dir: String,
     * an empty id — exactly the old key shape.
     */
   private def cacheKey(name: String, version: Long): String =
-    s"$dir#$name#${Warehouse.lifetimeOf(s"$dir#$name")}#$version"
+    lifetimeKey(name) + version
+
+  /** The `dir#table#lifetime#` prefix every JVM-wide memo key of this
+    * table starts with. */
+  private def lifetimeKey(name: String): String =
+    s"$dir#$name#${Warehouse.lifetimeOf(s"$dir#$name")}#"
 
   /** The current cache key of (table, version) — spec observability
     * for the lifetime-qualified key shape (never compute it by hand
     * in tests). */
   private[graft] def currentCacheKey(name: String, version: Long): String =
     cacheKey(name, version)
+
+  /** Whether `version`'s full entry list is already in the snapshot
+    * cache — then the driver-side fold is free and wins over the lazy,
+    * distributed route. */
+  private def eagerlyCached(name: String, version: Long): Boolean =
+    Warehouse.snapshots.get(cacheKey(name, version)).isDefined
 
   private def parseEntry(line: String): FileEntry = {
     // 4th field (row count) and 5th/6th (deletion vector ref + count)
@@ -420,7 +431,7 @@ class Warehouse(spark: SparkSession, dir: String,
     require(version >= 1L, s"$name: cannot reconstruct manifest " +
       "(no checkpoint at or below it — vacuumed?)")
     val key = cacheKey(name, version)
-    Warehouse.snapshotCacheGet(key) match {
+    Warehouse.snapshots.get(key) match {
       case Some(hit) => return hit
       case None =>
     }
@@ -458,8 +469,8 @@ class Warehouse(spark: SparkSession, dir: String,
     // poisoning the JVM-wide snapshot cache.
     val meta = parseMetaLine(lines.drop(1).headOption)
     if (meta.get("mtxn").forall(txnConfirmed)) {
-      Warehouse.snapshotCachePut(key, entries)
-      Warehouse.metaCachePut(key, meta)
+      Warehouse.snapshots.put(key, entries)
+      Warehouse.metas.put(key, meta)
     }
     entries
   }
@@ -496,7 +507,7 @@ class Warehouse(spark: SparkSession, dir: String,
   private def commitMeta(name: String, version: Long): Map[String, String] = {
     if (version == 0L) return Map.empty
     val key = cacheKey(name, version)
-    Warehouse.metaCacheGet(key) match {
+    Warehouse.metas.get(key) match {
       case Some(hit) => return hit
       case None =>
     }
@@ -510,7 +521,7 @@ class Warehouse(spark: SparkSession, dir: String,
     } finally in.close()
     val meta = parseMetaLine(second)
     if (meta.get("mtxn").forall(txnConfirmed))
-      Warehouse.metaCachePut(key, meta)
+      Warehouse.metas.put(key, meta)
     meta
   }
 
@@ -553,7 +564,7 @@ class Warehouse(spark: SparkSession, dir: String,
         // cold + columnar → the memoized distributed fold
         // ([[lazySnapshotAgg]] — the same facts the lazy read plans
         // with); a cached snapshot or a small table folds driver-side
-        if (Warehouse.snapshotCacheGet(cacheKey(name, v)).isEmpty)
+        if (!eagerlyCached(name, v))
           lazySnapshotAgg(name, v) match {
             case Some(agg) =>
               return if (agg.rows < 0L) None else Some(agg.rows)
@@ -578,7 +589,7 @@ class Warehouse(spark: SparkSession, dir: String,
       versionAsOf: Option[Long] = None): Option[(Long, Long)] = {
     val v = versionAsOf.orElse(versions(name).lastOption)
       .getOrElse(return None)
-    if (Warehouse.snapshotCacheGet(cacheKey(name, v)).isEmpty)
+    if (!eagerlyCached(name, v))
       distributedMinMax(name, v, col).foreach(answer => return answer)
     val entries = loadAt(name, v)
     // a deletion vector may have removed the very row a footer extremum
@@ -659,7 +670,7 @@ class Warehouse(spark: SparkSession, dir: String,
     if (cols.isEmpty || !cols.forall(parts.contains)) return None
     val v = versionAsOf.orElse(versions(name).lastOption)
       .getOrElse(return Some(Nil))
-    if (Warehouse.snapshotCacheGet(cacheKey(name, v)).isEmpty)
+    if (!eagerlyCached(name, v))
       distributedPartitionStats(name, v, cols, parts.size)
         .foreach(answer => return answer)
     val entries = loadAt(name, v)
@@ -1137,7 +1148,7 @@ class Warehouse(spark: SparkSession, dir: String,
     * maps). Collected DISTRIBUTED from the columnar checkpoint + delta
     * replay at ~150 B/entry (rel + counters only — the stats maps, the
     * heavy term, are never built), memoized per confirmed version under
-    * an entry-count budget ([[Warehouse.slimEntryBudget]]). Sound
+    * an entry-count budget ([[Warehouse.slims]]). Sound
     * wherever no stat skipping is possible: a scan with NO translatable
     * data filter treats absent stats as keep-everything, which here is
     * exactly right. None when no columnar checkpoint serves the
@@ -1146,7 +1157,7 @@ class Warehouse(spark: SparkSession, dir: String,
   private[graft] def slimEntriesAt(name: String,
       version: Long): Option[Seq[FileEntry]] = {
     val key = cacheKey(name, version)
-    Warehouse.slimCacheGet(key) match {
+    Warehouse.slims.get(key) match {
       case Some(hit) => return Some(hit)
       case None =>
     }
@@ -1164,7 +1175,7 @@ class Warehouse(spark: SparkSession, dir: String,
         Map.empty[String, (Long, Long)], r.getLong(2), r.getString(3),
         r.getLong(4)))
       .sortBy(_.rel)
-    if (cacheable) Warehouse.slimCachePut(key, slim)
+    if (cacheable) Warehouse.slims.put(key, slim)
     Some(slim)
   }
 
@@ -1191,7 +1202,7 @@ class Warehouse(spark: SparkSession, dir: String,
   private[graft] def slimEntriesStream(name: String, version: Long,
       files: Long): Option[Iterator[FileEntry]] = {
     import org.apache.spark.sql.functions.col
-    Warehouse.slimCacheGet(cacheKey(name, version)) match {
+    Warehouse.slims.get(cacheKey(name, version)) match {
       case Some(hit) => return Some(hit.iterator)
       case None =>
     }
@@ -1282,7 +1293,7 @@ class Warehouse(spark: SparkSession, dir: String,
     val memoKey = cacheKey(name, version) + "#" +
       ranges.toSeq.sortBy(_._1).mkString(";") + "#" +
       relConjuncts.map(_.mkString("|")).mkString("&")
-    Warehouse.pruneMemoGet(memoKey) match {
+    Warehouse.pruneMemo.get(memoKey) match {
       case Some(hit) => return Some(hit)
       case None =>
     }
@@ -1308,7 +1319,9 @@ class Warehouse(spark: SparkSession, dir: String,
       upserts.valuesIterator.filter(e =>
         entryOverlaps(e, ranges) && entryRelKeep(e, relConjuncts)))
       .toSeq.sortBy(_.rel)
-    if (memoizable) Warehouse.pruneMemoPut(memoKey, result)
+    // unselective probes stay uncached — re-pruning is no worse
+    if (memoizable && result.size <= Warehouse.pruneMemoMaxSurvivors)
+      Warehouse.pruneMemo.put(memoKey, result)
     Some(result)
   }
 
@@ -1375,7 +1388,7 @@ class Warehouse(spark: SparkSession, dir: String,
       if (ranges.isEmpty) entries
       else entries.filter(e => ranges.forall { case (c, (lo, hi)) =>
         e.stats.get(c).forall { case (mn, mx) => mx >= lo && mn <= hi } })
-    Warehouse.snapshotCacheGet(cacheKey(name, version)) match {
+    Warehouse.snapshots.get(cacheKey(name, version)) match {
       case Some(entries) => driverFilter(entries)
       case None if ranges.nonEmpty =>
         prunedEntries(name, version, ranges)
@@ -1670,18 +1683,13 @@ class Warehouse(spark: SparkSession, dir: String,
       fs.makeQualified(new Path(path(name), e.rel)).toUri.getPath -> e).toMap
   }
 
+  private val instanceId = Warehouse.instanceIds.incrementAndGet()
+
   private def ndvDir(name: String) =
     new Path(path(name), Warehouse.Sidecars.ndvDirName)
 
   private def ndvFileName(rel: String, column: String): String =
     Warehouse.Sidecars.ndvName(rel, column)
-
-  /** NDV memo: (table, planned-rel-set, column-set) → estimates. Values
-    * are recomputable pure functions of immutable sidecars, so the
-    * cache needs no invalidation — a new commit plans a new rel set.
-    */
-  private val ndvMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, Map[String, Long]]()
 
   /** One distributed pass building the PER-FILE sidecars for every new
     * file: bloom filters for [[TableSpec.bloomColumns]] and HLL
@@ -1774,9 +1782,9 @@ class Warehouse(spark: SparkSession, dir: String,
       entries: Seq[FileEntry]): Map[String, Long] = {
     val cols = specsNow.get(name).map(_.ndvColumns).getOrElse(Nil)
     if (cols.isEmpty || entries.isEmpty) return Map.empty
-    val key = name + "#" + cols.mkString(",") + "#" +
-      entries.map(_.rel).sorted.mkString("|").hashCode
-    Option(ndvMemo.get(key)).getOrElse {
+    val key = lifetimeKey(name) + instanceId + "#" + cols.mkString(",") +
+      "#" + entries.map(_.rel).sorted.mkString("|").hashCode
+    Warehouse.ndvMemo.get(key).getOrElse {
       val fs = fileSystem
       // above the threshold the per-file sketch union runs as a SPARK
       // JOB (HLL unions are associative — each task folds its
@@ -1853,7 +1861,7 @@ class Warehouse(spark: SparkSession, dir: String,
       // just-written files plans this path BEFORE their sidecars land,
       // and caching that transient miss would pin the rel set to "no
       // estimate" forever
-      if (computed.size == cols.size) ndvMemo.put(key, computed)
+      if (computed.size == cols.size) Warehouse.ndvMemo.put(key, computed)
       computed
     }
   }
@@ -2696,7 +2704,7 @@ class Warehouse(spark: SparkSession, dir: String,
         // listFiles time ([[LazyManifestFileIndex]]), deletion vectors
         // and per-column statistics included. A cached snapshot is
         // already free driver-side, so it wins when present.
-        if (Warehouse.snapshotCacheGet(cacheKey(name, v)).isEmpty)
+        if (!eagerlyCached(name, v))
           lazyRead(name, v) match {
             case Some(df) => return df
             case None =>
@@ -2714,7 +2722,7 @@ class Warehouse(spark: SparkSession, dir: String,
   private def lazySnapshotAgg(name: String,
       version: Long): Option[Warehouse.SnapshotAgg] = {
     val key = cacheKey(name, version)
-    Warehouse.snapshotAggGet(key) match {
+    Warehouse.snapshotAggs.get(key) match {
       case Some(hit) => return Some(hit)
       case None =>
     }
@@ -2738,7 +2746,7 @@ class Warehouse(spark: SparkSession, dir: String,
       anyDv = r.getInt(4) > 0,
       physRows = if (!rowsKnown) -1L else r.getLong(5),
       dvSum = r.getLong(6))
-    Warehouse.snapshotAggPut(key, agg)
+    Warehouse.snapshotAggs.put(key, agg)
     Some(agg)
   }
 
@@ -2754,7 +2762,7 @@ class Warehouse(spark: SparkSession, dir: String,
   private def lazyColMinMax(name: String,
       version: Long): Map[String, (Long, Long)] = {
     val key = cacheKey(name, version)
-    Warehouse.lazyMinMaxGet(key) match {
+    Warehouse.lazyMinMax.get(key) match {
       case Some(hit) => return hit
       case None =>
     }
@@ -2769,7 +2777,7 @@ class Warehouse(spark: SparkSession, dir: String,
     val statCols = base.columns.toSeq.collect {
       case n if n.startsWith("__lo_") => n.stripPrefix("__lo_") }
     if (statCols.isEmpty) {
-      Warehouse.lazyMinMaxPut(key, Map.empty); return Map.empty
+      Warehouse.lazyMinMax.put(key, Map.empty); return Map.empty
     }
     val touched = (removed ++ upserts.keysIterator).toSeq.sorted
     val kept =
@@ -2799,7 +2807,7 @@ class Warehouse(spark: SparkSession, dir: String,
           else Some(c -> ((ranges.map(_._1).min, ranges.map(_._2).max)))
         }
       }.toMap
-    Warehouse.lazyMinMaxPut(key, out)
+    Warehouse.lazyMinMax.put(key, out)
     out
   }
 
@@ -2823,12 +2831,12 @@ class Warehouse(spark: SparkSession, dir: String,
     val cols = specsNow.get(name).map(_.ndvColumns).getOrElse(Nil)
     if (cols.isEmpty) return Map.empty
     val key = cacheKey(name, version) + "#" + cols.mkString(",")
-    Warehouse.lazyNdvGet(key) match {
+    Warehouse.lazyNdv.get(key) match {
       case Some(hit) => return hit
       case None =>
     }
     val out = lazyNdvCompute(name, version, cols)
-    if (out.size == cols.size) Warehouse.lazyNdvPut(key, out)
+    if (out.size == cols.size) Warehouse.lazyNdv.put(key, out)
     out
   }
 
@@ -3811,12 +3819,12 @@ class Warehouse(spark: SparkSession, dir: String,
     // plans of one DV-bearing snapshot (each listFiles feed, each
     // eager dvLookup) read each sidecar once per JVM, not once per plan
     val key = p.toString
-    Warehouse.dvBytesGet(key) match {
+    Warehouse.dvBytes.get(key) match {
       case Some(hit) => return hit
       case None =>
     }
     val out0 = readDvFileUncached(name, p, dv)
-    Warehouse.dvBytesPut(key, out0)
+    Warehouse.dvBytes.put(key, out0)
     out0
   }
 
@@ -5511,7 +5519,7 @@ class Warehouse(spark: SparkSession, dir: String,
       // a no-op compact is still a maintenance invocation — the
       // staleness hook runs on the way out (rows are unchanged by
       // compaction either way)
-      if (Warehouse.autoReanalyze) reanalyzeIfStale(name)
+      reanalyzeIfStale(name)
       return (0, 0L, 0L)
     }
     val replaced = fragmented.values.flatten.toSeq
@@ -5543,7 +5551,7 @@ class Warehouse(spark: SparkSession, dir: String,
     // every read is silently withholding) refreshes here — two extra
     // metadata-bounded aggregate jobs, only when a basis exists AND has
     // drifted past the withhold guard ([[reanalyzeIfStale]])
-    if (Warehouse.autoReanalyze) reanalyzeIfStale(name)
+    reanalyzeIfStale(name)
     (fragmented.size, before, after.toLong)
   }
 
@@ -7131,7 +7139,7 @@ class Warehouse(spark: SparkSession, dir: String,
     // version — ANALYZE targets exactly the tables whose entry list
     // must never fold on the driver; the eager readVersion is the
     // small-table fallback
-    val df = (if (Warehouse.snapshotCacheGet(cacheKey(name, v)).isEmpty)
+    val df = (if (!eagerlyCached(name, v))
         lazyRead(name, v) else None)
       .getOrElse(readVersion(name, v))
     val pcts = (0 to numBins).map(_.toDouble / numBins).toArray
@@ -7223,7 +7231,7 @@ class Warehouse(spark: SparkSession, dir: String,
           .toOption.map(_ -> st.getPath)
       else None
     }.sortBy(-_._1).drop(1).foreach { case (_, p) => fs.delete(p, false) }
-    Warehouse.histCacheInvalidate(s"$dir#$name#")
+    Warehouse.hists.invalidate(s"$dir#$name#")
     hists.view.mapValues(_.hist.bins.length.toLong).toMap
   }
 
@@ -7242,7 +7250,7 @@ class Warehouse(spark: SparkSession, dir: String,
     val f = Warehouse.histogramDriftFactor
     // zero-row basis (analyzed while empty): stale only once data
     // exists — `!(b.rows > 0 && ...)` would read Some(true) forever on
-    // a still-empty table, and autoReanalyze would re-ANALYZE on every
+    // a still-empty table, and compact/optimize would re-ANALYZE on every
     // compact/optimize without the fresh (still zero-row) basis ever
     // clearing the flag
     Some(if (b.rows == 0L) cur > 0L
@@ -7250,7 +7258,7 @@ class Warehouse(spark: SparkSession, dir: String,
   }
 
   private def currentLiveRows(name: String, v: Long): Long =
-    Warehouse.snapshotCacheGet(cacheKey(name, v))
+    Warehouse.snapshots.get(cacheKey(name, v))
       .map(_.iterator.map(e => e.rows - e.dvRows).sum)
       .orElse(lazySnapshotAgg(name, v).map(_.rows).filter(_ >= 0L))
       .getOrElse(loadAt(name, v).iterator.map(e => e.rows - e.dvRows).sum)
@@ -7260,10 +7268,9 @@ class Warehouse(spark: SparkSession, dir: String,
     * has drifted past the withhold guard, re-run [[analyzeColumns]]
     * with the SAME columns (those still carrying a histogram axis —
     * schema evolution drops out) and the same bin count.
-    * [[compact]]/[[optimize]] invoke this automatically (behind
-    * [[Warehouse.autoReanalyze]]) — the natural moment, since a
-    * rewrite pays a full read anyway; callers with their own
-    * maintenance windows can invoke it directly.
+    * [[compact]]/[[optimize]] invoke this automatically — the natural
+    * moment, since a rewrite pays a full read anyway; callers with
+    * their own maintenance windows can invoke it directly.
     *
     * @return true iff a re-analysis actually ran
     */
@@ -7294,7 +7301,7 @@ class Warehouse(spark: SparkSession, dir: String,
   private[graft] def histogramsAt(name: String, v: Long)
       : Option[Warehouse.HistBasis] = {
     val key = cacheKey(name, v) + "#hist"
-    Warehouse.histCacheGet(key) match {
+    Warehouse.hists.get(key) match {
       case Some(hit) => return hit
       case None =>
     }
@@ -7305,7 +7312,7 @@ class Warehouse(spark: SparkSession, dir: String,
     val listing =
       try fs.listStatus(d).toSeq
       catch { case _: java.io.FileNotFoundException =>
-        Warehouse.histCachePut(key, None)
+        Warehouse.hists.put(key, None)
         return None
       }
     val out =
@@ -7343,7 +7350,7 @@ class Warehouse(spark: SparkSession, dir: String,
           Warehouse.HistBasis(hv, rows, cols.toMap)
         }.toOption // a torn/corrupt basis just withholds bins
       }
-    Warehouse.histCachePut(key, out)
+    Warehouse.hists.put(key, out)
     out
   }
 
@@ -8101,53 +8108,18 @@ object Warehouse {
   // within the same order as reality. Metadata maps are tiny and
   // evict by count. dropTable/createTable invalidate their table's
   // keys — a re-created table restarts version numbering in the same
-  // directory.
+  // directory. Every prefix-keyed memo is listed in [[prefixKeyed]].
   // ------------------------------------------------------------------
-  /** `var` so a memory-constrained driver can lower it before first
-    * use; 512 MB comfortably holds the ~800k-file design point
-    * (~150 B/entry with one stat column) without letting wide-stat
-    * tables own the heap. */
-  private[graft] var snapshotByteBudget: Long = 512L * 1024 * 1024
   private def entryCost(e: FileEntry): Long =
     96L + 2L * (e.rel.length + e.dv.length) + 56L * e.stats.size
   private def snapshotCost(entries: Seq[FileEntry]): Long =
     math.max(1L, entries.iterator.map(entryCost).sum)
-  private val snapshotCache =
-    new java.util.LinkedHashMap[String, Seq[FileEntry]](64, 0.75f, true)
-  private val snapshotCachedBytes =
-    new java.util.concurrent.atomic.AtomicLong(0L)
-  private val metaCache =
-    java.util.Collections.synchronizedMap(
-      new java.util.LinkedHashMap[String, Map[String, String]](
-          256, 0.75f, true) {
-        override def removeEldestEntry(
-            e: java.util.Map.Entry[String, Map[String, String]]): Boolean =
-          size() > 16384
-      })
-
-  private[graft] def snapshotCacheGet(key: String): Option[Seq[FileEntry]] =
-    snapshotCache.synchronized(Option(snapshotCache.get(key)))
-
-  private[graft] def snapshotCachePut(key: String,
-      entries: Seq[FileEntry]): Unit = snapshotCache.synchronized {
-    if (snapshotCache.containsKey(key)) return
-    snapshotCache.put(key, entries)
-    snapshotCachedBytes.addAndGet(snapshotCost(entries))
-    val it = snapshotCache.entrySet().iterator()
-    while (snapshotCachedBytes.get() > snapshotByteBudget &&
-        snapshotCache.size() > 1 && it.hasNext) {
-      val eldest = it.next()
-      if (eldest.getKey != key) {
-        snapshotCachedBytes.addAndGet(-snapshotCost(eldest.getValue))
-        it.remove()
-      }
-    }
-  }
-
-  private[graft] def metaCacheGet(key: String): Option[Map[String, String]] =
-    Option(metaCache.get(key))
-  private[graft] def metaCachePut(key: String,
-      meta: Map[String, String]): Unit = { metaCache.put(key, meta); () }
+  /** 512 MB comfortably holds the ~800k-file design point (~150 B/entry
+    * with one stat column) without letting wide-stat tables own the
+    * heap. */
+  private[graft] val snapshots =
+    new BoundedCache[Seq[FileEntry]](512L * 1024 * 1024, snapshotCost)
+  private[graft] val metas = new BoundedCache[Map[String, String]](16384L)
 
   /** One confirmed snapshot's planning facts, distributed-folded once
     * ([[Warehouse!.lazyRead]]): total bytes, live rows (−1 unknown),
@@ -8157,29 +8129,15 @@ object Warehouse {
   private[graft] final case class SnapshotAgg(bytes: Long, rows: Long,
       files: Long, anyDv: Boolean, physRows: Long = -1L, dvSum: Long = 0L)
 
-  private val snapshotAggCache =
-    java.util.Collections.synchronizedMap(
-      new java.util.LinkedHashMap[String, SnapshotAgg](64, 0.75f, true) {
-        override def removeEldestEntry(
-            e: java.util.Map.Entry[String, SnapshotAgg]): Boolean =
-          size() > 4096
-      })
-
-  private[graft] def snapshotAggGet(key: String): Option[SnapshotAgg] =
-    Option(snapshotAggCache.get(key))
-  private[graft] def snapshotAggPut(key: String,
-      agg: SnapshotAgg): Unit = { snapshotAggCache.put(key, agg); () }
+  private[graft] val snapshotAggs = new BoundedCache[SnapshotAgg](4096L)
 
   /** Histogram staleness bound: bins publish while the CURRENT exact
     * live-row count stays within [basis/f, basis·f] of the analyzed
     * count — outside it, the ANALYZE-time shape is presumed stale and
     * bins are withheld (min/max/NDV keep flowing; they are maintained
-    * by the write path). `var` so operators tune the tolerance.
+    * by the write path).
     */
-  private[graft] var histogramDriftFactor: Double = 2.0
-  /** Maintenance-time auto re-ANALYZE ([[Warehouse!.reanalyzeIfStale]]
-    * from compact/optimize) — `var` so cost-sensitive callers opt out. */
-  private[graft] var autoReanalyze: Boolean = true
+  private[graft] val histogramDriftFactor: Double = 2.0
   /** Entry count above which an unfiltered cold list STREAMS in chunks
     * instead of collecting+memoizing the slim list (256k slim entries
     * ≈ 37 MiB — affordable resident; past it, residency is the hazard
@@ -8223,96 +8181,44 @@ object Warehouse {
     * every un-analyzed table's reads hit). Bases are a few KB; the
     * count bound is plenty.
     */
-  private val histCache =
-    java.util.Collections.synchronizedMap(
-      new java.util.LinkedHashMap[String, Option[HistBasis]](
-          64, 0.75f, true) {
-        override def removeEldestEntry(
-            e: java.util.Map.Entry[String, Option[HistBasis]]): Boolean =
-          size() > 4096
-      })
-  private[graft] def histCacheGet(key: String): Option[Option[HistBasis]] =
-    Option(histCache.get(key))
-  private[graft] def histCachePut(key: String,
-      v: Option[HistBasis]): Unit = { histCache.put(key, v); () }
-  private[graft] def histCacheInvalidate(prefix: String): Unit =
-    histCache.synchronized {
-      histCache.keySet().removeIf(_.startsWith(prefix)); ()
-    }
+  private[graft] val hists = new BoundedCache[Option[HistBasis]](4096L)
 
   // ------------------------------------------------------------------
   // slim-snapshot cache: stats-stripped entry lists for the lazy
-  // unfiltered path. Deliberately SEPARATE from snapshotCache — a slim
+  // unfiltered path. Deliberately SEPARATE from [[snapshots]] — a slim
   // list must never satisfy [[Warehouse!.read]]'s eager-path probe or
   // [[Warehouse!.plannedRange]]'s driver filter (absent stats would
   // silently disable file skipping there). Slim entries are near-
   // constant-size (~150 B), so the budget counts entries, not bytes.
   // ------------------------------------------------------------------
-  /** `var` so a memory-constrained driver can lower it; 2M entries ≈
-    * ~300 MB worst case, comfortably two 800k-file design points. */
-  private[graft] var slimEntryBudget: Long = 2L * 1024 * 1024
-  private val slimCache =
-    new java.util.LinkedHashMap[String, Seq[FileEntry]](16, 0.75f, true)
-  private val slimCachedEntries =
-    new java.util.concurrent.atomic.AtomicLong(0L)
+  /** 2M entries ≈ ~300 MB worst case, comfortably two 800k-file design
+    * points. */
+  private[graft] val slims =
+    new BoundedCache[Seq[FileEntry]](2L * 1024 * 1024, _.size.toLong)
 
   // lazy-path column statistics memos (per confirmed version, like
-  // snapshotAggCache): min/max envelopes and NDV estimates
-  private val lazyMinMaxCache =
-    java.util.Collections.synchronizedMap(
-      new java.util.LinkedHashMap[String, Map[String, (Long, Long)]](
-          64, 0.75f, true) {
-        override def removeEldestEntry(
-            e: java.util.Map.Entry[String, Map[String, (Long, Long)]])
-            : Boolean = size() > 4096
-      })
-  private[graft] def lazyMinMaxGet(key: String)
-      : Option[Map[String, (Long, Long)]] = Option(lazyMinMaxCache.get(key))
-  private[graft] def lazyMinMaxPut(key: String,
-      v: Map[String, (Long, Long)]): Unit = { lazyMinMaxCache.put(key, v); () }
+  // snapshotAggs): min/max envelopes and NDV estimates
+  private[graft] val lazyMinMax =
+    new BoundedCache[Map[String, (Long, Long)]](4096L)
+  private[graft] val lazyNdv = new BoundedCache[Map[String, Long]](4096L)
 
-  private val lazyNdvCache =
-    java.util.Collections.synchronizedMap(
-      new java.util.LinkedHashMap[String, Map[String, Long]](
-          64, 0.75f, true) {
-        override def removeEldestEntry(
-            e: java.util.Map.Entry[String, Map[String, Long]]): Boolean =
-          size() > 4096
-      })
-  private[graft] def lazyNdvGet(key: String): Option[Map[String, Long]] =
-    Option(lazyNdvCache.get(key))
-  private[graft] def lazyNdvPut(key: String,
-      v: Map[String, Long]): Unit = { lazyNdvCache.put(key, v); () }
+  /** [[Warehouse!.ndvEstimates]]' memo: (table lifetime, instance,
+    * column set, planned-rel set) → estimates. Values are pure
+    * functions of immutable sidecars — a new commit plans a new rel set
+    * — so only a drop (the lifetime prefix) or LRU pressure releases an
+    * entry. Keys carry the instance ([[instanceIds]]), so a fresh open
+    * re-reads the sidecars rather than trusting another instance's
+    * answer. */
+  private[graft] val ndvMemo = new BoundedCache[Map[String, Long]](4096L)
+  private val instanceIds = new java.util.concurrent.atomic.AtomicLong(0L)
 
   // parsed deletion-vector sidecars, keyed by absolute path: sidecars
   // are immutable and their UUID file names never recur (a dropped
   // table's dir is deleted; growth writes a FRESH file), so entries
   // never go stale — stale-but-unreferenced ones only age out by LRU.
-  // Byte-budgeted (positions are 8 B each).
-  private[graft] var dvBytesBudget: Long = 64L * 1024 * 1024
-  private val dvBytesCache =
-    new java.util.LinkedHashMap[String, Array[Long]](64, 0.75f, true)
-  private val dvCachedBytes =
-    new java.util.concurrent.atomic.AtomicLong(0L)
-
-  private[graft] def dvBytesGet(key: String): Option[Array[Long]] =
-    dvBytesCache.synchronized(Option(dvBytesCache.get(key)))
-
-  private[graft] def dvBytesPut(key: String,
-      positions: Array[Long]): Unit = dvBytesCache.synchronized {
-    if (dvBytesCache.containsKey(key)) return
-    dvBytesCache.put(key, positions)
-    dvCachedBytes.addAndGet(8L * positions.length + 64L)
-    val it = dvBytesCache.entrySet().iterator()
-    while (dvCachedBytes.get() > dvBytesBudget &&
-        dvBytesCache.size() > 1 && it.hasNext) {
-      val eldest = it.next()
-      if (eldest.getKey != key) {
-        dvCachedBytes.addAndGet(-(8L * eldest.getValue.length + 64L))
-        it.remove()
-      }
-    }
-  }
+  // Byte-budgeted (positions are 8 B each). Not in [[prefixKeyed]].
+  private[graft] val dvBytes = new BoundedCache[Array[Long]](
+    64L * 1024 * 1024, positions => 8L * positions.length + 64L)
 
   /** Memoized SURVIVOR lists of [[Warehouse!.prunedEntries]], keyed by
     * (lifetime-scoped version key, pushed ranges, rel conjuncts): a
@@ -8325,52 +8231,9 @@ object Warehouse {
     * (stats maps included), so 256 keys of 10k wide-stat entries could
     * otherwise own ~1 GB of driver heap.
     */
-  private[graft] var pruneMemoMaxSurvivors: Int = 10000
-  private[graft] var pruneMemoByteBudget: Long = 64L * 1024 * 1024
-  private val pruneMemo =
-    new java.util.LinkedHashMap[String, Seq[FileEntry]](64, 0.75f, true)
-  private val pruneMemoBytes =
-    new java.util.concurrent.atomic.AtomicLong(0L)
-
-  private[graft] def pruneMemoGet(key: String): Option[Seq[FileEntry]] =
-    pruneMemo.synchronized(Option(pruneMemo.get(key)))
-  private[graft] def pruneMemoPut(key: String,
-      survivors: Seq[FileEntry]): Unit = {
-    if (survivors.size > pruneMemoMaxSurvivors) return
-    pruneMemo.synchronized {
-      if (pruneMemo.containsKey(key)) return
-      pruneMemo.put(key, survivors)
-      pruneMemoBytes.addAndGet(snapshotCost(survivors))
-      val it = pruneMemo.entrySet().iterator()
-      while (pruneMemoBytes.get() > pruneMemoByteBudget &&
-          pruneMemo.size() > 1 && it.hasNext) {
-        val eldest = it.next()
-        if (eldest.getKey != key) {
-          pruneMemoBytes.addAndGet(-snapshotCost(eldest.getValue))
-          it.remove()
-        }
-      }
-    }
-  }
-
-  private[graft] def slimCacheGet(key: String): Option[Seq[FileEntry]] =
-    slimCache.synchronized(Option(slimCache.get(key)))
-
-  private[graft] def slimCachePut(key: String,
-      entries: Seq[FileEntry]): Unit = slimCache.synchronized {
-    if (slimCache.containsKey(key)) return
-    slimCache.put(key, entries)
-    slimCachedEntries.addAndGet(entries.size.toLong)
-    val it = slimCache.entrySet().iterator()
-    while (slimCachedEntries.get() > slimEntryBudget &&
-        slimCache.size() > 1 && it.hasNext) {
-      val eldest = it.next()
-      if (eldest.getKey != key) {
-        slimCachedEntries.addAndGet(-eldest.getValue.size.toLong)
-        it.remove()
-      }
-    }
-  }
+  private val pruneMemoMaxSurvivors = 10000
+  private[graft] val pruneMemo =
+    new BoundedCache[Seq[FileEntry]](64L * 1024 * 1024, snapshotCost)
 
   /** Last-observed table-lifetime id per `dir#table` — fed by
     * [[Warehouse!.rawVersions]]' directory listings (and the v1
@@ -8393,56 +8256,15 @@ object Warehouse {
   private[graft] def lifetimeOf(tableKey: String): String =
     Option(lifetimeIds.get(tableKey)).getOrElse("")
 
-  /** Drop every cached snapshot/meta of `prefix` (a `dir#table#` key
+  /** Every memo keyed under a table's `dir#table#lifetime#` prefix. */
+  private[graft] val prefixKeyed: Seq[BoundedCache[_]] = Seq(snapshots,
+    metas, snapshotAggs, hists, slims, lazyMinMax, lazyNdv, ndvMemo,
+    pruneMemo, LazyManifestFileIndex.dirMemo)
+
+  /** Drop every cached entry under `prefix` (a `dir#table#` key
     * prefix) — the dropTable/createTable hook. */
-  private[graft] def invalidateCached(prefix: String): Unit = {
-    snapshotCache.synchronized {
-      val it = snapshotCache.entrySet().iterator()
-      while (it.hasNext) {
-        val e = it.next()
-        if (e.getKey.startsWith(prefix)) {
-          snapshotCachedBytes.addAndGet(-snapshotCost(e.getValue))
-          it.remove()
-        }
-      }
-    }
-    metaCache.synchronized {
-      val it = metaCache.keySet().iterator()
-      while (it.hasNext) if (it.next().startsWith(prefix)) it.remove()
-    }
-    snapshotAggCache.synchronized {
-      val it = snapshotAggCache.keySet().iterator()
-      while (it.hasNext) if (it.next().startsWith(prefix)) it.remove()
-    }
-    slimCache.synchronized {
-      val it = slimCache.entrySet().iterator()
-      while (it.hasNext) {
-        val e = it.next()
-        if (e.getKey.startsWith(prefix)) {
-          slimCachedEntries.addAndGet(-e.getValue.size.toLong)
-          it.remove()
-        }
-      }
-    }
-    pruneMemo.synchronized {
-      val it = pruneMemo.entrySet().iterator()
-      while (it.hasNext) {
-        val e = it.next()
-        if (e.getKey.startsWith(prefix)) {
-          pruneMemoBytes.addAndGet(-snapshotCost(e.getValue))
-          it.remove()
-        }
-      }
-    }
-    Seq(lazyMinMaxCache, lazyNdvCache).foreach { m =>
-      m.synchronized {
-        val it = m.keySet().iterator()
-        while (it.hasNext) if (it.next().startsWith(prefix)) it.remove()
-      }
-    }
-    histCacheInvalidate(prefix)
-    LazyManifestFileIndex.dirMemoInvalidate(prefix)
-  }
+  private[graft] def invalidateCached(prefix: String): Unit =
+    prefixKeyed.foreach(_.invalidate(prefix))
 
   /** Physical manifest reads (text parse / head read) — observability
     * for the cache contract; specs assert a cached re-open does zero. */

@@ -105,7 +105,7 @@ class ManifestScaleSpec extends SparkSpec {
       i >= 4991 && i <= 5050
     })
     // and the head was NEVER cached on the driver by that probe
-    assert(Warehouse.snapshotCacheGet(wh.currentCacheKey("big", 2L)).isEmpty)
+    assert(Warehouse.snapshots.get(wh.currentCacheKey("big", 2L)).isEmpty)
 
     // equivalence: warm the cache (one driver fold), then the same
     // probe takes the cached-driver path and prunes to the same files
@@ -174,7 +174,7 @@ class ManifestScaleSpec extends SparkSpec {
       ((n * 100L, n * 1048576L)))
     assert(Warehouse.columnarPrunes.get() > prunes,
       "t.files must plan over the columnar relation")
-    assert(Warehouse.snapshotCacheGet(wh.currentCacheKey("big", 2L)).isEmpty,
+    assert(Warehouse.snapshots.get(wh.currentCacheKey("big", 2L)).isEmpty,
       "the metadata query must not have folded the list on the driver")
   }
 
@@ -235,7 +235,7 @@ class ManifestScaleSpec extends SparkSpec {
       .collect().toSet === Set((1L, "g0"), (2L, "g0")))
     assert(Warehouse.columnarPrunes.get() > prunes,
       "the filtered read must prune through the columnar manifest")
-    assert(Warehouse.snapshotCacheGet(wh.currentCacheKey("t", 2L)).isEmpty,
+    assert(Warehouse.snapshots.get(wh.currentCacheKey("t", 2L)).isEmpty,
       "the lazy read must not have folded the entry list on the driver")
     // escaped partition value round-trips through the segment prune
     assert(wh.read("t").where($"s" === "a/b=c").as[(Long, String)]
@@ -250,7 +250,7 @@ class ManifestScaleSpec extends SparkSpec {
     // SLIM (stats-stripped) list distributed instead of the full fold:
     // the driver-side snapshot cache must stay empty
     assert(wh.read("t").count() === 5L)
-    assert(Warehouse.snapshotCacheGet(wh.currentCacheKey("t", 2L)).isEmpty,
+    assert(Warehouse.snapshots.get(wh.currentCacheKey("t", 2L)).isEmpty,
       "the unfiltered lazy scan must use the slim distributed list, " +
         "never the full driver fold")
   }
@@ -287,7 +287,7 @@ class ManifestScaleSpec extends SparkSpec {
       "a cold 100k-entry read must plan through the lazy index")
     // the scan's sizeInBytes is the distributed fold's exact total
     assert(index.sizeInBytes === n * 1048576L)
-    assert(Warehouse.snapshotCacheGet(wh.currentCacheKey("big", 2L)).isEmpty)
+    assert(Warehouse.snapshots.get(wh.currentCacheKey("big", 2L)).isEmpty)
 
     val attr = df.queryExecution.analyzed.output.find(_.name == "s").get
     val prunes = Warehouse.columnarPrunes.get()
@@ -300,7 +300,7 @@ class ManifestScaleSpec extends SparkSpec {
       "exactly one partition's files must survive")
     assert(parts.forall(_.files.forall(_.getPath.toString.contains("s=g7"))))
     // and the driver STILL never held the full list
-    assert(Warehouse.snapshotCacheGet(wh.currentCacheKey("big", 2L)).isEmpty,
+    assert(Warehouse.snapshots.get(wh.currentCacheKey("big", 2L)).isEmpty,
       "the one-partition listFiles must not fold the 100k entries")
   }
 
@@ -331,7 +331,7 @@ class ManifestScaleSpec extends SparkSpec {
     assert(index.isInstanceOf[graft.pipeline.LazyManifestFileIndex],
       "a cold DV-bearing read must still plan through the lazy index")
     assert(df.as[(Long, String)].collect().toSet === expect)
-    assert(Warehouse.snapshotCacheGet(wh.currentCacheKey("t", v)).isEmpty,
+    assert(Warehouse.snapshots.get(wh.currentCacheKey("t", v)).isEmpty,
       "the DV-bearing lazy read must not fold the list on the driver")
 
     // FILTERED cold read: the distributed prune + the vector filter
@@ -340,7 +340,7 @@ class ManifestScaleSpec extends SparkSpec {
     assert(wh.read("t").where($"s" === "g1").as[(Long, String)]
       .collect().toSet === expect.filter(_._2 == "g1"))
     assert(Warehouse.columnarPrunes.get() > prunes)
-    assert(Warehouse.snapshotCacheGet(wh.currentCacheKey("t", v)).isEmpty)
+    assert(Warehouse.snapshots.get(wh.currentCacheKey("t", v)).isEmpty)
     // and the filter's lookup was fed the g1 SURVIVORS only
     val filtered = wh.read("t").where($"k" <= 100L && $"s" === "g1")
     filtered.collect()
@@ -416,7 +416,7 @@ class ManifestScaleSpec extends SparkSpec {
     assert(parts.map(_.files.length).sum === n / 50)
     // survivor-bounded: exactly the g7 sidecars were resolved and fed
     assert(lookup.fedFiles === n / 50)
-    assert(Warehouse.snapshotCacheGet(wh.currentCacheKey("big", 2L)).isEmpty,
+    assert(Warehouse.snapshots.get(wh.currentCacheKey("big", 2L)).isEmpty,
       "the DV feed must never fold the 100k entries on the driver")
   }
 
@@ -445,7 +445,7 @@ class ManifestScaleSpec extends SparkSpec {
     // g1 live: 1, 7, 10 (4 vectored); g2 live: 2, 5, 11 (8 vectored)
     // matches: 1+1=2, 10+1=11 (7+1=8 is vectored out — must NOT match)
     assert(got === Set((1L, 2L), (10L, 11L)))
-    assert(Warehouse.snapshotCacheGet(
+    assert(Warehouse.snapshots.get(
       wh.currentCacheKey("t", wh.versions("t").max)).isEmpty,
       "the self-join must plan both sides lazy, never folding")
   }
@@ -481,7 +481,7 @@ class ManifestScaleSpec extends SparkSpec {
       .select($"k").as[Long].collect().toSet
     assert(got === (24L until 48L).toSet)
     assert(Warehouse.columnarPrunes.get() > prunes)
-    assert(Warehouse.snapshotCacheGet(wh.currentCacheKey("ev", v)).isEmpty,
+    assert(Warehouse.snapshots.get(wh.currentCacheKey("ev", v)).isEmpty,
       "the hidden-partition read must not fold the list on the driver")
 
     // direct listFiles: only the one day's dirs survive the
@@ -542,7 +542,7 @@ class ManifestScaleSpec extends SparkSpec {
       .select($"k").as[Long].collect().toSet
     assert(got === Set(1L))
     assert(Warehouse.columnarPrunes.get() > prunes)
-    assert(Warehouse.snapshotCacheGet(wh.currentCacheKey("tp", v)).isEmpty)
+    assert(Warehouse.snapshots.get(wh.currentCacheKey("tp", v)).isEmpty)
     // the sub-second dir survived the round trip; the direct listFiles
     // keeps exactly one file
     import org.apache.spark.sql.catalyst.expressions.{EqualTo, Literal}
@@ -593,7 +593,7 @@ class ManifestScaleSpec extends SparkSpec {
     // a DIFFERENT filter shape pays exactly its own prune
     assert(wh.read("t").where($"s" === "g2").count() === 5L)
     assert(Warehouse.columnarPrunes.get() === prunes + 1)
-    assert(Warehouse.snapshotCacheGet(
+    assert(Warehouse.snapshots.get(
       wh.currentCacheKey("t", wh.versions("t").max)).isEmpty)
   }
 
@@ -650,13 +650,13 @@ class ManifestScaleSpec extends SparkSpec {
     Warehouse.invalidateCached(s"$dir#t#")
     val prunes = Warehouse.columnarPrunes.get()
     assert(wh.metaRowCount("t") === drvCount)
-    assert(Warehouse.snapshotCacheGet(wh.currentCacheKey("t", 7L)).isEmpty,
+    assert(Warehouse.snapshots.get(wh.currentCacheKey("t", 7L)).isEmpty,
       "the distributed rowCount must not fold the list on the driver")
     assert(wh.metaMinMax("t", "k") === drvMm)
     assert(wh.metaPartitionStats("t", Seq("s")).get.toSet === drvPs)
     assert(Warehouse.columnarPrunes.get() > prunes,
       "the cold metadata aggregates must run through the columnar path")
-    assert(Warehouse.snapshotCacheGet(wh.currentCacheKey("t", 7L)).isEmpty)
+    assert(Warehouse.snapshots.get(wh.currentCacheKey("t", 7L)).isEmpty)
   }
 
   test("versioned metadata tables (t.files VERSION AS OF) resolve " +
@@ -684,8 +684,8 @@ class ManifestScaleSpec extends SparkSpec {
         "SELECT sum(rows) FROM msv_t.partitions VERSION AS OF 3")
       .head().getLong(0) === 2L)
     assert(Warehouse.columnarPrunes.get() > prunes)
-    assert(Warehouse.snapshotCacheGet(wh.currentCacheKey("t", 2L)).isEmpty
-      && Warehouse.snapshotCacheGet(wh.currentCacheKey("t", 3L)).isEmpty,
+    assert(Warehouse.snapshots.get(wh.currentCacheKey("t", 2L)).isEmpty
+      && Warehouse.snapshots.get(wh.currentCacheKey("t", 3L)).isEmpty,
       "versioned metadata tables must not fold entry lists driver-side")
     // head ask unchanged
     assert(spark.sql("SELECT count(*) FROM msv_t.files")
@@ -706,28 +706,28 @@ class ManifestScaleSpec extends SparkSpec {
     val expect = (1L to 10L).filter(_ % 3 != 0)
       .map(i => (i, s"g${i % 2}")).toSet
     Warehouse.invalidateCached(s"$dir#t#")
-    graft.pipeline.LazyManifestFileIndex.dirMemoClear()
+    graft.pipeline.LazyManifestFileIndex.dirMemo.clear()
 
     // first cold plan BUILDS; every later fresh plan with the same
     // filter text serves the constructed directories from the memo
     assert(wh.read("t").as[(Long, String)].collect().toSet === expect)
-    val hits0 = graft.pipeline.LazyManifestFileIndex.dirMemoHits.get()
+    val hits0 = graft.pipeline.LazyManifestFileIndex.dirMemo.hits
     // a FRESH DataFrame = fresh index + fresh (EMPTY) growable lookup:
     // the memo hit must re-feed it, or rows 3/6/9 resurface here
     assert(wh.read("t").as[(Long, String)].collect().toSet === expect)
-    assert(graft.pipeline.LazyManifestFileIndex.dirMemoHits.get() > hits0,
+    assert(graft.pipeline.LazyManifestFileIndex.dirMemo.hits > hits0,
       "the second unfiltered plan must serve from the cross-plan memo")
-    assert(Warehouse.snapshotCacheGet(wh.currentCacheKey("t",
+    assert(Warehouse.snapshots.get(wh.currentCacheKey("t",
       wh.versions("t").max)).isEmpty, "both plans must stay lazy")
 
     // filtered plans key by (exprId-free) filter text: same filter
     // hits, a different filter builds its own entry
     val f1 = wh.read("t").where($"s" === "g1").as[(Long, String)]
       .collect().toSet
-    val hits1 = graft.pipeline.LazyManifestFileIndex.dirMemoHits.get()
+    val hits1 = graft.pipeline.LazyManifestFileIndex.dirMemo.hits
     assert(wh.read("t").where($"s" === "g1").as[(Long, String)]
       .collect().toSet === f1)
-    assert(graft.pipeline.LazyManifestFileIndex.dirMemoHits.get() > hits1)
+    assert(graft.pipeline.LazyManifestFileIndex.dirMemo.hits > hits1)
     assert(wh.read("t").where($"s" === "g0").as[(Long, String)]
       .collect().toSet === expect.filter(_._2 == "g0"))
 
@@ -740,10 +740,10 @@ class ManifestScaleSpec extends SparkSpec {
 
     // dropping the table releases its memoized directory lists (the
     // other caches' invalidation contract, extended)
-    assert(graft.pipeline.LazyManifestFileIndex.dirMemoFilesHeld > 0L,
+    assert(graft.pipeline.LazyManifestFileIndex.dirMemo.held > 0L,
       "the plans above must have memoized directories")
     wh.dropTable("t")
-    assert(graft.pipeline.LazyManifestFileIndex.dirMemoFilesHeld === 0L,
+    assert(graft.pipeline.LazyManifestFileIndex.dirMemo.held === 0L,
       "dropTable must purge the table's directory memo")
   }
 
@@ -767,7 +767,7 @@ class ManifestScaleSpec extends SparkSpec {
       lines.result().getBytes(StandardCharsets.UTF_8))
     assert(wh.materializeColumnar("big"))
     Warehouse.invalidateCached(s"$dir#big#")
-    graft.pipeline.LazyManifestFileIndex.dirMemoClear()
+    graft.pipeline.LazyManifestFileIndex.dirMemo.clear()
     // 100k fixture entries sit under the default hybrid threshold
     // (small lists collect+memoize — cheaper); force the streamed
     // regime the way a >256k table would take it
@@ -786,9 +786,9 @@ class ManifestScaleSpec extends SparkSpec {
       "the unfiltered cold list must take the streamed path")
     // the slim list must NOT have been memoized (streaming's point) and
     // the full fold must never have run
-    assert(Warehouse.slimCacheGet(wh.currentCacheKey("big", 2L)).isEmpty,
+    assert(Warehouse.slims.get(wh.currentCacheKey("big", 2L)).isEmpty,
       "the streamed list must leave the slim cache unpopulated")
-    assert(Warehouse.snapshotCacheGet(wh.currentCacheKey("big", 2L)).isEmpty)
+    assert(Warehouse.snapshots.get(wh.currentCacheKey("big", 2L)).isEmpty)
     // exactness vs the entry-level truth: every file exactly once, each
     // under its own partition-value row, 50 partition dirs
     assert(dirs.map(_.files.length).sum === n)
@@ -802,7 +802,7 @@ class ManifestScaleSpec extends SparkSpec {
 
     // a FRESH plan of the same confirmed version re-serves the BUILT
     // directories from the cross-plan memo — no second stream
-    val hits0 = graft.pipeline.LazyManifestFileIndex.dirMemoHits.get()
+    val hits0 = graft.pipeline.LazyManifestFileIndex.dirMemo.hits
     val index2 = wh.read("big").queryExecution.analyzed.collectFirst {
       case org.apache.spark.sql.execution.datasources.LogicalRelation(
           h: org.apache.spark.sql.execution.datasources.HadoopFsRelation,
@@ -810,7 +810,7 @@ class ManifestScaleSpec extends SparkSpec {
     }.get
     assert(!(index2 eq index))
     assert(index2.listFiles(Nil, Nil).map(_.files.length).sum === n)
-    assert(graft.pipeline.LazyManifestFileIndex.dirMemoHits.get() > hits0,
+    assert(graft.pipeline.LazyManifestFileIndex.dirMemo.hits > hits0,
       "the fresh unfiltered plan must hit the directory memo")
     assert(Warehouse.streamedLists.get() === streams0 + 1,
       "the memo hit must not re-stream")
@@ -820,12 +820,12 @@ class ManifestScaleSpec extends SparkSpec {
     // collects + memoizes the slim list instead — the hybrid's cheap
     // half
     Warehouse.invalidateCached(s"$dir#big#")
-    graft.pipeline.LazyManifestFileIndex.dirMemoClear()
+    graft.pipeline.LazyManifestFileIndex.dirMemo.clear()
     val streams1 = Warehouse.streamedLists.get()
     assert(wh.read("big").rdd.partitions.length > 0)
     assert(Warehouse.streamedLists.get() === streams1,
       "under the threshold the list must not stream")
-    assert(Warehouse.slimCacheGet(wh.currentCacheKey("big", 2L)).isDefined,
+    assert(Warehouse.slims.get(wh.currentCacheKey("big", 2L)).isDefined,
       "under the threshold the slim list memoizes")
   }
 
@@ -873,7 +873,7 @@ class ManifestScaleSpec extends SparkSpec {
     val oldThr = Warehouse.streamListThreshold
     try {
       Warehouse.streamListThreshold = 4096L
-      LazyManifestFileIndex.dirMemoClear()
+      LazyManifestFileIndex.dirMemo.clear()
       // k >= 1000 keeps file i when i+9 >= 1000 → i ∈ [991, 99999]:
       // 99009 survivors ≈ 99% — the collect this stream replaces
       val sp0 = Warehouse.streamedPrunes.get()
@@ -883,15 +883,15 @@ class ManifestScaleSpec extends SparkSpec {
         "the weakly-selective ask must take the streamed prune")
       assert(dirs.map(_.files.length).sum === 99009)
       // the ask never folded the head onto the driver
-      assert(Warehouse.snapshotCacheGet(wh.currentCacheKey("big", 2L)).isEmpty)
-      assert(Warehouse.slimCacheGet(wh.currentCacheKey("big", 2L)).isEmpty)
+      assert(Warehouse.snapshots.get(wh.currentCacheKey("big", 2L)).isEmpty)
+      assert(Warehouse.slims.get(wh.currentCacheKey("big", 2L)).isEmpty)
       val streamedFiles = dirs.flatMap(_.files.map(_.getPath.getName))
         .sorted
 
       // equivalence: the same ask on the collect path (threshold lifted)
       // plans the identical file set
       Warehouse.streamListThreshold = Long.MaxValue
-      LazyManifestFileIndex.dirMemoClear()
+      LazyManifestFileIndex.dirMemo.clear()
       val (cond2, loc2) = planParts($"k" >= 1000L)
       val dirs2 = loc2.listFiles(Nil, cond2)
       assert(dirs2.flatMap(_.files.map(_.getPath.getName)).sorted
@@ -900,7 +900,7 @@ class ManifestScaleSpec extends SparkSpec {
       // a SELECTIVE filter under the streaming thresholds still
       // collects: the survivor-count gate inside decides
       Warehouse.streamListThreshold = 4096L
-      LazyManifestFileIndex.dirMemoClear()
+      LazyManifestFileIndex.dirMemo.clear()
       val sp1 = Warehouse.streamedPrunes.get()
       val (cond3, loc3) = planParts($"k" >= 99990L)
       val dirs3 = loc3.listFiles(Nil, cond3)
@@ -910,7 +910,7 @@ class ManifestScaleSpec extends SparkSpec {
       assert(dirs3.map(_.files.length).sum === 19)
     } finally {
       Warehouse.streamListThreshold = oldThr
-      LazyManifestFileIndex.dirMemoClear()
+      LazyManifestFileIndex.dirMemo.clear()
     }
   }
 }

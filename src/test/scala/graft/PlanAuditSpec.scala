@@ -276,7 +276,7 @@ class PlanAuditSpec extends SparkSpec {
     assert(byName("k1").distinctCount === Some(BigInt(20)))
     assert(byName("k2").distinctCount === Some(BigInt(10)))
     assert(byName("k1").min === Some(0L) && byName("k1").max === Some(19L))
-    assert(graft.pipeline.Warehouse.snapshotCacheGet(
+    assert(graft.pipeline.Warehouse.snapshots.get(
       wh.currentCacheKey("fact", v)).isEmpty,
       "publishing lazy column stats must not fold the list driver-side")
 
@@ -302,7 +302,7 @@ class PlanAuditSpec extends SparkSpec {
     val js = joins(j.queryExecution.executedPlan)
     assert(js.size === 2 && js.forall(_.isInstanceOf[BroadcastHashJoinExec]),
       s"expected exactly 2 broadcast joins:\n${j.queryExecution.executedPlan}")
-    assert(graft.pipeline.Warehouse.snapshotCacheGet(
+    assert(graft.pipeline.Warehouse.snapshots.get(
       wh.currentCacheKey("fact", v)).isEmpty)
 
     // the NDV came from sketches EMBEDDED in the columnar checkpoint,

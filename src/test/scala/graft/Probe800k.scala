@@ -53,7 +53,7 @@ object Probe800k {
       wh.read("big").where(col("s") === "g7").rdd.partitions.length
     }
     println(s"cold planned rdd partitions: $cold")
-    println("driver folded? " + Warehouse.snapshotCacheGet(
+    println("driver folded? " + Warehouse.snapshots.get(
       wh.currentCacheKey("big", 2L)).isDefined)
     time("WARM one-partition plan (agg + prune memoized)") {
       wh.read("big").where(col("s") === "g7").rdd.partitions.length
@@ -64,17 +64,17 @@ object Probe800k {
     // within-partition-sorted checkpoint scan); no slim list is driver-resident at all (r12
     // held ~112 MiB of slim entries here; ~1.1 GiB at 8M files)
     Warehouse.invalidateCached(s"$dir#big#")
-    graft.pipeline.LazyManifestFileIndex.dirMemoClear()
+    graft.pipeline.LazyManifestFileIndex.dirMemo.clear()
     val streams0 = Warehouse.streamedLists.get()
     time("COLD unfiltered plan (streamed chunked list)") {
       wh.read("big").rdd.partitions.length
     }
-    println("driver folded (full entries)? " + Warehouse.snapshotCacheGet(
+    println("driver folded (full entries)? " + Warehouse.snapshots.get(
       wh.currentCacheKey("big", 2L)).isDefined)
     println("streamed lists: " +
       (Warehouse.streamedLists.get() - streams0) +
       "; slim entries held: " +
-      Warehouse.slimCacheGet(wh.currentCacheKey("big", 2L))
+      Warehouse.slims.get(wh.currentCacheKey("big", 2L))
         .map(_.size.toString).getOrElse("none (streamed — by design)") +
       s"; chunk bound: 65536 entries (~10 MiB) of $n total")
     time("WARM unfiltered plan (directory memo)") {
@@ -86,7 +86,7 @@ object Probe800k {
     // of collecting (r13 held ~all 800k survivor entries driver-side
     // for a filter like this; ~8M at the design point)
     Warehouse.invalidateCached(s"$dir#big#")
-    graft.pipeline.LazyManifestFileIndex.dirMemoClear()
+    graft.pipeline.LazyManifestFileIndex.dirMemo.clear()
     val sPrunes0 = Warehouse.streamedPrunes.get()
     time("COLD 90%-survivor plan (streamed filtered prune)") {
       // k >= 80000 keeps 720k of 800k entries: weakly selective
@@ -94,9 +94,9 @@ object Probe800k {
     }
     println("streamed prunes: " +
       (Warehouse.streamedPrunes.get() - sPrunes0) +
-      "; driver folded? " + Warehouse.snapshotCacheGet(
+      "; driver folded? " + Warehouse.snapshots.get(
         wh.currentCacheKey("big", 2L)).isDefined +
-      "; slim held? " + Warehouse.slimCacheGet(
+      "; slim held? " + Warehouse.slims.get(
         wh.currentCacheKey("big", 2L)).isDefined +
       s"; chunk bound: 65536 entries of ~720k survivors")
     time("WARM 90%-survivor plan (directory memo)") {
@@ -149,7 +149,7 @@ object Probe800k {
       whDv.read("dvt").where(col("s") === "g7").rdd.partitions.length
     }
     println(s"dv cold planned rdd partitions: $dvCold")
-    println("driver folded? " + Warehouse.snapshotCacheGet(
+    println("driver folded? " + Warehouse.snapshots.get(
       whDv.currentCacheKey("dvt", 2L)).isDefined)
     val dvDf = whDv.read("dvt").where(col("s") === "g7")
     dvDf.rdd.partitions.length
@@ -199,7 +199,7 @@ object Probe800k {
         .rdd.partitions.length
     }
     println(s"hidden cold planned rdd partitions: $hidCold")
-    println("driver folded? " + Warehouse.snapshotCacheGet(
+    println("driver folded? " + Warehouse.snapshots.get(
       whHid.currentCacheKey("hid", 2L)).isDefined)
     spark.stop()
   }

@@ -326,20 +326,58 @@ class SnapshotLifecycleSpec extends SparkSpec {
     wh.bootstrap()
     wh.append("x", Seq((1L, "a")).toDF("k", "s"))
     wh.append("y", Seq((2L, "b")).toDF("k", "s"))
-    val saved = Warehouse.snapshotByteBudget
+    val saved = Warehouse.snapshots.budget
     try {
       Warehouse.invalidateCached(s"$dir#")
-      Warehouse.snapshotByteBudget = 1L // nothing but the newest survives
+      Warehouse.snapshots.budget = 1L // nothing but the newest survives
       assert(wh.read("x").count() === 1L)
       val kx = wh.currentCacheKey("x", 2L)
-      assert(Warehouse.snapshotCacheGet(kx).isDefined,
+      assert(Warehouse.snapshots.get(kx).isDefined,
         "the most recent put always stays, budget notwithstanding")
       assert(wh.read("y").count() === 1L)
-      assert(Warehouse.snapshotCacheGet(kx).isEmpty,
+      assert(Warehouse.snapshots.get(kx).isEmpty,
         "the 1-byte budget must have evicted x's snapshot")
-      assert(Warehouse.snapshotCacheGet(
+      assert(Warehouse.snapshots.get(
         wh.currentCacheKey("y", 2L)).isDefined)
-    } finally Warehouse.snapshotByteBudget = saved
+    } finally Warehouse.snapshots.budget = saved
+  }
+
+  test("dropTable releases the table from every prefix-keyed cache") {
+    val dir = Files.createTempDirectory("graft-lifed-").toString
+    val wh = new Warehouse(spark, dir, checkpointInterval = 1, specs = Map(
+      "t" -> Warehouse.TableSpec(schema, partitionBy = Seq("s"),
+        statColumns = Seq("k"), ndvColumns = Seq("k"))))
+    wh.columnarThreshold = 1L
+    wh.bootstrap()
+    wh.append("t", (1L to 20L).map(i => (i, s"g${i % 2}")).toDF("k", "s"))
+    assert(wh.materializeColumnar("t"))
+    val prefix = s"$dir#t#"
+    Warehouse.invalidateCached(prefix)
+    // lazy path: a cold columnar table plans without folding entries
+    assert(wh.read("t").count() === 20L)
+    assert(wh.read("t").where($"k" <= 5L).count() === 5L)
+    assert(Warehouse.snapshots.get(wh.currentCacheKey("t",
+      wh.versions("t").max)).isEmpty, "the reads above must stay lazy")
+    wh.analyzeColumns("t", Seq("k"))
+    assert(wh.read("t").where($"k" > 10L).count() === 10L)
+    // eager path: the full fold lands in the snapshot cache
+    val entries = wh.loadLatest("t")._2
+    assert(Warehouse.snapshots.get(wh.currentCacheKey("t",
+      wh.versions("t").max)).isDefined)
+    val hits0 = Warehouse.ndvMemo.hits
+    val est = wh.ndvEstimates("t", entries)
+    assert(est.contains("k"))
+    assert(wh.ndvEstimates("t", entries) === est)
+    assert(Warehouse.ndvMemo.hits > hits0, "the estimate must be memoized")
+    wh.dropTable("t")
+    val caches = Seq(Warehouse.snapshots, Warehouse.metas,
+      Warehouse.snapshotAggs, Warehouse.hists, Warehouse.slims,
+      Warehouse.lazyMinMax, Warehouse.lazyNdv, Warehouse.ndvMemo,
+      Warehouse.pruneMemo, graft.pipeline.LazyManifestFileIndex.dirMemo)
+    assert(caches.forall(Warehouse.prefixKeyed.contains))
+    caches.foreach(c =>
+      assert(c.invalidate(prefix) === 0L,
+        "dropTable must release the table from every registered cache"))
   }
 
   /** Launch [[CoherenceChild]] in a genuinely separate JVM with this
