@@ -61,23 +61,23 @@ import graft.util.{BoundedCache, DriverPool, FsListing}
   * partitions — e.g. the 3-day recent-keys scan prunes to ~horizon
   * partitions via `epoch_date` AND then skips files whose `epoch_utc`
   * range ends before the horizon.
-  */
-/** @param retainReplaced when true, merge/compact DEFER deletion of the
+  *
+  * @param retainReplaced when true, merge/compact DEFER deletion of the
   *   files they replace to [[Warehouse!.vacuum]] instead of deleting them
   *   right after the commit — the retention mode that keeps every
   *   committed version readable ([[Warehouse!.readVersion]] time travel)
   *   until vacuum's manifest-retention horizon passes it. The default
   *   (eager) keeps the steady-state directory exactly one version big.
-  */
-/** @param specs the table layout this warehouse manages — name →
+  *
+  * @param specs the table layout this warehouse manages — name →
   *   (schema, partition columns, stat columns). Defaults to the TLE
   *   star schema ([[Warehouse.starSchema]]); any application schema
   *   works (the curation tables, say). [[bootstrap]] persists the
   *   specs under `_meta/`, and [[Warehouse.open]] reopens a directory
   *   from that metadata alone — the path the `graft-warehouse` read
   *   formats use, so readers never need the specs in code.
-  */
-/** @param checkpointInterval how often a commit writes a FULL manifest
+  *
+  * @param checkpointInterval how often a commit writes a FULL manifest
   *   (`.mf` checkpoint) instead of a DELTA (`.mfd`: this commit's adds
   *   and removes only). Full-per-commit is O(live files) write I/O per
   *   commit — quadratic history bytes as the table grows to 10⁷ files;
@@ -277,10 +277,11 @@ class Warehouse(spark: SparkSession, dir: String,
 
   /** Marker directory for multi-table transactions: the create-exclusive
     * publish of `_meta/_txn/<id>` AFTER every member table's manifest is
-    * the cross-table commit point. Markers are tiny (the member list)
-    * and are kept forever — a confirmed version's visibility must never
-    * expire, and one file per [[appendAll]] call is negligible next to
-    * the data it commits.
+    * the cross-table commit point. Markers are tiny (`name\tcount` per
+    * member) and live exactly as long as a manifest carrying their
+    * `mtxn=<id>`: a confirmed version's visibility must never expire,
+    * so [[vacuum]] reclaims a marker only once no member table retains
+    * such a manifest ([[reclaimTxnMarkers]]).
     */
   private def txnDir = new Path(new Path(dir, "_meta"), "_txn")
 
@@ -589,8 +590,14 @@ class Warehouse(spark: SparkSession, dir: String,
       versionAsOf: Option[Long] = None): Option[(Long, Long)] = {
     val v = versionAsOf.orElse(versions(name).lastOption)
       .getOrElse(return None)
+    // cold + columnar → the two memoized distributed folds: an empty
+    // table is SQL NULL, and a deletion vector may have removed the very
+    // row a footer extremum came from
     if (!eagerlyCached(name, v))
-      distributedMinMax(name, v, col).foreach(answer => return answer)
+      lazySnapshotAgg(name, v).foreach { agg =>
+        return if (agg.files == 0L || agg.anyDv) None
+          else lazyColMinMax(name, v).get(col)
+      }
     val entries = loadAt(name, v)
     // a deletion vector may have removed the very row a footer extremum
     // came from — a vectored file makes the fold unknowable
@@ -598,55 +605,6 @@ class Warehouse(spark: SparkSession, dir: String,
         !entries.forall(_.stats.contains(col))) None
     else Some((entries.map(_.stats(col)._1).min,
       entries.map(_.stats(col)._2).max))
-  }
-
-  /** [[metaMinMax]]'s DISTRIBUTED route: the checkpoint portion folds
-    * inside a scan of the columnar manifest (count / nulls / min / max
-    * in one agg), the batch-bounded delta upserts fold driver-side,
-    * and the two combine under exactly the driver rules (every live
-    * file must carry the stat; any deletion vector, or an empty table,
-    * makes the answer unknowable/NULL). Outer None = no columnar
-    * checkpoint serves the version — caller falls back to the driver
-    * fold; inner Option is the answer itself.
-    */
-  private def distributedMinMax(name: String, version: Long, c: String)
-      : Option[Option[(Long, Long)]] = {
-    import org.apache.spark.sql.functions.{
-      broadcast, coalesce, count, lit, max, min, sum, when, col => f}
-    val fs = fileSystem
-    val ckpt = checkpointBelow(name, version)
-      .filter(x => fs.exists(mfpPath(name, x)))
-      .getOrElse(return None)
-    val (removed, upserts) = deltaState(name, ckpt, version)
-    val base0 = spark.read.parquet(mfpPath(name, ckpt).toString)
-    val touched = (removed ++ upserts.keysIterator).toSeq.sorted
-    val kept =
-      if (touched.isEmpty) base0
-      else base0.join(
-        broadcast(spark.createDataFrame(touched.map(Tuple1(_)))
-          .toDF("rel")), Seq("rel"), "left_anti")
-    val hasCol = base0.columns.contains(s"__lo_$c")
-    val loC = if (hasCol) f(s"__lo_$c") else lit(null).cast("long")
-    val hiC = if (hasCol) f(s"__hi_$c") else lit(null).cast("long")
-    val r = kept.agg(
-      count(lit(1)),
-      coalesce(sum(when(loC.isNull, 1L).otherwise(0L)), lit(0L)),
-      min(loC), max(hiC),
-      coalesce(max(when(f("dvRows") > lit(0L), 1).otherwise(0)), lit(0)))
-      .head()
-    Warehouse.columnarPrunes.incrementAndGet()
-    val files = r.getLong(0)
-    val ups = upserts.values.toSeq
-    if (files + ups.size == 0L) return Some(None) // empty → SQL NULL
-    if (r.getInt(4) > 0 || ups.exists(_.dvRows > 0L)) return Some(None)
-    if (r.getLong(1) > 0L || ups.exists(e => !e.stats.contains(c)))
-      return Some(None) // some live file lacks the stat → only a scan
-    val folds = Seq(
-      if (files > 0L) Some((r.getLong(2), r.getLong(3))) else None,
-      if (ups.nonEmpty) Some((ups.map(_.stats(c)._1).min,
-        ups.map(_.stats(c)._2).max)) else None).flatten
-    Some(Some(folds.reduce((a, b) =>
-      (math.min(a._1, b._1), math.max(a._2, b._2)))))
   }
 
   /** Manifest-only PER-PARTITION-SLICE statistics: live head entries
@@ -676,19 +634,8 @@ class Warehouse(spark: SparkSession, dir: String,
     val entries = loadAt(name, v)
     if (entries.exists(_.rows < 0L)) return None
     val decoded = entries.map { e =>
-      val kv = dirOf(name, e.rel).split('/').filter(_.nonEmpty).map { seg =>
-        val i = seg.indexOf('=')
-        if (i <= 0) return None
-        seg.take(i) -> seg.drop(i + 1)
-      }.toMap
-      val vals = cols.map { c =>
-        kv.get(c) match {
-          case None => return None
-          case Some(ExternalCatalogUtils.DEFAULT_PARTITION_NAME) => null
-          case Some(raw) => ExternalCatalogUtils.unescapePathName(raw)
-        }
-      }
-      (vals, e)
+      val segs = dirOf(name, e.rel).split('/').filter(_.nonEmpty).toSeq
+      (partitionValues(segs, cols).getOrElse(return None), e)
     }
     Some(decoded.groupBy(_._1).toSeq.map { case (vals, slice) =>
       val es = slice.map(_._2)
@@ -706,41 +653,44 @@ class Warehouse(spark: SparkSession, dir: String,
     }.filter(_._2 > 0L))
   }
 
-  /** [[metaPartitionStats]]' DISTRIBUTED route: the checkpoint portion
-    * groups by its trailing partition-dir components INSIDE a scan of
-    * the columnar manifest (group count is bounded by the partition
-    * count, so the collect is slice-sized, never |files|-sized); the
-    * batch-bounded delta upserts fold driver-side; the driver then
-    * re-groups by the REQUESTED column subset, unescapes values, and
-    * applies exactly the driver rules (unknown row counts / malformed
-    * paths → None; per-slice stats covered only when every file
-    * carries them and none is deletion-vectored; live == 0 slices
-    * drop). One deliberate narrowing: stat columns absent from the
-    * checkpoint's schema can never report as covered here — consumers
-    * treat a missing stat as "fall back to the scan", so the answer
-    * stays correct, just computed the slower way. Outer None = no
+  /** `k=v` partition-dir segments (ESCAPED, as paths carry them) →
+    * `cols`' DECODED values (the `__HIVE_DEFAULT_PARTITION__` null
+    * marker → null); None on a malformed segment or a missing column.
+    */
+  private def partitionValues(segs: Seq[String],
+      cols: Seq[String]): Option[Seq[String]] = {
+    val kv = segs.map { seg =>
+      val i = seg.indexOf('=')
+      if (i <= 0) return None
+      seg.take(i) -> seg.drop(i + 1)
+    }.toMap
+    Some(cols.map { c =>
+      kv.get(c) match {
+        case None => return None
+        case Some(ExternalCatalogUtils.DEFAULT_PARTITION_NAME) => null
+        case Some(raw) => ExternalCatalogUtils.unescapePathName(raw)
+      }
+    })
+  }
+
+  /** [[metaPartitionStats]]' DISTRIBUTED route: the snapshot relation
+    * ([[entriesRelationAt]]) groups by its trailing partition-dir
+    * components INSIDE one scan (group count is bounded by the
+    * partition count, so the collect is slice-sized, never
+    * |files|-sized); the driver then re-groups by the REQUESTED column
+    * subset, unescapes values, and applies exactly the driver rules
+    * (unknown row counts / malformed paths → None; per-slice stats
+    * covered only when every file carries them and none is
+    * deletion-vectored; live == 0 slices drop). Outer None = no
     * columnar checkpoint serves the version.
     */
   private def distributedPartitionStats(name: String, version: Long,
       cols: Seq[String], np: Int)
       : Option[Option[Seq[(Seq[String], Long, Map[String, (Long, Long)])]]] = {
     import org.apache.spark.sql.functions.{
-      broadcast, count, lit, max, min, size, slice, split, sum, when,
-      col => f}
-    val fs = fileSystem
-    val ckpt = checkpointBelow(name, version)
-      .filter(x => fs.exists(mfpPath(name, x)))
-      .getOrElse(return None)
-    val (removed, upserts) = deltaState(name, ckpt, version)
-    val base0 = spark.read.parquet(mfpPath(name, ckpt).toString)
-    val touched = (removed ++ upserts.keysIterator).toSeq.sorted
-    val kept =
-      if (touched.isEmpty) base0
-      else base0.join(
-        broadcast(spark.createDataFrame(touched.map(Tuple1(_)))
-          .toDF("rel")), Seq("rel"), "left_anti")
-    val statCols = base0.columns.toSeq.collect {
-      case n if n.startsWith("__lo_") => n.stripPrefix("__lo_") }
+      lit, max, min, size, slice, split, sum, when, col => f}
+    val rel = entriesRelationAt(name, version).getOrElse(return None)
+    val statCols = statColumnsOf(rel)
     // trailing np DIR components (the file name excluded); too-shallow
     // paths (foreign-layout adoption) group under null and fail the
     // driver-side validation below, like the driver fold's return None
@@ -748,7 +698,6 @@ class Warehouse(spark: SparkSession, dir: String,
     val dirs = when(size(arr) >= np + 1,
       slice(arr, size(arr) - np, lit(np))).otherwise(lit(null))
     val aggs = Seq(
-      count(lit(1)).as("__files"),
       min(f("rows")).as("__minrows"),
       sum(f("rows") - f("dvRows")).as("__live"),
       max(when(f("dvRows") > lit(0L), 1).otherwise(0)).as("__anydv")) ++
@@ -756,84 +705,26 @@ class Warehouse(spark: SparkSession, dir: String,
         sum(when(f(s"__lo_$c").isNull, 1L).otherwise(0L)).as(s"__miss_$c"),
         min(f(s"__lo_$c")).as(s"__min_$c"),
         max(f(s"__hi_$c")).as(s"__max_$c")))
-    val grouped = kept.groupBy(dirs.as("__dirs"))
-      .agg(aggs.head, aggs.tail: _*).collect()
-    Warehouse.columnarPrunes.incrementAndGet()
-
-    // mutable per-subset-key accumulator the base groups and upserts
-    // both merge into
-    final case class Acc(var files: Long, var live: Long,
-        var anyDv: Boolean,
-        miss: scala.collection.mutable.Map[String, Long],
-        lo: scala.collection.mutable.Map[String, Long],
-        hi: scala.collection.mutable.Map[String, Long])
-    val acc = scala.collection.mutable.LinkedHashMap
-      .empty[Seq[String], Acc]
-    def accFor(vals: Seq[String]): Acc =
-      acc.getOrElseUpdate(vals, Acc(0L, 0L, false,
-        scala.collection.mutable.Map.empty,
-        scala.collection.mutable.Map.empty,
-        scala.collection.mutable.Map.empty))
-    // `k=v` segments (ESCAPED, as grouped) → requested cols' DECODED
-    // values, or None on any malformed segment
-    def decode(segs: Seq[String]): Option[Seq[String]] = {
-      val kv = segs.map { seg =>
-        val i = seg.indexOf('=')
-        if (i <= 0) return None
-        seg.take(i) -> seg.drop(i + 1)
-      }.toMap
-      Some(cols.map { c =>
-        kv.get(c) match {
-          case None => return None
-          case Some(ExternalCatalogUtils.DEFAULT_PARTITION_NAME) => null
-          case Some(raw) => ExternalCatalogUtils.unescapePathName(raw)
-        }
-      })
+    val grouped = rel.groupBy(dirs.as("__dirs"))
+      .agg(aggs.head, aggs.tail: _*).collect().toSeq
+    // a too-shallow path, an unknown row count or a malformed segment
+    // anywhere makes the whole answer a scan's
+    val decoded = grouped.map { r =>
+      if (r.isNullAt(0) || r.getAs[Long]("__minrows") < 0L)
+        return Some(None)
+      (partitionValues(r.getSeq[String](0), cols)
+        .getOrElse(return Some(None)), r)
     }
-    grouped.foreach { r =>
-      if (r.isNullAt(0)) return Some(None) // path too shallow somewhere
-      if (r.getLong(r.fieldIndex("__minrows")) < 0L) return Some(None)
-      val vals = decode(r.getSeq[String](0)).getOrElse(return Some(None))
-      val a = accFor(vals)
-      a.files += r.getLong(r.fieldIndex("__files"))
-      a.live += r.getLong(r.fieldIndex("__live"))
-      a.anyDv ||= r.getInt(r.fieldIndex("__anydv")) > 0
-      statCols.foreach { c =>
-        a.miss(c) = a.miss.getOrElse(c, 0L) +
-          r.getLong(r.fieldIndex(s"__miss_$c"))
-        if (!r.isNullAt(r.fieldIndex(s"__min_$c"))) {
-          val mn = r.getLong(r.fieldIndex(s"__min_$c"))
-          val mx = r.getLong(r.fieldIndex(s"__max_$c"))
-          a.lo(c) = a.lo.get(c).fold(mn)(math.min(_, mn))
-          a.hi(c) = a.hi.get(c).fold(mx)(math.max(_, mx))
-        }
-      }
-    }
-    upserts.values.foreach { e =>
-      if (e.rows < 0L) return Some(None)
-      val comps = e.rel.split('/').init.takeRight(np).toSeq
-      if (comps.size < np) return Some(None)
-      val vals = decode(comps).getOrElse(return Some(None))
-      val a = accFor(vals)
-      a.files += 1L
-      a.live += e.rows - e.dvRows
-      a.anyDv ||= e.dvRows > 0L
-      statCols.foreach { c =>
-        e.stats.get(c) match {
-          case Some((mn, mx)) =>
-            a.lo(c) = a.lo.get(c).fold(mn)(math.min(_, mn))
-            a.hi(c) = a.hi.get(c).fold(mx)(math.max(_, mx))
-          case None => a.miss(c) = a.miss.getOrElse(c, 0L) + 1L
-        }
-      }
-    }
-    Some(Some(acc.toSeq.map { case (vals, a) =>
+    Some(Some(decoded.groupBy(_._1).toSeq.map { case (vals, slice) =>
+      val rs = slice.map(_._2)
       val stats =
-        if (a.anyDv) Map.empty[String, (Long, Long)]
-        else statCols.filter(c => a.miss.getOrElse(c, 0L) == 0L &&
-            a.lo.contains(c))
-          .map(c => c -> ((a.lo(c), a.hi(c)))).toMap
-      (vals, a.live, stats)
+        if (rs.exists(_.getAs[Int]("__anydv") > 0))
+          Map.empty[String, (Long, Long)]
+        else statCols.filter(c =>
+            rs.forall(_.getAs[Long](s"__miss_$c") == 0L))
+          .map(c => c -> ((rs.map(_.getAs[Long](s"__min_$c")).min,
+            rs.map(_.getAs[Long](s"__max_$c")).max))).toMap
+      (vals, rs.map(_.getAs[Long]("__live")).sum, stats)
     }.filter(_._2 > 0L)))
   }
 
@@ -958,6 +849,36 @@ class Warehouse(spark: SparkSession, dir: String,
     StructField("dv", StringType, nullable = false),
     StructField("dvRows", LongType, nullable = false)))
 
+  /** The columnar manifest's schema: [[mfpFixed]], a `__lo_/__hi_<c>`
+    * pair per stat column, a `__hll_<c>` sketch per embedded NDV
+    * column. Rows are [[Warehouse.columnarRow]]. */
+  private def columnarSchema(statCols: Seq[String],
+      ndvCols: Seq[String]): StructType =
+    StructType(mfpFixed.fields ++ statCols.flatMap(c => Seq(
+      StructField(s"__lo_$c", LongType, nullable = true),
+      StructField(s"__hi_$c", LongType, nullable = true))) ++
+      ndvCols.map(c =>
+        StructField(s"__hll_$c", BinaryType, nullable = true)))
+
+  /** The stat columns a columnar relation carries `__lo_/__hi_` pairs
+    * for. */
+  private def statColumnsOf(df: DataFrame): Seq[String] =
+    df.columns.toSeq.collect {
+      case n if n.startsWith("__lo_") => n.stripPrefix("__lo_") }
+
+  /** A columnar-manifest row back as an entry carrying its `statCols`
+    * stats (Nil = a slim entry: rel and counters, no stats map). Rows
+    * lead with [[mfpFixed]]'s columns in order, as every checkpoint and
+    * [[entriesRelationAt]] lay them out. */
+  private def entryOf(r: Row, statCols: Seq[String]): FileEntry =
+    FileEntry(r.getString(0), r.getLong(1),
+      statCols.flatMap { c =>
+        val lo = r.fieldIndex(s"__lo_$c")
+        if (r.isNullAt(lo)) None
+        else Some(c -> ((r.getLong(lo), r.getAs[Long](s"__hi_$c"))))
+      }.toMap,
+      r.getLong(2), r.getString(3), r.getLong(4))
+
   private def writeColumnarManifest(name: String, version: Long,
       entries: Seq[FileEntry]): Unit = {
     val fs = fileSystem
@@ -975,11 +896,6 @@ class Warehouse(spark: SparkSession, dir: String,
     // parquet parts — the price of never walking the sidecar dir at
     // plan time.
     val ndvCols = specsNow.get(name).map(_.ndvColumns).getOrElse(Nil)
-    val schema = StructType(mfpFixed.fields ++ statCols.flatMap(c => Seq(
-      StructField(s"__lo_$c", LongType, nullable = true),
-      StructField(s"__hi_$c", LongType, nullable = true))) ++
-      ndvCols.map(c =>
-        StructField(s"__hll_$c", BinaryType, nullable = true)))
     // a few hundred k entries per task: parallel enough to read
     // distributed, few enough files to stay listing-cheap
     val parts = math.max(1, math.min(32, (entries.size / 262144) + 1))
@@ -988,27 +904,13 @@ class Warehouse(spark: SparkSession, dir: String,
       hadoopConf)
     val rows = spark.sparkContext.parallelize(entries, parts)
       .mapPartitions { it =>
-        def sketch(tfs: org.apache.hadoop.fs.FileSystem, rel: String,
-            c: String): Array[Byte] = {
-          val p = new Path(ndir, Warehouse.Sidecars.ndvName(rel, c))
-          if (!tfs.exists(p)) null
-          else {
-            val in = tfs.open(p)
-            try in.readAllBytes() finally in.close()
-          }
-        }
         val tfs = new Path(ndir).getFileSystem(conf.value)
-        it.map { e =>
-          Row.fromSeq(Seq(e.rel, e.bytes, e.rows, e.dv, e.dvRows) ++
-            statCols.flatMap(c => e.stats.get(c) match {
-              case Some((lo, hi)) => Seq[Any](lo, hi)
-              case None => Seq[Any](null, null)
-            }) ++ ndvCols.map(c => sketch(tfs, e.rel, c)))
-        }
+        it.map(e => Warehouse.columnarRow(e, statCols,
+          ndvCols.map(Warehouse.Sidecars.readNdv(tfs, ndir, e.rel, _))))
       }
     val tmp = new Path(manifestDir(name),
       s".tmp-mfp-${java.util.UUID.randomUUID}")
-    spark.createDataFrame(rows, schema)
+    spark.createDataFrame(rows, columnarSchema(statCols, ndvCols))
       .write.mode("overwrite").parquet(tmp.toString)
     // directory rename is the atomic publish; a loser (concurrent
     // committer of the same checkpoint writes identical content) just
@@ -1047,20 +949,6 @@ class Warehouse(spark: SparkSession, dir: String,
     None
   }
 
-  /** DISTRIBUTED stat-range file pruning: resolve `version`'s live
-    * entries WITHOUT folding the full manifest on the driver — a
-    * parquet scan of the columnar checkpoint with the range conditions
-    * pushed down, collecting only surviving entries, plus a driver-side
-    * replay of the ≤ interval−1 delta manifests on top (each bounded by
-    * its commit's batch, never the table). `ranges` are long-encoded
-    * [lo, hi] per column, identical semantics to the driver filter
-    * (`stats.get(c).forall(overlap)`): files without stats for a column
-    * always survive it.
-    *
-    * None = no columnar checkpoint serves this version (small table,
-    * pre-columnar history, or a crashed sidecar write) — callers fall
-    * back to the [[loadAt]] fold, which the snapshot cache amortizes.
-    */
   /** Replay the delta manifests in `(ckpt, version]` into batch-bounded
     * driver state: later versions win per rel; a re-add clears a prior
     * remove. Each delta is bounded by its commit's batch — the whole
@@ -1093,38 +981,43 @@ class Warehouse(spark: SparkSession, dir: String,
     (removed, upserts)
   }
 
-  /** The head snapshot's entry list AS A DISTRIBUTED RELATION —
-    * (rel, bytes, rows, dv, dvRows) served from the columnar checkpoint
-    * parquet plus the delta replay (checkpoint entries touched by a
-    * delta anti-join out via a broadcast of the batch-bounded touched
-    * set; delta adds union in from a driver local relation). Metadata
-    * relations (`t.files` / `t.partitions`) plan over this, so
-    * `SELECT count(*) FROM t.files` at 800k files never materializes
-    * the entry list on one node. None when no columnar checkpoint
-    * serves the head — at that size the driver fold is the cheaper
-    * path and callers fall back to it.
+  /** The head snapshot's entry list AS A DISTRIBUTED RELATION — see
+    * [[entriesRelationAt]]. Metadata relations (`t.files` /
+    * `t.partitions`) plan over this, so `SELECT count(*) FROM t.files`
+    * at 800k files never materializes the entry list on one node.
     */
   private[graft] def entriesRelation(name: String): Option[DataFrame] =
     versions(name).lastOption
       .flatMap(v => entriesRelationAt(name, v))
 
-  /** [[entriesRelation]] for ANY committed version — time-traveled
-    * metadata relations (`t.files VERSION AS OF n`) resolve through
-    * the checkpoint at-or-below `version` plus the same batch-bounded
-    * delta replay [[prunedEntries]] uses, so a versioned metadata fold
-    * at 800k entries plans as distributed as the head's.
+  /** THE snapshot relation: `version`'s live entries as a distributed
+    * relation with every column the columnar checkpoint has — the fixed
+    * columns, the `__lo_/__hi_<c>` stat pairs and the `__hll_<c>`
+    * sketches. The only code that knows how a version's entries come
+    * from the checkpoint at-or-below it plus the ≤ interval−1 deltas
+    * above: checkpoint rows a delta touched anti-join out via a
+    * broadcast of the batch-bounded touched set, and the delta upserts
+    * union in as local rows with their own stats
+    * ([[Warehouse.columnarRow]]; a stat column only upserts carry
+    * reads null on checkpoint rows, an upsert's sketch reads null).
+    * Every distributed metadata fold — row counts, min/max, partition
+    * stats, NDV, file prunes, slim lists, time-traveled `t.files` — is
+    * one query over it, so a versioned fold at 800k entries plans as
+    * distributed as the head's. Each build counts one
+    * [[Warehouse.columnarPrunes]]. None when no columnar checkpoint
+    * serves the version — at that size the driver fold is the cheaper
+    * path and callers fall back to it.
     */
   private[graft] def entriesRelationAt(name: String,
       version: Long): Option[DataFrame] = {
     import org.apache.spark.sql.functions.broadcast
+    import scala.jdk.CollectionConverters._
     val fs = fileSystem
-    val v = version
-    val ckpt = checkpointBelow(name, v)
+    val ckpt = checkpointBelow(name, version)
       .filter(x => fs.exists(mfpPath(name, x)))
       .getOrElse(return None)
-    val (removed, upserts) = deltaState(name, ckpt, v)
+    val (removed, upserts) = deltaState(name, ckpt, version)
     val base = spark.read.parquet(mfpPath(name, ckpt).toString)
-      .select("rel", "bytes", "rows", "dv", "dvRows")
     val touched = (removed ++ upserts.keysIterator).toSeq.sorted
     val kept =
       if (touched.isEmpty) base
@@ -1134,10 +1027,14 @@ class Warehouse(spark: SparkSession, dir: String,
         Seq("rel"), "left_anti")
     Warehouse.columnarPrunes.incrementAndGet()
     Some(if (upserts.isEmpty) kept
-      else kept.unionByName(spark.createDataFrame(
-        upserts.valuesIterator.toSeq
-          .map(e => (e.rel, e.bytes, e.rows, e.dv, e.dvRows)))
-        .toDF("rel", "bytes", "rows", "dv", "dvRows")))
+      else {
+        val ups = upserts.valuesIterator.toSeq
+        val statCols = ups.iterator.flatMap(_.stats.keysIterator)
+          .toSeq.distinct.sorted
+        kept.unionByName(spark.createDataFrame(
+          ups.map(Warehouse.columnarRow(_, statCols, Nil)).asJava,
+          columnarSchema(statCols, Nil)), allowMissingColumns = true)
+      })
   }
 
   /** `version`'s live entries WITHOUT their stats maps — the bounded
@@ -1145,14 +1042,13 @@ class Warehouse(spark: SparkSession, dir: String,
     * skipping: the lazy path's UNFILTERED cold scans and `inputFiles`,
     * which previously fell back to the full [[loadAt]] fold (~0.3 GB of
     * FileEntry state at 800k entries, dominated by the per-entry stats
-    * maps). Collected DISTRIBUTED from the columnar checkpoint + delta
-    * replay at ~150 B/entry (rel + counters only — the stats maps, the
-    * heavy term, are never built), memoized per confirmed version under
-    * an entry-count budget ([[Warehouse.slims]]). Sound
-    * wherever no stat skipping is possible: a scan with NO translatable
-    * data filter treats absent stats as keep-everything, which here is
-    * exactly right. None when no columnar checkpoint serves the
-    * version.
+    * maps). Collected DISTRIBUTED from the snapshot relation at
+    * ~150 B/entry (rel + counters only — the stats maps, the heavy
+    * term, are never built), memoized per confirmed version under an
+    * entry-count budget ([[Warehouse.slims]]). Sound wherever no stat
+    * skipping is possible: a scan with NO translatable data filter
+    * treats absent stats as keep-everything, which here is exactly
+    * right. None when no columnar checkpoint serves the version.
     */
   private[graft] def slimEntriesAt(name: String,
       version: Long): Option[Seq[FileEntry]] = {
@@ -1170,117 +1066,103 @@ class Warehouse(spark: SparkSession, dir: String,
     val cacheable = isVisible(name, version)
     val rel = entriesRelationAt(name, version).getOrElse(return None)
     val slim = rel.select("rel", "bytes", "rows", "dv", "dvRows")
-      .collect().toSeq
-      .map(r => FileEntry(r.getString(0), r.getLong(1),
-        Map.empty[String, (Long, Long)], r.getLong(2), r.getString(3),
-        r.getLong(4)))
-      .sortBy(_.rel)
+      .collect().toSeq.map(entryOf(_, Nil)).sortBy(_.rel)
     if (cacheable) Warehouse.slims.put(key, slim)
     Some(slim)
   }
 
-  /** [[slimEntriesAt]] as a CHUNKED rel-sorted stream — the unfiltered
-    * cold-scan feed with driver entry state bounded by a CONSTANT chunk
-    * instead of |files| (112 MiB at 800k slim entries; ~1.1 GiB at the
-    * 8M design point). A slim-cache hit serves the memo's iterator for
-    * free; otherwise the columnar checkpoint + delta replay is HASH-
-    * repartitioned on `rel` into ~64k-entry chunks (~10 MiB each; hash,
-    * not range — a range exchange costs an extra sampling scan), sorted
-    * within each chunk, and drained partition-at-a-time via
-    * `toLocalIterator`. Rel order holds within a chunk, which is what
-    * lets the streamed `PartitionDirectory` build fold same-dir runs in
-    * one pass; a dir whose files hash across chunks simply emits one
-    * directory per chunk-run with equal value rows — exactly what
-    * FileSourceScanExec's concatenation expects. The
-    * stream never memoizes (the point is not to hold the list);
-    * warm-path economics live in the cross-plan directory memo, which
-    * caches the BUILT directories under its own file budget.
-    * @param files the snapshot's entry count (from [[lazySnapshotAgg]]),
-    *   sizing the hash repartition + within-partition sort (no global
-    *   range order — only within-chunk rel order is guaranteed)
+  /** `rel`'s slim entries as a CHUNKED rel-sorted stream: driver entry
+    * state bounded by a CONSTANT chunk instead of the row count
+    * (112 MiB at 800k slim entries; ~1.1 GiB at the 8M design point).
+    * The relation is HASH-repartitioned on `rel` into ~64k-entry
+    * chunks (~10 MiB each; hash, not range — a range exchange costs an
+    * extra sampling scan), sorted within each chunk, and drained
+    * partition-at-a-time via `toLocalIterator`. Rel order holds within
+    * a chunk, which is what lets the streamed `PartitionDirectory`
+    * build fold same-dir runs in one pass; a dir whose files hash
+    * across chunks simply emits one directory per chunk-run with equal
+    * value rows — exactly what FileSourceScanExec's concatenation
+    * expects. Streamed entries carry EMPTY stats maps by design — the
+    * safe direction, since a downstream re-check against empty stats
+    * can only prune LESS, never more.
+    * @param rows the relation's row count, sizing the repartition
+    */
+  private def chunkedStream(rel: DataFrame, rows: Long): Iterator[FileEntry] = {
+    import org.apache.spark.sql.functions.col
+    import scala.jdk.CollectionConverters._
+    rel.select("rel", "bytes", "rows", "dv", "dvRows")
+      .repartition(math.max(1L, (rows + 65535L) / 65536L).toInt, col("rel"))
+      .sortWithinPartitions("rel")
+      .toLocalIterator().asScala
+      .map(entryOf(_, Nil))
+  }
+
+  /** [[slimEntriesAt]] as a [[chunkedStream]] — the unfiltered
+    * cold-scan feed. A slim-cache hit serves the memo's iterator for
+    * free. The stream never memoizes (the point is not to hold the
+    * list); warm-path economics live in the cross-plan directory memo,
+    * which caches the BUILT directories under its own file budget.
+    * @param files the snapshot's entry count (from [[lazySnapshotAgg]])
     */
   private[graft] def slimEntriesStream(name: String, version: Long,
       files: Long): Option[Iterator[FileEntry]] = {
-    import org.apache.spark.sql.functions.col
     Warehouse.slims.get(cacheKey(name, version)) match {
       case Some(hit) => return Some(hit.iterator)
       case None =>
     }
     entriesRelationAt(name, version).map { rel =>
       Warehouse.streamedLists.incrementAndGet()
-      val chunks = math.max(1L, (files + 65535L) / 65536L).toInt
-      import scala.jdk.CollectionConverters._
-      rel.select("rel", "bytes", "rows", "dv", "dvRows")
-        .repartition(chunks, col("rel"))
-        .sortWithinPartitions("rel")
-        .toLocalIterator().asScala
-        .map(r => FileEntry(r.getString(0), r.getLong(1),
-          Map.empty[String, (Long, Long)], r.getLong(2), r.getString(3),
-          r.getLong(4)))
+      chunkedStream(rel, files)
     }
   }
 
-  /** @param relConjuncts CNF of `/k=v/` path-segment constraints from
+  /** The filtered prune as ONE DataFrame: the snapshot relation
+    * restricted to the stat-range + rel-segment condition, evaluated
+    * inside the distributed scan (the predicates push through the
+    * overlay's anti-join and union into the checkpoint's parquet scan),
+    * sketch columns dropped so they never ride a survivor collect.
+    * `ranges` are long-encoded [lo, hi] per column: an entry without
+    * stats for a column always survives it, so does every entry when no
+    * entry has stats for it. None when no columnar checkpoint serves
+    * the version (callers fall back to the eager fold).
+    *
+    * @param relConjuncts CNF of `/k=v/` path-segment constraints from
     *   partition-filter translation ([[ManifestFileIndex.partitionSegments]]):
     *   every outer element must match (some alternative substring of
-    *   `'/' + rel`) for an entry to survive. Evaluated INSIDE the
-    *   distributed scan, so a one-partition read of an 800k-entry
-    *   table collects only that partition's entries.
+    *   `'/' + rel`) for an entry to survive — so a one-partition read
+    *   of an 800k-entry table collects only that partition's entries.
     */
-  /** The shared DISTRIBUTED half of the filtered prune: the columnar
-    * checkpoint restricted to the stat-range + rel-segment condition,
-    * plus the delta overlay every drain must apply. None when no
-    * columnar checkpoint serves the version (callers fall back to the
-    * eager fold). */
   private def pruneScan(name: String, version: Long,
       ranges: Map[String, (Long, Long)],
-      relConjuncts: Seq[Seq[String]])
-      : Option[(DataFrame,
-          scala.collection.mutable.HashSet[String],
-          scala.collection.mutable.LinkedHashMap[String, FileEntry],
-          Seq[String])] = {
+      relConjuncts: Seq[Seq[String]]): Option[DataFrame] = {
     import org.apache.spark.sql.functions.{col, concat, lit}
-    val fs = fileSystem
-    val ckpt = checkpointBelow(name, version)
-      .filter(v => fs.exists(mfpPath(name, v)))
-      .getOrElse(return None)
-    val (removed, upserts) = deltaState(name, ckpt, version)
-    // project the fixed + stat columns only: r12 checkpoints may carry
-    // embedded HLL sketch bytes (`__hll_*`), which must never ride the
-    // survivor collect
-    val raw = spark.read.parquet(mfpPath(name, ckpt).toString)
-    val base = raw.select(raw.columns.toSeq
-      .filterNot(_.startsWith("__hll_")).map(col): _*)
-    val statCond = ranges.foldLeft(lit(true)) { case (acc, (c, (lo, hi))) =>
-      if (!base.columns.contains(s"__lo_$c")) acc // no file has stats: keep all
-      else acc && (col(s"__lo_$c").isNull ||
-        (col(s"__hi_$c") >= lit(lo) && col(s"__lo_$c") <= lit(hi)))
+    entriesRelationAt(name, version).map { rel =>
+      val statCond = ranges.foldLeft(lit(true)) { case (acc, (c, (lo, hi))) =>
+        if (!rel.columns.contains(s"__lo_$c")) acc
+        else acc && (col(s"__lo_$c").isNull ||
+          (col(s"__hi_$c") >= lit(lo) && col(s"__lo_$c") <= lit(hi)))
+      }
+      val slashRel = concat(lit("/"), col("rel"))
+      val cond = relConjuncts.foldLeft(statCond) { (acc, alts) =>
+        // an EMPTY disjunction (a derived constraint whose enumerable
+        // value set is empty — contradictory pushed ranges) keeps nothing
+        if (alts.isEmpty) acc && lit(false)
+        else acc && alts.map(s => slashRel.contains(lit(s))).reduce(_ || _)
+      }
+      rel.where(cond)
+        .drop(rel.columns.filter(_.startsWith("__hll_")).toSeq: _*)
     }
-    val slashRel = concat(lit("/"), col("rel"))
-    val cond = relConjuncts.foldLeft(statCond) { (acc, alts) =>
-      // an EMPTY disjunction (a derived constraint whose enumerable
-      // value set is empty — contradictory pushed ranges) keeps nothing
-      if (alts.isEmpty) acc && lit(false)
-      else acc && alts.map(s => slashRel.contains(lit(s))).reduce(_ || _)
-    }
-    val statColsInDf = base.columns.toSeq.collect {
-      case n if n.startsWith("__lo_") => n.stripPrefix("__lo_") }
-    Some((base.where(cond), removed, upserts, statColsInDf))
   }
 
-  /** A delta upsert passes the same range check the in-scan statCond
-    * applied to checkpoint rows (delta state is batch-bounded). */
-  private def entryOverlaps(e: FileEntry,
-      ranges: Map[String, (Long, Long)]): Boolean =
-    ranges.forall { case (c, (lo, hi)) =>
-      e.stats.get(c).forall { case (mn, mx) => mx >= lo && mn <= hi } }
-
-  /** ... and the same rel-segment CNF, driver-side. */
-  private def entryRelKeep(e: FileEntry,
-      relConjuncts: Seq[Seq[String]]): Boolean =
-    relConjuncts.forall(alts =>
-      alts.exists(s => ("/" + e.rel).contains(s)))
-
+  /** DISTRIBUTED stat-range file pruning: `version`'s live entries
+    * restricted to `ranges` / `relConjuncts` ([[pruneScan]]) WITHOUT
+    * folding the full manifest on the driver — only the survivors are
+    * collected, with their stats, rel-sorted.
+    *
+    * None = no columnar checkpoint serves this version (small table,
+    * pre-columnar history, or a crashed sidecar write) — callers fall
+    * back to the [[loadAt]] fold, which the snapshot cache amortizes.
+    */
   private[graft] def prunedEntries(name: String, version: Long,
       ranges: Map[String, (Long, Long)],
       relConjuncts: Seq[Seq[String]] = Nil): Option[Seq[FileEntry]] = {
@@ -1298,82 +1180,39 @@ class Warehouse(spark: SparkSession, dir: String,
       case None =>
     }
     val memoizable = isVisible(name, version)
-    val (filtered, removed, upserts, statColsInDf) =
+    val filtered =
       pruneScan(name, version, ranges, relConjuncts).getOrElse(return None)
-    val survivors = filtered.collect().map { r =>
-      FileEntry(r.getString(r.fieldIndex("rel")),
-        r.getLong(r.fieldIndex("bytes")),
-        statColsInDf.flatMap { c =>
-          val lo = r.fieldIndex(s"__lo_$c")
-          if (r.isNullAt(lo)) None
-          else Some(c -> ((r.getLong(lo),
-            r.getLong(r.fieldIndex(s"__hi_$c")))))
-        }.toMap,
-        r.getLong(r.fieldIndex("rows")),
-        r.getString(r.fieldIndex("dv")),
-        r.getLong(r.fieldIndex("dvRows")))
-    }
-    Warehouse.columnarPrunes.incrementAndGet()
-    val result = (survivors.iterator
-      .filterNot(e => removed(e.rel) || upserts.contains(e.rel)) ++
-      upserts.valuesIterator.filter(e =>
-        entryOverlaps(e, ranges) && entryRelKeep(e, relConjuncts)))
-      .toSeq.sortBy(_.rel)
+    val statCols = statColumnsOf(filtered)
+    val result = filtered.collect().toSeq.map(entryOf(_, statCols))
+      .sortBy(_.rel)
     // unselective probes stay uncached — re-pruning is no worse
     if (memoizable && result.size <= Warehouse.pruneMemoMaxSurvivors)
       Warehouse.pruneMemo.put(memoKey, result)
     Some(result)
   }
 
-  /** The filtered prune as a CHUNKED stream — [[slimEntriesStream]]'s
+  /** The filtered prune as a [[chunkedStream]] — [[slimEntriesStream]]'s
     * driver-residency contract extended to WEAKLY-SELECTIVE filters:
     * a 90%-survivor stat-range filter at the 8M-file design point
     * would hold ~O(|files|) entries through [[prunedEntries]]'
-    * collect; here survivors drain partition-at-a-time in rel-sorted
-    * ~64k-entry chunks (hash repartition + within-partition sort, the
-    * same shape [[slimEntriesStream]] feeds the streamed directory
-    * fold). Returns None when no checkpoint serves the version OR the
-    * survivor count — one exact, distributed columnar aggregate, paid
-    * only on asks already past the caller's table-size gate — is
-    * at/below `threshold`: the collect+memoize path is cheaper there
-    * and serves repeated asks for free. Delta-overlay correctness
-    * matches [[prunedEntries]]: removed and re-upserted rels drop out
-    * of the checkpoint stream; surviving upserts (batch-bounded by
-    * contract) append at the end as their own chunk-runs, which the
-    * streamed directory fold handles like any cross-chunk dir split.
-    * Never memoizes — the point is not holding the list; warm-path
-    * economics live in the cross-plan directory memo.
+    * collect; here survivors drain partition-at-a-time. Returns None
+    * when no checkpoint serves the version OR the survivor count — one
+    * exact, distributed aggregate, paid only on asks already past the
+    * caller's table-size gate — is at/below `threshold`: the
+    * collect+memoize path is cheaper there and serves repeated asks for
+    * free. Never memoizes — the point is not holding the list;
+    * warm-path economics live in the cross-plan directory memo.
     */
   private[graft] def prunedEntriesStream(name: String, version: Long,
       ranges: Map[String, (Long, Long)],
       relConjuncts: Seq[Seq[String]],
       threshold: Long): Option[Iterator[FileEntry]] = {
-    import org.apache.spark.sql.functions.col
-    val (filtered, removed, upserts, _) =
+    val filtered =
       pruneScan(name, version, ranges, relConjuncts).getOrElse(return None)
-    val slim = filtered.select("rel", "bytes", "rows", "dv", "dvRows")
-    val cnt = slim.count()
+    val cnt = filtered.count()
     if (cnt <= threshold) return None
     Warehouse.streamedPrunes.incrementAndGet()
-    val chunks = math.max(1L, (cnt + 65535L) / 65536L).toInt
-    import scala.jdk.CollectionConverters._
-    val ckptIt = slim
-      .repartition(chunks, col("rel"))
-      .sortWithinPartitions("rel")
-      .toLocalIterator().asScala
-      // streamed entries carry EMPTY stats maps BY DESIGN (chunk-slim:
-      // the ranges were already applied distributed above) — the safe
-      // direction, since a downstream re-check against empty stats can
-      // only prune LESS, never more; do not "fix" this into a collect
-      // of the stat columns (ManifestScaleSpec proves file-set
-      // equality with the collect path as-is)
-      .map(r => FileEntry(r.getString(0), r.getLong(1),
-        Map.empty[String, (Long, Long)], r.getLong(2), r.getString(3),
-        r.getLong(4)))
-      .filterNot(e => removed(e.rel) || upserts.contains(e.rel))
-    val upsertIt = upserts.valuesIterator.filter(e =>
-      entryOverlaps(e, ranges) && entryRelKeep(e, relConjuncts))
-    Some(ckptIt ++ upsertIt)
+    Some(chunkedStream(filtered, cnt))
   }
 
   /** `version`'s entries restricted to `ranges`, picking the cheapest
@@ -2750,14 +2589,14 @@ class Warehouse(spark: SparkSession, dir: String,
     Some(agg)
   }
 
-  /** Per-column [min, max] extrema over `version`'s live entries,
-    * distributed-folded from the columnar checkpoint (one metadata-
-    * sized agg) + driver-merged batch-bounded delta upserts — the lazy
-    * path's half of [[statsRelation]]'s min/max publication. A column
-    * qualifies only when EVERY live entry carries its stat (a missing
-    * stat anywhere withholds the column — never a wrong envelope).
-    * Memoized per confirmed version; empty when no columnar checkpoint
-    * serves it.
+  /** Per-column [min, max] extrema over `version`'s live entries — one
+    * metadata-sized aggregate over the snapshot relation
+    * ([[entriesRelationAt]]); the lazy path's half of
+    * [[statsRelation]]'s min/max publication and [[metaMinMax]]'s cold
+    * answer. A column qualifies only when EVERY live entry carries its
+    * stat (a missing stat anywhere withholds the column — never a wrong
+    * envelope). Memoized per confirmed version; empty when no columnar
+    * checkpoint serves it.
     */
   private def lazyColMinMax(name: String,
       version: Long): Map[String, (Long, Long)] = {
@@ -2766,64 +2605,33 @@ class Warehouse(spark: SparkSession, dir: String,
       case Some(hit) => return hit
       case None =>
     }
-    import org.apache.spark.sql.functions.{
-      broadcast, col, count, lit, max, min, sum, when}
-    val fs = fileSystem
-    val ckpt = checkpointBelow(name, version)
-      .filter(v => fs.exists(mfpPath(name, v)))
-      .getOrElse(return Map.empty)
-    val (removed, upserts) = deltaState(name, ckpt, version)
-    val base = spark.read.parquet(mfpPath(name, ckpt).toString)
-    val statCols = base.columns.toSeq.collect {
-      case n if n.startsWith("__lo_") => n.stripPrefix("__lo_") }
-    if (statCols.isEmpty) {
-      Warehouse.lazyMinMax.put(key, Map.empty); return Map.empty
-    }
-    val touched = (removed ++ upserts.keysIterator).toSeq.sorted
-    val kept =
-      if (touched.isEmpty) base
-      else base.join(
-        broadcast(spark.createDataFrame(touched.map(Tuple1(_)))
-          .toDF("rel")),
-        Seq("rel"), "left_anti")
-    val aggs = statCols.flatMap(c => Seq(
-      min(col(s"__lo_$c")), max(col(s"__hi_$c")),
-      sum(when(col(s"__lo_$c").isNull, 1L).otherwise(0L))))
-    Warehouse.columnarPrunes.incrementAndGet()
-    val r = kept.agg(count(lit(1)), aggs: _*).head()
-    val keptCount = r.getLong(0)
-    val ups = upserts.valuesIterator.toSeq
+    import org.apache.spark.sql.functions.{col, count, lit, max, min, sum, when}
+    val rel = entriesRelationAt(name, version).getOrElse(return Map.empty)
+    val statCols = statColumnsOf(rel)
     val out: Map[String, (Long, Long)] =
-      statCols.zipWithIndex.flatMap { case (c, i) =>
-        val (loI, hiI, nullI) = (1 + 3 * i, 2 + 3 * i, 3 + 3 * i)
-        val coveredBase = keptCount == 0L ||
-          (!r.isNullAt(nullI) && r.getLong(nullI) == 0L)
-        if (!coveredBase || ups.exists(e => !e.stats.contains(c))) None
-        else {
-          val ranges = (if (keptCount == 0L) Nil
-            else Seq((r.getLong(loI), r.getLong(hiI)))) ++
-            ups.flatMap(_.stats.get(c))
-          if (ranges.isEmpty) None
-          else Some(c -> ((ranges.map(_._1).min, ranges.map(_._2).max)))
-        }
-      }.toMap
+      if (statCols.isEmpty) Map.empty
+      else {
+        val r = rel.agg(count(lit(1)), statCols.flatMap(c => Seq(
+          min(col(s"__lo_$c")), max(col(s"__hi_$c")),
+          sum(when(col(s"__lo_$c").isNull, 1L).otherwise(0L)))): _*).head()
+        statCols.zipWithIndex.collect {
+          case (c, i) if r.getLong(0) > 0L && r.getLong(3 + 3 * i) == 0L =>
+            c -> ((r.getLong(1 + 3 * i), r.getLong(2 + 3 * i)))
+        }.toMap
+      }
     Warehouse.lazyMinMax.put(key, out)
     out
   }
 
   /** NDV estimates over `version`'s live entries — the lazy
-    * counterpart of [[ndvEstimates]]. Two paths, fastest first:
-    *
-    *   1. SKETCHES EMBEDDED in the columnar checkpoint (`__hll_<c>`
-    *      binary columns, written by [[writeColumnarManifest]] since
-    *      r12): union them inside ONE parquet scan of the kept base —
-    *      zero per-file sidecar opens at plan time — plus driver-side
-    *      sidecar reads for the batch-bounded delta upserts only.
-    *   2. Older checkpoints without the columns: the per-file sidecar
-    *      union with rels STREAMED from the columnar relation (the
-    *      driver never sees a rel) — the r12.0 shape.
-    *
-    * A missing sketch anywhere withholds the column (never
+    * counterpart of [[ndvEstimates]]: ONE sketch-union pass over the
+    * snapshot relation ([[entriesRelationAt]]). Per row and column it
+    * unions the sketch EMBEDDED in the columnar checkpoint
+    * (`__hll_<c>`, written by [[writeColumnarManifest]]) when present
+    * and non-null — zero per-file sidecar opens at plan time — and
+    * otherwise opens the file's sidecar task-side (delta upserts,
+    * checkpoints that predate embedding), so the driver never sees a
+    * rel. A missing sketch anywhere withholds the column (never
     * undercount). Memoized per confirmed version — complete answers
     * only, like [[ndvEstimates]]' memo.
     */
@@ -2842,112 +2650,41 @@ class Warehouse(spark: SparkSession, dir: String,
 
   private def lazyNdvCompute(name: String, version: Long,
       cols: Seq[String]): Map[String, Long] = {
-    import org.apache.spark.sql.functions.{broadcast, col}
-    val fs = fileSystem
-    val ckptOpt = checkpointBelow(name, version)
-      .filter(v => fs.exists(mfpPath(name, v)))
-    // ---- path 1: embedded sketches ----
-    ckptOpt.foreach { ckpt =>
-      val raw = spark.read.parquet(mfpPath(name, ckpt).toString)
-      if (cols.forall(c => raw.columns.contains(s"__hll_$c"))) {
-        val (removed, upserts) = deltaState(name, ckpt, version)
-        val touched = (removed ++ upserts.keysIterator).toSeq.sorted
-        val proj = raw.select(cols.map(c => col(s"__hll_$c")) :+
-          col("rel"): _*)
-        val kept =
-          if (touched.isEmpty) proj
-          else proj.join(
-            broadcast(spark.createDataFrame(touched.map(Tuple1(_)))
-              .toDF("rel")),
-            Seq("rel"), "left_anti")
-        Warehouse.columnarPrunes.incrementAndGet()
-        val partials = kept.rdd.mapPartitions { it =>
-          val unions = cols.map(_ =>
-            new org.apache.datasketches.hll.Union(12))
-          val missing = Array.fill(cols.size)(false)
-          it.foreach { r =>
-            var i = 0
-            while (i < cols.length) {
-              if (!missing(i)) {
-                if (r.isNullAt(i)) missing(i) = true
-                else unions(i).update(org.apache.datasketches.hll
-                  .HllSketch.heapify(r.getAs[Array[Byte]](i)))
-              }
-              i += 1
-            }
-          }
-          Iterator.single(cols.indices.map(i =>
-            (missing(i), unions(i).getResult.toCompactByteArray)).toSeq)
-        }.collect()
-        // delta upserts: batch-bounded driver-side sidecar reads
-        val ups = upserts.valuesIterator.toSeq
-        return cols.zipWithIndex.flatMap { case (c, i) =>
-          if (partials.exists(_(i)._1)) None
-          else {
-            val u = new org.apache.datasketches.hll.Union(12)
-            partials.foreach(p => u.update(
-              org.apache.datasketches.hll.HllSketch.heapify(p(i)._2)))
-            var complete = true
-            ups.foreach { e =>
-              if (complete) {
-                val p = new Path(ndvDir(name), ndvFileName(e.rel, c))
-                if (!fs.exists(p)) complete = false
-                else {
-                  val in = fs.open(p)
-                  val bytes = try in.readAllBytes() finally in.close()
-                  u.update(org.apache.datasketches.hll
-                    .HllSketch.heapify(bytes))
-                }
-              }
-            }
-            if (!complete) None
-            else Some(c -> math.round(u.getEstimate))
-          }
-        }.toMap
-      }
-    }
-    // ---- path 2: stream rels, open sidecars task-side ----
+    import org.apache.spark.sql.functions.{col, lit}
+    import org.apache.datasketches.hll.{HllSketch, Union}
     val rel = entriesRelationAt(name, version).getOrElse(return Map.empty)
+    val embedded = rel.select(col("rel") +: cols.map(c =>
+      if (rel.columns.contains(s"__hll_$c")) col(s"__hll_$c")
+      else lit(null).cast(BinaryType)): _*)
     val ndir = ndvDir(name).toString
     val conf = new org.apache.spark.util.SerializableConfiguration(
       hadoopConf)
-    val colsB = spark.sparkContext.broadcast(cols)
-    val partials = rel.select("rel").rdd.map(_.getString(0))
-      .mapPartitions { it =>
-        // sidecar names recomputed task-side ([[Warehouse.Sidecars]])
-        // so only the partials travel back
-        def nameOf(r: String, c: String): String =
-          Warehouse.Sidecars.ndvName(r, c)
-        val base = new Path(ndir)
-        val tfs = base.getFileSystem(conf.value)
-        val cs = colsB.value
-        val unions = cs.map(_ =>
-          new org.apache.datasketches.hll.Union(12))
-        val missing = Array.fill(cs.size)(false)
-        it.foreach { r =>
-          cs.zipWithIndex.foreach { case (c, i) =>
-            if (!missing(i)) {
-              val p = new Path(base, nameOf(r, c))
-              if (!tfs.exists(p)) missing(i) = true
-              else {
-                val in = tfs.open(p)
-                val bytes = try in.readAllBytes() finally in.close()
-                unions(i).update(org.apache.datasketches.hll
-                  .HllSketch.heapify(bytes))
-              }
-            }
+    val cs = cols.toArray
+    val partials = embedded.rdd.mapPartitions { it =>
+      val tfs = new Path(ndir).getFileSystem(conf.value)
+      val unions = cs.map(_ => new Union(12))
+      val missing = Array.fill(cs.length)(false)
+      it.foreach { r =>
+        var i = 0
+        while (i < cs.length) {
+          if (!missing(i)) {
+            val bytes =
+              if (!r.isNullAt(i + 1)) r.getAs[Array[Byte]](i + 1)
+              else Warehouse.Sidecars.readNdv(tfs, ndir, r.getString(0), cs(i))
+            if (bytes == null) missing(i) = true
+            else unions(i).update(HllSketch.heapify(bytes))
           }
+          i += 1
         }
-        Iterator.single(cs.indices.map(i =>
-          (i, missing(i), unions(i).getResult.toCompactByteArray)).toSeq)
-      }.collect()
-    colsB.destroy()
+      }
+      Iterator.single(cs.indices.map(i =>
+        (missing(i), unions(i).getResult.toCompactByteArray)))
+    }.collect()
     cols.zipWithIndex.flatMap { case (c, i) =>
-      if (partials.isEmpty || partials.exists(_(i)._2)) None
+      if (partials.isEmpty || partials.exists(_(i)._1)) None
       else {
-        val u = new org.apache.datasketches.hll.Union(12)
-        partials.foreach(p => u.update(
-          org.apache.datasketches.hll.HllSketch.heapify(p(i)._3)))
+        val u = new Union(12)
+        partials.foreach(p => u.update(HllSketch.heapify(p(i)._2)))
         Some(c -> math.round(u.getEstimate))
       }
     }.toMap
@@ -2985,10 +2722,6 @@ class Warehouse(spark: SparkSession, dir: String,
       CatalogStorageFormat, CatalogTable, CatalogTableType}
     import org.apache.spark.sql.catalyst.types.DataTypeUtils
     import org.apache.spark.sql.execution.datasources.LogicalRelation
-    val fs = fileSystem
-    checkpointBelow(name, version)
-      .filter(x => fs.exists(mfpPath(name, x)))
-      .getOrElse(return None)
     val agg = lazySnapshotAgg(name, version).getOrElse(return None)
     if (agg.files == 0L) return None
     val schema = tables(name)
@@ -3437,8 +3170,8 @@ class Warehouse(spark: SparkSession, dir: String,
     *       would silently corrupt every incremental consumer).
     * Delta-weighted folds stay exact across copy-on-write DML,
     * compaction, vectored deletes, and restores alike.
-    */
-  /** @param layoutBefore directory layout of the BEFORE side, when it
+    *
+    * @param layoutBefore directory layout of the BEFORE side, when it
     *   differs from `layout` — exactly one case produces that: a
     *   [[restore]] across a layout-migration boundary, whose commit
     *   removes files written under one layout and re-adds files
@@ -3946,23 +3679,7 @@ class Warehouse(spark: SparkSession, dir: String,
       maxRows: Long = 10000000L): Long = {
     import org.apache.spark.sql.functions.{coalesce, col, lit}
     val schema = tables(name)
-    val parts = partitioning(name)
-    set.keys.foreach { c =>
-      require(schema.fieldNames.contains(c),
-        s"updateVectored $name: no column $c")
-      require(!parts.contains(c),
-        s"updateVectored $name: partition column $c is not updatable " +
-          "(rows must not move partitions)")
-      require(!specsNow(name).primaryKey.contains(c),
-        s"updateVectored $name: PRIMARY KEY column $c is not updatable " +
-          "(a SET could mint a duplicate key — delete + insert instead)")
-      require(!specsNow(name).identity.exists(_.column == c),
-        s"updateVectored $name: IDENTITY column $c is engine-assigned " +
-          "and immutable")
-      require(!specsNow(name).unique.exists(_.contains(c)),
-        s"updateVectored $name: UNIQUE column $c is not updatable " +
-          "(a SET could mint a duplicate — delete + insert instead)")
-    }
+    requireUpdatable("updateVectored", name, set.keys)
     val (v, entries) = loadLatest(name)
     require(v > 0L, s"updateVectored $name: table not bootstrapped")
     val candidates = touchedFiles(name, entries, _.where(cond))
@@ -4008,10 +3725,6 @@ class Warehouse(spark: SparkSession, dir: String,
     } finally { matched.unpersist(); () }
   }
 
-  /** The manifest-planned `HadoopFsRelation` itself — the BaseRelation
-    * handed to `spark.read.format("graft-warehouse")`'s RelationProvider
-    * (see [[graft.sources.WarehouseSourceProvider]]).
-    */
   /** Monotone base→partition value maps derived from GENERATED
     * partition columns — the hidden-partitioning pruners
     * [[ManifestFileIndex]] applies so a predicate on the BASE column
@@ -4140,7 +3853,11 @@ class Warehouse(spark: SparkSession, dir: String,
     }
   }
 
-  /** @param layout partition-column override for reading entries
+  /** The manifest-planned `HadoopFsRelation` itself — the BaseRelation
+    * handed to `spark.read.format("graft-warehouse")`'s RelationProvider
+    * (see [[graft.sources.WarehouseSourceProvider]]).
+    *
+    * @param layout partition-column override for reading entries
     *   written under a PRE-MIGRATION directory layout
     *   ([[layoutAtVersion]]); None = the current spec's layout.
     */
@@ -4184,21 +3901,6 @@ class Warehouse(spark: SparkSession, dir: String,
       buckets, new ParquetFileFormat(), Map.empty)(spark)
   }
 
-  /** K2-K4 — append insert. Parquet has no JDBC-style `batchsize`, so
-    * chunking maps to output-partition sizing: rows-per-file caps the
-    * unit of write the way `chunksize=1000` caps the reference's insert
-    * batches (`script.py:171`). Commit adds the new files; nothing is
-    * ever replaced, so there is no delete at any point.
-    */
-  /** @param txn optional idempotence fence `(writerId, epoch)` — the
-    *   exactly-once contract for streaming sinks: if the table's txn
-    *   ledger already records `epoch` (or later) for `writerId`, the
-    *   append is a NO-OP — a replayed micro-batch (sink committed, then
-    *   crash before the checkpoint advanced) writes nothing twice. A
-    *   successful commit records the new watermark atomically WITH the
-    *   data (it rides the manifest's metadata line), so fence and files
-    *   can never disagree.
-    */
   /** [[append]] with AUTOMATIC SCHEMA EVOLUTION (Delta's mergeSchema):
     * columns the batch carries beyond the table schema are first added
     * to the spec via [[addColumn]] (nullable — existing files read
@@ -4238,7 +3940,22 @@ class Warehouse(spark: SparkSession, dir: String,
     append(name, df.select(full: _*), rowsPerFile, txn)
   }
 
-  /** @return (committed manifest version, rows appended) — (head, 0)
+  /** K2-K4 — append insert. Parquet has no JDBC-style `batchsize`, so
+    * chunking maps to output-partition sizing: rows-per-file caps the
+    * unit of write the way `chunksize=1000` caps the reference's insert
+    * batches (`script.py:171`). Commit adds the new files; nothing is
+    * ever replaced, so there is no delete at any point.
+    *
+    * @param txn optional idempotence fence `(writerId, epoch)` — the
+    *   exactly-once contract for streaming sinks: if the table's txn
+    *   ledger already records `epoch` (or later) for `writerId`, the
+    *   append is a NO-OP — a replayed micro-batch (sink committed, then
+    *   crash before the checkpoint advanced) writes nothing twice. A
+    *   successful commit records the new watermark atomically WITH the
+    *   data (it rides the manifest's metadata line), so fence and files
+    *   can never disagree.
+    *
+    * @return (committed manifest version, rows appended) — (head, 0)
     *   when the txn fence made the call a replay no-op. The row count
     *   comes from the committed entries' own parquet footers, so it is
     *   exact for THIS append regardless of concurrent writers (unlike
@@ -4718,27 +4435,6 @@ class Warehouse(spark: SparkSession, dir: String,
       (w.name, v, w.fresh.map(_.rows).sum) })
   }
 
-  /** MERGE upsert (copy-on-write): rows of `updates` REPLACE existing
-    * rows with the same key; unmatched update rows insert. The engine
-    * analog of `MERGE INTO` / Delta upsert — the star-schema maintenance
-    * op the reference's append-only sinks can't express (late-arriving
-    * corrected TLEs currently just accumulate; §2.12's check-then-write
-    * only prevents re-inserts).
-    *
-    * Scale shape: only the files of partitions the update batch TOUCHES
-    * are read and rewritten — cost scales with the update batch's
-    * partition footprint, not table history. The touched partition
-    * VALUES (one row per partition, not data) are collected to select
-    * those files from the manifest. Unpartitioned tables rewrite fully
-    * (copy-on-write floor). Replaced files are deleted only after the
-    * manifest commit (see class doc), so no crash can lose them.
-    *
-    * Contracts (asserted where cheap, documented where not):
-    *   - `updates` must be key-unique (caller dedups; `Dedup.keepFirst`);
-    *   - partition columns must be a pure function of the key (true for
-    *     `epoch_date` = date(epoch_utc)): a key can then never "move"
-    *     partitions, so replaced rows always live in touched partitions.
-    */
   /** Atomic REPLACE of the table's contents (SQL `INSERT OVERWRITE`,
     * pandas' `if_exists='replace'`): write `df` as new files, commit a
     * manifest referencing ONLY them. One commit — readers see the old
@@ -4825,7 +4521,28 @@ class Warehouse(spark: SparkSession, dir: String,
       Warehouse.Rebase.Never)))
   }
 
-  /** @param txn optional (writerId, epoch) idempotence fence, the
+  /** MERGE upsert (copy-on-write): rows of `updates` REPLACE existing
+    * rows with the same key; unmatched update rows insert. The engine
+    * analog of `MERGE INTO` / Delta upsert — the star-schema maintenance
+    * op the reference's append-only sinks can't express (late-arriving
+    * corrected TLEs currently just accumulate; §2.12's check-then-write
+    * only prevents re-inserts).
+    *
+    * Scale shape: only the files of partitions the update batch TOUCHES
+    * are read and rewritten — cost scales with the update batch's
+    * partition footprint, not table history. The touched partition
+    * VALUES (one row per partition, not data) are collected to select
+    * those files from the manifest. Unpartitioned tables rewrite fully
+    * (copy-on-write floor). Replaced files are deleted only after the
+    * manifest commit (see class doc), so no crash can lose them.
+    *
+    * Contracts (asserted where cheap, documented where not):
+    *   - `updates` must be key-unique (caller dedups; `Dedup.keepFirst`);
+    *   - partition columns must be a pure function of the key (true for
+    *     `epoch_date` = date(epoch_utc)): a key can then never "move"
+    *     partitions, so replaced rows always live in touched partitions.
+    *
+    * @param txn optional (writerId, epoch) idempotence fence, the
     *   [[append]] ledger shape extended to upserts: a replayed or STALE
     *   epoch is a no-op — without it, a restarted update-mode streaming
     *   writer replaying epoch N after N+1 landed would regress the
@@ -5078,17 +4795,7 @@ class Warehouse(spark: SparkSession, dir: String,
         "(engine-assigned ids cannot be merged on) — use append")
     val pkCols = specsNow(name).primaryKey
     (matchedUpdate.toSeq ++ bySourceUpdate.toSeq).foreach { case (_, set) =>
-      set.keys.foreach { c =>
-        require(schema.fieldNames.contains(c), s"mergeInto $name: no column $c")
-        require(!parts.contains(c),
-          s"mergeInto $name: partition column $c is not updatable")
-        require(!pkCols.contains(c),
-          s"mergeInto $name: PRIMARY KEY column $c is not updatable " +
-            "(a SET could mint a duplicate key — delete + insert instead)")
-        require(!specsNow(name).unique.exists(_.contains(c)),
-          s"mergeInto $name: UNIQUE column $c is not updatable " +
-            "(a SET could mint a duplicate — delete + insert instead)")
-      }
+      requireUpdatable("mergeInto", name, set.keys)
     }
     // a PK table merges ON its key: inserts are then anti-joined on the
     // PK itself and a key-unique source keeps uniqueness invariant
@@ -5798,6 +5505,30 @@ class Warehouse(spark: SparkSession, dir: String,
     finally k.unpersist()
   }
 
+  /** The SET-column contract of every in-place update ([[update]],
+    * [[updateVectored]], [[mergeInto]]): each column exists and is not
+    * a partition (rows must not move partitions), PRIMARY KEY, IDENTITY
+    * or UNIQUE column. Messages lead with `op`.
+    */
+  private def requireUpdatable(op: String, name: String,
+      cols: Iterable[String]): Unit = {
+    val spec = specsNow(name)
+    cols.foreach { c =>
+      require(tables(name).fieldNames.contains(c), s"$op $name: no column $c")
+      require(!partitioning(name).contains(c),
+        s"$op $name: partition column $c is not updatable " +
+          "(rows must not move partitions)")
+      require(!spec.primaryKey.contains(c),
+        s"$op $name: PRIMARY KEY column $c is not updatable " +
+          "(a SET could mint a duplicate key — delete + insert instead)")
+      require(!spec.identity.exists(_.column == c),
+        s"$op $name: IDENTITY column $c is engine-assigned and immutable")
+      require(!spec.unique.exists(_.contains(c)),
+        s"$op $name: UNIQUE column $c is not updatable " +
+          "(a SET could mint a duplicate — delete + insert instead)")
+    }
+  }
+
   /** Row-level UPDATE (copy-on-write): for rows where `cond` is TRUE,
     * each column in `set` is replaced by its expression (evaluated
     * against the OLD row, so `set("rev" -> col("rev") + 1)` works);
@@ -5813,22 +5544,7 @@ class Warehouse(spark: SparkSession, dir: String,
       set: Map[String, org.apache.spark.sql.Column]): Long = {
     import org.apache.spark.sql.functions.{coalesce, col, lit, when}
     val schema = tables(name)
-    val parts = partitioning(name)
-    set.keys.foreach { c =>
-      require(schema.fieldNames.contains(c), s"update $name: no column $c")
-      require(!parts.contains(c),
-        s"update $name: partition column $c is not updatable " +
-          "(rows must not move partitions)")
-      require(!specsNow(name).primaryKey.contains(c),
-        s"update $name: PRIMARY KEY column $c is not updatable " +
-          "(a SET could mint a duplicate key — delete + insert instead)")
-      require(!specsNow(name).identity.exists(_.column == c),
-        s"update $name: IDENTITY column $c is engine-assigned and " +
-          "immutable")
-      require(!specsNow(name).unique.exists(_.contains(c)),
-        s"update $name: UNIQUE column $c is not updatable " +
-          "(a SET could mint a duplicate — delete + insert instead)")
-    }
+    requireUpdatable("update", name, set.keys)
     val (v, entries) = loadLatest(name)
     require(v > 0L, s"update $name: table not bootstrapped")
     val replaced = touchedFiles(name, entries, _.where(cond))
@@ -5898,14 +5614,6 @@ class Warehouse(spark: SparkSession, dir: String,
     registerViews(prefix)
   }
 
-  /** RESTORE (rollback): make manifest `version`'s file list the new
-    * HEAD, as a new commit — history is never rewritten (the Delta
-    * RESTORE shape), so the rolled-back-over states stay time-travel
-    * readable until vacuum's retention passes them. Requires the
-    * target version's files to still exist (retainReplaced retention,
-    * same rule as [[readVersion]]); files unique to the abandoned head
-    * stay on disk for vacuum — restore never deletes anything.
-    */
   /** The EXACT widening lattice — only upcasts Spark's parquet readers
     * perform natively when the requested schema is wider than the file
     * (verified: int32 files read as BIGINT/DOUBLE, float as DOUBLE),
@@ -6137,6 +5845,14 @@ class Warehouse(spark: SparkSession, dir: String,
         "since (repartitionTable) — pre-migration snapshots no longer " +
         "parse under the current directory layout")
 
+  /** RESTORE (rollback): make manifest `version`'s file list the new
+    * HEAD, as a new commit — history is never rewritten (the Delta
+    * RESTORE shape), so the rolled-back-over states stay time-travel
+    * readable until vacuum's retention passes them. Requires the
+    * target version's files to still exist (retainReplaced retention,
+    * same rule as [[readVersion]]); files unique to the abandoned head
+    * stay on disk for vacuum — restore never deletes anything.
+    */
   def restore(name: String, version: Long): Unit = {
     require(versions(name).contains(version),
       s"$name has no manifest v$version to restore")
@@ -6195,17 +5911,6 @@ class Warehouse(spark: SparkSession, dir: String,
     }
   }
 
-  /** SCHEMA EVOLUTION: append a new column to `name`'s schema. The data
-    * files are untouched — parquet reads fill a requested-but-absent
-    * column with nulls, so existing rows surface the new column as NULL
-    * and subsequent appends/merges carry real values. The field must be
-    * nullable for exactly that reason. The evolved spec is persisted to
-    * `_meta/` (atomic publish), so [[Warehouse.open]] and the
-    * `graft-warehouse` read formats see it immediately; time-travel
-    * reads of PRE-evolution versions also surface the column (as null
-    * for files that predate it) — schema is table-level, not
-    * per-version, the minimal-evolution trade.
-    */
   /** DDL: (re)declare the table's skip/stat index columns and BACKFILL
     * the per-file sidecars for live files that predate the declaration
     * — without this, adding [[TableSpec.bloomColumns]] /
@@ -6258,6 +5963,17 @@ class Warehouse(spark: SparkSession, dir: String,
     missing.size.toLong
   }
 
+  /** SCHEMA EVOLUTION: append a new column to `name`'s schema. The data
+    * files are untouched — parquet reads fill a requested-but-absent
+    * column with nulls, so existing rows surface the new column as NULL
+    * and subsequent appends/merges carry real values. The field must be
+    * nullable for exactly that reason. The evolved spec is persisted to
+    * `_meta/` (atomic publish), so [[Warehouse.open]] and the
+    * `graft-warehouse` read formats see it immediately; time-travel
+    * reads of PRE-evolution versions also surface the column (as null
+    * for files that predate it) — schema is table-level, not
+    * per-version, the minimal-evolution trade.
+    */
   def addColumn(name: String, field: StructField): Unit = {
     val spec = specsNow.getOrElse(name,
       throw new IllegalArgumentException(s"addColumn: no table $name"))
@@ -7620,15 +7336,17 @@ class Warehouse(spark: SparkSession, dir: String,
     * versions stay [[readVersion]]-readable after the vacuum. Deleted:
     * data files referenced by no kept manifest (crash leftovers,
     * replaced files past retention), stray staging trees, and the
-    * manifests older than the horizon. Single-writer contract: must not
-    * run concurrently with a mutation.
+    * manifests older than the horizon, then the transaction markers
+    * naming this table that no member's manifest carries any more
+    * ([[reclaimTxnMarkers]]). Single-writer contract: must not run
+    * concurrently with a mutation.
     *
-    * @return number of orphan data files deleted
-    */
-  /** @param dryRun report WITHOUT deleting: returns the count of data
+    * @param dryRun report WITHOUT deleting: returns the count of data
     *   files retention would collect, touches nothing (no stale-txn
-    *   aborts, no checkpoint materialization, no sidecar cleanup) —
-    *   every pending transaction is conservatively treated as live.
+    *   aborts, no checkpoint materialization, no sidecar cleanup, no
+    *   marker reclamation) — every pending transaction is
+    *   conservatively treated as live.
+    * @return number of orphan data files deleted
     */
   def vacuum(name: String, keepManifests: Int = 2,
       dryRun: Boolean = false): Long = {
@@ -7722,7 +7440,32 @@ class Warehouse(spark: SparkSession, dir: String,
       fs.delete(new Path(manifestDir(name), f"v$mv%012d.mfd"), false)
       fs.delete(mfpPath(name, mv), true) // columnar sidecar dies with it
     }
+    reclaimTxnMarkers(name)
     n
+  }
+
+  /** Delete the transaction markers naming `name` that no member
+    * table's on-disk manifest carries as `mtxn` any more — no version
+    * consults them again. Markers are listed BEFORE any member's
+    * manifests are read: a marker publishes only after every one of its
+    * members' manifests did, so an in-flight transaction's manifests
+    * are always seen (temp files of an in-flight publish start with
+    * `.` and are skipped).
+    */
+  private def reclaimTxnMarkers(name: String): Unit = {
+    val fs = fileSystem
+    if (!fs.exists(txnDir)) return
+    val markers = fs.listStatus(txnDir).toSeq.map(_.getPath)
+      .filterNot(_.getName.startsWith(".")).map { p =>
+        val in = fs.open(p)
+        val body = try new String(in.readAllBytes(),
+          java.nio.charset.StandardCharsets.UTF_8) finally in.close()
+        p -> body.split('\n').map(_.takeWhile(_ != '\t')).toSet
+      }.filter(_._2(name))
+    val carried = markers.flatMap(_._2).distinct.flatMap(t =>
+      rawVersions(t).flatMap(commitMeta(t, _).get("mtxn"))).toSet
+    markers.foreach { case (p, _) =>
+      if (!carried(p.getName)) fs.delete(p, false) }
   }
 
   /** Doomed-sidecar count at or above which [[sweepSidecars]]' deletes
@@ -8085,7 +7828,31 @@ object Warehouse {
       s"${sha1(rel)}-$column.bf"
     def ndvName(rel: String, column: String): String =
       s"${sha1(rel)}-$column.hll"
+    /** `rel`'s NDV sketch bytes for `column` under `ndvDir`; null when
+      * the sidecar is missing (readers withhold the column). */
+    def readNdv(fs: FileSystem, ndvDir: String,
+        rel: String, column: String): Array[Byte] = {
+      val p = new Path(ndvDir, ndvName(rel, column))
+      if (!fs.exists(p)) null
+      else {
+        val in = fs.open(p)
+        try in.readAllBytes() finally in.close()
+      }
+    }
   }
+
+  /** One columnar-manifest row ([[Warehouse!.columnarSchema]]): the
+    * fixed columns, `e`'s stat pair per `statCols` column (nulls where
+    * it has none), then `sketches`. The checkpoint write and the delta
+    * overlay of [[Warehouse!.entriesRelationAt]] both build rows here.
+    */
+  private[graft] def columnarRow(e: FileEntry, statCols: Seq[String],
+      sketches: Seq[Array[Byte]]): Row =
+    Row.fromSeq(Seq(e.rel, e.bytes, e.rows, e.dv, e.dvRows) ++
+      statCols.flatMap(c => e.stats.get(c) match {
+        case Some((lo, hi)) => Seq[Any](lo, hi)
+        case None => Seq[Any](null, null)
+      }) ++ sketches)
 
   // ------------------------------------------------------------------
   // JVM-wide parsed-snapshot caches. A CONFIRMED manifest version is
@@ -8353,34 +8120,6 @@ object Warehouse {
     s"${e.rel}\t${e.bytes}\t$st\t${e.rows}\t${e.dv}\t${e.dvRows}"
   }
 
-  /** One managed table's layout.
-    *
-    * @param bloomColumns columns that get a per-file BLOOM FILTER
-    *   sidecar at write time (`_bloomidx/`), enabling
-    *   [[Warehouse!.readPoint]] to SKIP files for equality lookups on
-    *   high-cardinality keys whose min/max ranges overlap every file —
-    *   the case footer [[statColumns]] can never prune (and the only
-    *   skipping story for STRING keys, which footer long-stats can't
-    *   encode at all). Sidecar size ≈ 1.2 · items · ln(1/fpp) bits per
-    *   file per column — the Delta bloom-index trade — where items is
-    *   the largest row count among the files one write adds, capped by
-    *   `bloomExpectedItems`, and fpp is half of `bloomFpp`, which
-    *   bounds each file's false-positive rate.
-    * @param primaryKey ENFORCED primary key (the reference's Postgres
-    *   `PRIMARY KEY`, `script.py:78-82`): every row-adding write
-    *   rejects NULL keys, batch-internal duplicates and live-row
-    *   collisions atomically (nothing commits —
-    *   [[Warehouse.PrimaryKeyViolation]]); merge-family ops must key
-    *   on it exactly; UPDATE SET of a key column is banned. The
-    *   collision probe is a semi-join over the current snapshot —
-    *   declare `primaryKey.head` in [[statColumns]] (range skipping)
-    *   or [[bloomColumns]] (equality skipping) so the probe reads only
-    *   files whose key range can overlap the batch; without either it
-    *   scans. [[scdMerge]] tables version their keys by design — give
-    *   them no `primaryKey`, or exactly (keys..., validFrom) (the
-    *   version-discriminated identity; scdMerge rejects anything
-    *   else up front).
-    */
   /** Thrown when a write would violate a declared CHECK constraint; the
     * commit never happens (the staged files are garbage the next vacuum
     * sweeps).
@@ -8471,14 +8210,6 @@ object Warehouse {
       extends RuntimeException(
         s"UNIQUE (${cols.mkString(", ")}) on $table violated: $reason")
 
-  /** Per-bucket representative longs for [[numBuckets]]=n: `reps(b)` is
-    * the smallest non-negative long with `pmod(murmur3(reps(b)), n) ==
-    * b` — evaluated through Catalyst's own [[Murmur3Hash]] so driver
-    * and executor agree bit-for-bit. Repartitioning a write on
-    * `reps(bucketId)` places every row in partition `bucketId` exactly,
-    * through a shuffle no optimizer rule can elide (see writeBatch).
-    * Coupon-collector search: ~n·ln(n) hashes, cached per n.
-    */
   /** StructField.metadata key pinning a column's PHYSICAL (parquet)
     * name once a rename/drop made it diverge from the logical name.
     */
@@ -8493,6 +8224,15 @@ object Warehouse {
 
   private val bucketReps =
     new java.util.concurrent.ConcurrentHashMap[Int, Array[Long]]()
+
+  /** Per-bucket representative longs for [[numBuckets]]=n: `reps(b)` is
+    * the smallest non-negative long with `pmod(murmur3(reps(b)), n) ==
+    * b` — evaluated through Catalyst's own [[Murmur3Hash]] so driver
+    * and executor agree bit-for-bit. Repartitioning a write on
+    * `reps(bucketId)` places every row in partition `bucketId` exactly,
+    * through a shuffle no optimizer rule can elide (see writeBatch).
+    * Coupon-collector search: ~n·ln(n) hashes, cached per n.
+    */
   private[pipeline] def bucketRepresentatives(n: Int): Array[Long] =
     bucketReps.computeIfAbsent(n, _ => {
       import org.apache.spark.sql.catalyst.expressions.{Literal, Murmur3Hash}
@@ -8512,7 +8252,35 @@ object Warehouse {
       reps
     })
 
-  /** @param bucketBy with [[numBuckets]], the table's BUCKETED layout
+  /** One managed table's layout.
+    *
+    * @param bloomColumns columns that get a per-file BLOOM FILTER
+    *   sidecar at write time (`_bloomidx/`), enabling
+    *   [[Warehouse!.readPoint]] to SKIP files for equality lookups on
+    *   high-cardinality keys whose min/max ranges overlap every file —
+    *   the case footer [[statColumns]] can never prune (and the only
+    *   skipping story for STRING keys, which footer long-stats can't
+    *   encode at all). Sidecar size ≈ 1.2 · items · ln(1/fpp) bits per
+    *   file per column — the Delta bloom-index trade — where items is
+    *   the largest row count among the files one write adds, capped by
+    *   `bloomExpectedItems`, and fpp is half of `bloomFpp`, which
+    *   bounds each file's false-positive rate.
+    * @param primaryKey ENFORCED primary key (the reference's Postgres
+    *   `PRIMARY KEY`, `script.py:78-82`): every row-adding write
+    *   rejects NULL keys, batch-internal duplicates and live-row
+    *   collisions atomically (nothing commits —
+    *   [[Warehouse.PrimaryKeyViolation]]); merge-family ops must key
+    *   on it exactly; UPDATE SET of a key column is banned. The
+    *   collision probe is a semi-join over the current snapshot —
+    *   declare `primaryKey.head` in [[statColumns]] (range skipping)
+    *   or [[bloomColumns]] (equality skipping) so the probe reads only
+    *   files whose key range can overlap the batch; without either it
+    *   scans. [[scdMerge]] tables version their keys by design — give
+    *   them no `primaryKey`, or exactly (keys..., validFrom) (the
+    *   version-discriminated identity; scdMerge rejects anything
+    *   else up front).
+    *
+    * @param bucketBy with [[numBuckets]], the table's BUCKETED layout
     *   (Hive/Spark `CLUSTERED BY ... INTO n BUCKETS`): every write
     *   hash-places rows into `pmod(murmur3(bucketBy), numBuckets)`
     *   file groups (Spark's own `HashPartitioning` id expression, so
@@ -8521,8 +8289,8 @@ object Warehouse {
     *   the bucket key then elide their shuffle exchanges entirely.
     *   At warehouse scale this is the difference between a fact-fact
     *   join that moves the whole table and one that moves nothing.
-    */
-  /** @param retiredPhysical PHYSICAL column names that once backed a
+    *
+    * @param retiredPhysical PHYSICAL column names that once backed a
     *   since-dropped logical column — a later addColumn of the same
     *   logical name must map to a FRESH physical name, or stale values
     *   from pre-drop files would resurface (see [[Warehouse!.dropColumn]]).

@@ -913,4 +913,58 @@ class ManifestScaleSpec extends SparkSpec {
       LazyManifestFileIndex.dirMemo.clear()
     }
   }
+
+  test("a stat column only the delta upserts carry reaches every " +
+    "distributed fold: metaMinMax, metaPartitionStats, readRange " +
+    "survivors and t.files equal the eager fold") {
+    val dir = Files.createTempDirectory("graft-mstat-").toString
+    val schema3 = StructType(Seq(StructField("k", LongType),
+      StructField("j", LongType), StructField("s", StringType)))
+    def open(stats: Seq[String]): Warehouse = {
+      val w = new Warehouse(spark, dir, checkpointInterval = 4,
+        specs = Map("t" -> Warehouse.TableSpec(schema3,
+          partitionBy = Seq("s"), statColumns = stats)))
+      w.columnarThreshold = 1L
+      w
+    }
+    val wh = open(Seq("k"))
+    wh.bootstrap()
+    (1 to 3).foreach { i =>
+      wh.append("t", Seq((i.toLong, i * 10L, s"g${i % 2}"))
+        .toDF("k", "j", "s")) }
+    // the v4 checkpoint's .mfp carries no `j` stat columns at all
+    assert(Files.exists(
+      Paths.get(dir, "t", "_manifests", "v000000000004.mfp")))
+    // a later spec also tracks `j`: only the v5, v6 delta upserts
+    // carry it — one in a fresh slice, one beside `j`-less files
+    val wh2 = open(Seq("k", "j"))
+    wh2.append("t", Seq((4L, 40L, "new")).toDF("k", "j", "s"))
+    wh2.append("t", Seq((5L, 50L, "g1")).toDF("k", "j", "s"))
+    val v = wh2.versions("t").max
+    assert(v === 6L)
+    graft.sql.WarehouseSql.register(spark, wh2, "mstat_")
+    def answers() = (
+      Seq("k", "j").map(c => wh2.metaMinMax("t", c)),
+      wh2.metaPartitionStats("t", Seq("s")).map(_.toSet),
+      wh2.readRange("t", "j", 45L, 99L).inputFiles.toSet)
+    Warehouse.invalidateCached(s"$dir#t#")
+    val prunes = Warehouse.columnarPrunes.get()
+    val cold = answers()
+    val files = spark.sql("SELECT * FROM mstat_t.files").collect()
+      .map(_.mkString("|")).toSet
+    assert(Warehouse.columnarPrunes.get() > prunes)
+    assert(Warehouse.snapshots.get(wh2.currentCacheKey("t", v)).isEmpty,
+      "the cold answers must not have folded the list on the driver")
+    val entries = wh2.loadAt("t", v) // the eager fold serves from here
+    val eager = answers()
+    assert(cold === eager)
+    assert(files === entries.map(e => Seq(e.rel, e.rel.split('/').init.last,
+      e.bytes, e.rows, e.dvRows).mkString("|")).toSet)
+    // the upsert-only stat is covered where only upserts live, and
+    // prunes the j = 40 upsert while every `j`-less file survives
+    assert(cold._1 === Seq(Some((1L, 5L)), None))
+    assert(cold._2.get.exists { case (vals, _, st) =>
+      vals == Seq("new") && st.get("j").contains((40L, 40L)) })
+    assert(cold._3.size === 4 && !cold._3.exists(_.contains("s=new")))
+  }
 }

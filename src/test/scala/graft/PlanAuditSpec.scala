@@ -327,4 +327,57 @@ class PlanAuditSpec extends SparkSpec {
       "embedded checkpoint sketches must serve NDV without the " +
         "sidecar directory")
   }
+
+  test("a COLD lazy plan over a columnar checkpoint WITH deltas above " +
+      "it (appends and a delete) publishes exactly the eager " +
+      "statsRelation's NDV and min/max for the same version") {
+    import org.apache.spark.sql.functions._
+    import org.apache.spark.sql.types._
+    import org.apache.spark.sql.execution.datasources.{
+      HadoopFsRelation, LogicalRelation}
+    val whDir = graft.util.Scratch.dir("graft-lazydelta-").toString
+    val wh = new graft.pipeline.Warehouse(spark, s"$whDir/wh",
+      checkpointInterval = 4, specs = Map(
+        "fact" -> graft.pipeline.Warehouse.TableSpec(StructType(Seq(
+            StructField("k1", LongType), StructField("k2", LongType),
+            StructField("v", DoubleType))),
+          statColumns = Seq("k1", "k2"), ndvColumns = Seq("k1", "k2"))))
+    wh.columnarThreshold = 1L
+    wh.bootstrap()
+    // v2..v6: batch i carries k2 ∈ [i, i+9]; v4 is the checkpoint whose
+    // .mfp holds batches 0-2, v5/v6 are append deltas above it
+    (0 until 5).foreach { i =>
+      wh.append("fact", spark.range(i * 1000L, (i + 1) * 1000L).toDF("id")
+        .select((col("id") % (20 + i)).as("k1"),
+          (col("id") % 10 + i).as("k2"), col("id").cast("double").as("v")))
+    }
+    // v7: a copy-on-write delete of batch 0's k2 = 0 rows — a delta
+    // remove of checkpoint entries plus their rewritten re-adds
+    wh.delete("fact", col("k2") === 0L)
+    val v = wh.versions("fact").max
+    assert(v === 7L)
+    assert(java.nio.file.Files.exists(java.nio.file.Paths.get(
+      s"$whDir/wh", "fact", "_manifests", "v000000000004.mfp")))
+    def planned(): (Boolean, Map[String, (Option[BigInt], Option[Any],
+        Option[Any])]) = {
+      val lr = wh.read("fact").queryExecution.optimizedPlan.collectFirst {
+        case l: LogicalRelation => l
+      }.get
+      (lr.relation.asInstanceOf[HadoopFsRelation].location
+        .isInstanceOf[graft.pipeline.LazyManifestFileIndex],
+        lr.stats.attributeStats.map { case (a, st) =>
+          a.name -> ((st.distinctCount, st.min, st.max)) }.toMap)
+    }
+    graft.pipeline.Warehouse.invalidateCached(s"$whDir/wh#fact#")
+    val (coldLazy, cold) = planned()
+    assert(coldLazy, "the cold fact must plan through the lazy index")
+    assert(graft.pipeline.Warehouse.snapshots.get(
+      wh.currentCacheKey("fact", v)).isEmpty)
+    wh.loadAt("fact", v) // the eager fold serves the next plan
+    val (eagerLazy, eager) = planned()
+    assert(!eagerLazy, "a cached snapshot must plan eager")
+    assert(cold.keySet === Set("k1", "k2"))
+    assert(cold("k2")._2 === Some(1L) && cold("k2")._3 === Some(13L))
+    assert(cold === eager)
+  }
 }

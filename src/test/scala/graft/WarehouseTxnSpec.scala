@@ -121,6 +121,45 @@ class WarehouseTxnSpec extends SparkSpec {
     }
   }
 
+  test("vacuum reclaims a txn marker only once no member retains a " +
+      "manifest carrying its id; retained versions read the same") {
+    val (wh, dir) = freshPair()
+    wh.appendAll(Seq(
+      ("dim_satellites", dimBatch(2), 0L),
+      ("fact_telemetry", factBatch(2, 2), 0L)))
+    val txnDir = java.nio.file.Paths.get(dir, "_meta", "_txn")
+    def markers(): Set[String] = {
+      val ls = Files.list(txnDir)
+      try ls.toArray.map(_.toString).toSet finally ls.close()
+    }
+    val marker = markers()
+    assert(marker.size === 1)
+    val tables = Seq("dim_satellites", "fact_telemetry")
+    def retained(): Map[(String, Long), Set[String]] = tables.flatMap { t =>
+      wh.versions(t).takeRight(2).map(v =>
+        (t, v) -> wh.readVersion(t, v).collect().map(_.toString).toSet)
+    }.toMap
+    // the dim moves past the txn version; the fact still holds it
+    wh.append("dim_satellites", dimBatch(3))
+    wh.append("dim_satellites", dimBatch(4))
+    val before1 = retained()
+    wh.vacuum("dim_satellites")
+    assert(markers() === marker,
+      "the fact's retained txn manifest still needs the marker")
+    assert(retained() === before1)
+    assert(Warehouse.open(spark, dir).read("fact_telemetry").count() === 2)
+    // once the fact is vacuumed past it too, nothing carries the id
+    wh.append("fact_telemetry", factBatch(3, 3))
+    wh.append("fact_telemetry", factBatch(4, 4))
+    val before2 = retained()
+    wh.vacuum("fact_telemetry")
+    assert(markers().isEmpty)
+    assert(retained() === before2)
+    val re = Warehouse.open(spark, dir)
+    assert(re.read("dim_satellites").count() === 4)
+    assert(re.read("fact_telemetry").count() === 4)
+  }
+
   test("pipeline EP1+EP2 crash between the dim and fact writes: " +
       "reopened warehouse shows NEITHER; re-run completes both") {
     val dirA = Files.createTempDirectory("graft-txn-p1").toString
